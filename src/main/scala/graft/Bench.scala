@@ -26,17 +26,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // back-stop for the explicit between-query GC below: the
-      // ContextCleaner's own timer defaults to 30 min — longer than an
-      // entire bench run, i.e. never
-      .config("spark.cleaner.periodicGC.interval", "3min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val metrics = new MetricsListener
     spark.sparkContext.addSparkListener(metrics)
     warmStandingState(spark, sfDir)
@@ -44,96 +34,92 @@ object Bench {
   }
 
   /** Pre-sweep warm-up: JVM/codegen/parquet-footer init plus every
-    * standing `ensure*` build, paid once and not billed to whichever
-    * query the Map happens to iterate first. Shared with
-    * [[ScopedProbe]] so a per-execution adjudication run is
-    * index-warm exactly like a bench sweep. */
+    * standing build, paid once and not billed to whichever query the
+    * Map happens to iterate first. Shared with [[ScopedProbe]] and
+    * [[PlanDump]] so a per-execution adjudication run is index-warm
+    * exactly like a bench sweep. A build that throws fails the run,
+    * naming the build: a silently missing index would otherwise be
+    * rebuilt inside (and billed to) the first timed query. */
   def warmStandingState(spark: SparkSession, sfDir: String): Unit = {
-    try {
-      spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-      // Floor-probe warm-up belongs HERE, not just before the first
-      // measured batch: the probe's generated class is compiled by the
-      // same C2 queue the standing-table builds flood, so warm
-      // executions taken immediately before measurement can all ride
-      // the ramp (r16: floors[0] = 0.40 — 3× steady — despite 8
-      // back-to-back warm executions). Enqueue the probe FIRST and let
-      // the minutes of standing builds absorb its compile, so the
-      // pre-sweep measureFloor(8) is a warm re-touch, not the ramp.
-      (1 to 6).foreach(_ => floorProbeOnce(spark, sfDir))
-      SparkEntry.queries.headOption.foreach(_._2(spark, sfDir).count())
-    } catch { case _: Throwable => () }
-    // offline index build (IVF "add to index" step): done once per
-    // corpus, outside query timing — simsearch_ivf then times what a
-    // deployment serves, the partition-pruned probe
-    try ext.Similarity.ensureIvfIndex(spark, sfDir)
-    catch { case _: Throwable => () }
-    // same treatment for the bucketed PageRank adjacency: standing graph
-    // state, built once per corpus, amortized over every iteration sweep
-    try rel.Graph.ensureAdjacency(spark, sfDir): Unit
-    catch { case _: Throwable => () }
-    // and the bipartite HITS adjacency (both orientations, bucketed)
-    try rel.Graph.ensureHitsAdjacency(spark, sfDir): Unit
-    catch { case _: Throwable => () }
-    // and the weighted co-purchase adjacency (same standing-state story)
-    try rel.Graph.ensureWeightedAdjacency(spark, sfDir): Unit
-    catch { case _: Throwable => () }
-    // and the Bachrach MIPS index: same standing-state story — the
-    // augmented-cell partitioned layout is built once per corpus,
-    // simsearch_mips_indexed then times only the pruned probe
-    try ext.Similarity.ensureMipsIndex(spark, sfDir): Unit
-    catch { case _: Throwable => () }
-    // and the NSW kNN graph: standing ANN index like the IVF build —
-    // simsearch_graph then times the greedy walk a deployment serves
-    try ext.Similarity.ensureKnnGraph(spark, sfDir): Unit
-    catch { case _: Throwable => () }
-    // and its standing-side split for the incremental-insert path
-    try ext.Similarity.ensureStandingKnnGraph(spark, sfDir): Unit
-    catch { case _: Throwable => () }
-    // and the cell-partitioned serving ENTRY index the walks probe
-    // (without this, the first graph-ANN serving call pays the build)
-    try ext.Similarity.ensureEntryIndex(spark, sfDir): Unit
-    catch { case _: Throwable => () }
-    // and the bucketed fact-join twins (layout_bucketed's standing
-    // layout: the write-time shuffle is corpus build, not query work)
-    try core.ZOrder.ensureBucketedFacts(spark, sfDir): Unit
-    catch { case _: Throwable => () }
-    // and the inverted text index (the incremental-merge build both
-    // indexed search queries read): in a fresh environment it otherwise
-    // builds inside the FIRST timed attempt — the r12 driver artifact
-    // put the build's 4 MB of shuffle on text_search_indexed (committed
-    // map: 0.15 MB), corrupting the round-over-round shuffle
-    // adjudication signal. (The full-rebuild artifact is spec-only —
-    // no declared query reads it, so it is not warmed.)
-    try ext.Search.ensureTextIndexIncremental(spark, sfDir): Unit
-    catch { case _: Throwable => () }
-    // and the standing shingle/fingerprint relation every "shingle the
-    // corpus" chain (containment, all-pairs, KMV) now reads: one
-    // tokenize+hash pass per corpus snapshot, not one per query
-    try ext.Dedup.shingleTable(spark, sfDir).count(): Unit
-    catch { case _: Throwable => () }
-    // and the standing tokenizer relations (vocab + segmentation is a
-    // pure function of the corpus snapshot): wordTokenTable feeds
-    // tokenize/bpe/spell, docTokenTable feeds pack/mixture/fertility —
-    // training the vocabulary is corpus build, not query work.
-    // docTokenTable's build ensures wordTokenTable first, so one call
-    // warms both; the export pipeline's kept-corpus twin is a different
-    // relation by design (vocab from the kept subset) and warms apart.
-    try ext.Tokenizer.docTokenTable(spark, sfDir).count(): Unit
-    catch { case _: Throwable => () }
-    try ext.Pipeline.ensureExportTokenTable(spark, sfDir)
-    catch { case _: Throwable => () }
-    // and the mirrored co-purchase backbone (triangles / communities /
-    // BFS / eccentricity all read it; same fresh-env misattribution —
-    // the judge's scoped run put 16.7 MB on graph_eccentricity)
-    try rel.Graph.ensureBackbone(spark, sfDir): Unit
-    catch { case _: Throwable => () }
-    // and for the synthetic media corpora: PNG/JPEG/WAV/AVI *encoding*
-    // is corpus creation (write-once, memoized), not query work — the
-    // media queries then time decode + fingerprint + join over stored
-    // bytes, which is what a deployment runs
-    try ext.Multimodal.ensureCorpora(spark, sfDir)
-    catch { case _: Throwable => () }
+    spark.read.parquet(s"$sfDir/lineitem.parquet").count()
+    // Floor-probe warm-up belongs HERE, not just before the first
+    // measured batch: the probe's generated class is compiled by the
+    // same C2 queue the standing-table builds flood, so warm
+    // executions taken immediately before measurement can all ride
+    // the ramp (r16: floors[0] = 0.40 — 3× steady — despite 8
+    // back-to-back warm executions). Enqueue the probe FIRST and let
+    // the minutes of standing builds absorb its compile, so the
+    // pre-sweep measureFloor(8) is a warm re-touch, not the ramp.
+    (1 to 6).foreach(_ => floorProbeOnce(spark, sfDir))
+    SparkEntry.queries.headOption.foreach(_._2(spark, sfDir).count())
+    standingBuilds(spark, sfDir).foreach { case (name, build) =>
+      try build()
+      catch { case e: Throwable =>
+        throw new IllegalStateException(s"standing build '$name' failed", e)
+      }
+    }
   }
+
+  /** Every standing relation a corpus snapshot carries, in build order:
+    * built once per corpus outside query timing, so declared queries time
+    * what a deployment serves. Shared with [[WarmupRehearsal]], which
+    * times each entry. */
+  private[graft] def standingBuilds(spark: SparkSession,
+      sfDir: String): Seq[(String, () => Unit)] = Seq(
+    // offline IVF "add to index" step: simsearch_ivf times the
+    // partition-pruned probe
+    "ivf_index" -> (() => ext.Similarity.ensureIvfIndex(spark, sfDir)),
+    // bucketed PageRank adjacency, amortized over every iteration sweep
+    "pagerank_adjacency" ->
+      (() => rel.Graph.ensureAdjacency(spark, sfDir): Unit),
+    // bipartite HITS adjacency (both orientations, bucketed)
+    "hits_adjacency" ->
+      (() => rel.Graph.ensureHitsAdjacency(spark, sfDir): Unit),
+    // weighted co-purchase adjacency
+    "weighted_adjacency" ->
+      (() => rel.Graph.ensureWeightedAdjacency(spark, sfDir): Unit),
+    // Bachrach MIPS augmented-cell layout: simsearch_mips_indexed times
+    // only the pruned probe
+    "mips_index" ->
+      (() => ext.Similarity.ensureMipsIndex(spark, sfDir): Unit),
+    // NSW kNN graph: simsearch_graph times the greedy walk
+    "knn_graph" ->
+      (() => ext.Similarity.ensureKnnGraph(spark, sfDir): Unit),
+    // its standing-side split for the incremental-insert path
+    "knn_graph_standing" ->
+      (() => ext.Similarity.ensureStandingKnnGraph(spark, sfDir): Unit),
+    // cell-partitioned serving ENTRY index the walks probe (without it
+    // the first graph-ANN serving call pays the build)
+    "knn_entry_index" ->
+      (() => ext.Similarity.ensureEntryIndex(spark, sfDir): Unit),
+    // bucketed fact-join twins (layout_bucketed's standing layout)
+    "bucketed_facts" ->
+      (() => core.ZOrder.ensureBucketedFacts(spark, sfDir): Unit),
+    // inverted text index both indexed search queries read: unwarmed,
+    // the r12 driver artifact put the build's 4 MB of shuffle on
+    // text_search_indexed (committed map: 0.15 MB). The full-rebuild
+    // artifact is spec-only — no declared query reads it.
+    "text_index_incremental" ->
+      (() => ext.Search.ensureTextIndexIncremental(spark, sfDir): Unit),
+    // standing shingle/fingerprint relation every "shingle the corpus"
+    // chain (containment, all-pairs, KMV) reads
+    "shingle_table" ->
+      (() => ext.Dedup.shingleTable(spark, sfDir).count(): Unit),
+    // tokenizer relations: docTokenTable's build ensures wordTokenTable
+    // first, so one call warms both; the export pipeline's kept-corpus
+    // twin is a different relation by design (vocab from the kept
+    // subset) and warms apart
+    "token_tables" ->
+      (() => ext.Tokenizer.docTokenTable(spark, sfDir).count(): Unit),
+    "export_token_table" ->
+      (() => ext.Pipeline.ensureExportTokenTable(spark, sfDir)),
+    // mirrored co-purchase backbone (triangles / communities / BFS /
+    // eccentricity); unwarmed, the judge's scoped run put 16.7 MB on
+    // graph_eccentricity
+    "backbone" -> (() => rel.Graph.ensureBackbone(spark, sfDir): Unit),
+    // synthetic media corpora: PNG/JPEG/WAV/AVI encoding is corpus
+    // creation; the media queries time decode + fingerprint + join
+    "media_corpora" -> (() => ext.Multimodal.ensureCorpora(spark, sfDir)))
 
   /** One harness-floor probe execution: scan + one shuffle + count over
     * the 5-row region table — the fixed per-query cost at this
@@ -370,14 +356,12 @@ object Bench {
     // instead: twice (r10, r12) a subset map overwrote and then got
     // COMMITTED over the canonical full map, and the commit-time guard
     // (check_bench_local.py) only protects people who remember to run
-    // it — routing the write kills the trap at the source. The full
-    // canonical file is only ever written by a full-coverage sweep.
+    // it — routing the write kills the trap at the source. The
+    // canonical full file is only ever written by a full-coverage sweep,
+    // and a failed write fails the run instead of leaving a stale map.
     val mapFile = benchMapFile(sys.env.contains("SPARK_GRAFT_ONLY"))
-    try {
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(mapFile),
-        (line + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    java.nio.file.Files.write(java.nio.file.Paths.get(mapFile),
+      (line + "\n").getBytes("UTF-8"))
     // LAST line is a complete, compact JSON object: the driver keeps
     // only the final 2000 chars of output, and at 200+ queries the full
     // line above blows that budget (BENCH_r05/r06 recorded parsed:null).

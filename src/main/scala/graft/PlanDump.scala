@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for declared queries to files — the
   * optimization-round evidence trail (plans/r{N}/<query>_{before,after}.txt).
@@ -13,10 +12,11 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.PlanDump <outDir> <suffix> <query1,query2,...>
   * e.g.   runMain graft.PlanDump plans/r17 before graph_scc,assoc_rules
   *
-  * Session geometry matches Bench.main (master local[$SPARK_GRAFT_CPUS],
-  * shuffle partitions = cpus) so the dumped plans are the ones the bench
-  * actually executes; standing state is warmed first so memoized scans
-  * plan against the built tables, not the cold-build path.
+  * Session geometry is Bench's ([[Harness.session]]) so the dumped plans
+  * are the ones the bench actually executes; standing state is warmed
+  * first so memoized scans plan against the built tables, not the
+  * cold-build path. Dumps are normalized (see [[normalize]]), so a
+  * before/after pair of an unchanged plan is byte-identical.
   */
 object PlanDump {
 
@@ -27,23 +27,20 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     Bench.warmStandingState(spark, sfDir)
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query '$name' — see SparkEntry.declaredNames"))
+      // Bench clears the cache after every timed query, so a query never
+      // plans against a relation an earlier one persisted
+      spark.catalog.clearCache()
       val df = fn(spark, sfDir)
       // queryExecution.explainString is exactly what explain("formatted")
       // prints, captured instead of written to stdout
-      val txt = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val txt = normalize(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode))
       Files.write(Paths.get(outDir, s"${name}_$suffix.txt"),
         txt.getBytes("UTF-8"))
       println(s"dumped $name -> $outDir/${name}_$suffix.txt " +
@@ -51,4 +48,17 @@ object PlanDump {
     }
     spark.stop()
   }
+
+  /** The dump with every session-history value replaced by a stable
+    * placeholder — expression ids (`src#2032L`), lambda variable ids
+    * (`lambda x_38`), exchange plan ids, RDD ids and source call sites —
+    * so two dumps of the same plan are byte-equal even when code moved
+    * or a different set of queries ran first in the session. */
+  private[graft] def normalize(plan: String): String =
+    plan
+      .replaceAll("#\\d+", "#N")
+      .replaceAll("(lambda [A-Za-z]+_)\\d+\\b", "$1N")
+      .replaceAll("\\[plan_id=\\d+\\]", "[plan_id=N]")
+      .replaceAll("(\\w*RDD)\\[\\d+\\]", "$1[N]")
+      .replaceAll(" at [\\w$]+\\.scala:\\d+", " at <callsite>")
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import scala.jdk.CollectionConverters._
 
 /** Per-execution wall probe for a single declared query — the
@@ -26,7 +24,7 @@ import scala.jdk.CollectionConverters._
   * the per-execution curve.
   * Standing `ensure*` state is warmed exactly like Bench's pre-sweep
   * block, so run 1 is codegen-cold but index-warm. Session geometry
-  * (SPARK_GRAFT_CPUS default, shuffle partitions) and the timed action
+  * ([[Harness.session]]) and the timed action
   * (`.count()`) are Bench's own, so probe walls are the SAME metric as
   * the sweep medians they adjudicate — a `.collect()` here would add
   * driver-side result serialization and let Catalyst prune differently.
@@ -44,15 +42,7 @@ object ScopedProbe {
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val fn = SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query '$name' — see SparkEntry.declaredNames"))
-    // same default + knobs as Bench.main: with env unset a probe must
-    // reproduce the bench's parallelism, not a different one
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     if (args.length > 3 && args(3) == "stages")
       spark.sparkContext.addSparkListener(new StageProbe)
     Bench.warmStandingState(spark, sfDir)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Day-one standing-state rehearsal (SURVEY §6.2 — the r16 verdict's
   * "one 100×-scale composition rehearsal of the full warm-up"): build
   * EVERY standing relation for a corpus snapshot in one cold session —
@@ -10,10 +8,9 @@ import org.apache.spark.sql.SparkSession
   * so the aggregate story (total wall, peak disk) has a per-build
   * breakdown to StageProbe when something surprises.
   *
-  * The build list mirrors [[Bench.warmStandingState]] exactly (same
-  * `ensure*` calls, same order); a rehearsal that diverged from the
-  * bench's warm-up would measure a different deployment. Run against a
-  * FRESH corpus dir (e.g. a new SynthScale output) so every build is
+  * The build list IS [[Bench.standingBuilds]]: a rehearsal that
+  * diverged from the bench's warm-up would measure a different
+  * deployment. Run against a FRESH corpus dir (e.g. a new SynthScale output) so every build is
   * cold — memoized state is content-keyed, so a re-run measures the
   * memo hit instead.
   *
@@ -43,52 +40,15 @@ object WarmupRehearsal {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: WarmupRehearsal <sfDir> [stages]")
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     if (args.length > 1 && args(1) == "stages")
       spark.sparkContext.addSparkListener(new StageProbe)
     val warehouse = spark.conf.get("spark.sql.warehouse.dir")
       .stripPrefix("file:")
 
-    // the Bench.warmStandingState build list, one timed entry each
-    val builds: Seq[(String, () => Unit)] = Seq(
-      "ivf_index" -> (() => ext.Similarity.ensureIvfIndex(spark, sfDir)),
-      "pagerank_adjacency" ->
-        (() => rel.Graph.ensureAdjacency(spark, sfDir): Unit),
-      "hits_adjacency" ->
-        (() => rel.Graph.ensureHitsAdjacency(spark, sfDir): Unit),
-      "weighted_adjacency" ->
-        (() => rel.Graph.ensureWeightedAdjacency(spark, sfDir): Unit),
-      "mips_index" ->
-        (() => ext.Similarity.ensureMipsIndex(spark, sfDir): Unit),
-      "knn_graph" ->
-        (() => ext.Similarity.ensureKnnGraph(spark, sfDir): Unit),
-      "knn_graph_standing" ->
-        (() => ext.Similarity.ensureStandingKnnGraph(spark, sfDir): Unit),
-      "knn_entry_index" ->
-        (() => ext.Similarity.ensureEntryIndex(spark, sfDir): Unit),
-      "bucketed_facts" ->
-        (() => core.ZOrder.ensureBucketedFacts(spark, sfDir): Unit),
-      "text_index_incremental" ->
-        (() => ext.Search.ensureTextIndexIncremental(spark, sfDir): Unit),
-      "shingle_table" ->
-        (() => ext.Dedup.shingleTable(spark, sfDir).count(): Unit),
-      "token_tables" ->
-        (() => ext.Tokenizer.docTokenTable(spark, sfDir).count(): Unit),
-      "export_token_table" ->
-        (() => ext.Pipeline.ensureExportTokenTable(spark, sfDir)),
-      "backbone" -> (() => rel.Graph.ensureBackbone(spark, sfDir): Unit),
-      "media_corpora" ->
-        (() => ext.Multimodal.ensureCorpora(spark, sfDir)))
-
     var disk0 = stateBytes(sfDir, warehouse)
     val t0 = System.nanoTime()
-    builds.foreach { case (name, build) =>
+    Bench.standingBuilds(spark, sfDir).foreach { case (name, build) =>
       val b0 = System.nanoTime()
       val ok = try { build(); true }
         catch { case e: Throwable =>

@@ -29,7 +29,7 @@ object Tables {
     * so the machine was clean) — the mechanism only pays where map-side
     * CPU, not the scan, owns the stage. CPU-heavy relational chains opt
     * in explicitly at their own sites (e.g. the VAT enrich cascade in
-    * `vat.Summary`) via [[Spread.byKeys]]. */
+    * `vat.Summary`) via [[Width.byKeys]]. */
   private val spreadKey = Map("documents" -> "doc_id")
 
   /** Per-(dir, table, width) verdict of the unsplittable-input check

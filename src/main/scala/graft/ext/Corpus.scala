@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{QueryDef, Tables}
+import graft.core.{QueryDef, Tables, Width}
 
 /** Corpus-hygiene operators for LLM training-data pipelines (SURVEY.md
   * §2.11 L5): train/test contamination, duplicate clustering +
@@ -1459,8 +1459,8 @@ object Corpus {
     val dft = toks.groupBy(col("token")).agg(count(lit(1)).as("df"))
     // spread the anchor-rank window (AQE coalesces its small-byte
     // exchange to one task; per-row rank CPU is what dominates — see
-    // core.Spread)
-    val anchors = graft.core.Spread.byKeys(
+    // core.Width.byKeys)
+    val anchors = Width.byKeys(
         toks.filter(col("doc_id") % qMod === 0).join(dft, Seq("token")),
         col("doc_id"))
       .withColumn("rn", row_number().over(
@@ -1481,7 +1481,7 @@ object Corpus {
         Seq("query_id"))
       .join(fp.select(col("doc_id"), col("h").as("dh")), Seq("doc_id"))
       .filter(col("qh") =!= col("dh"))
-      .transform(graft.core.Spread.byKeys(_, col("query_id")))
+      .transform(Width.byKeys(_, col("query_id")))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("query_id"))
           .orderBy(col("score_fp").desc, col("doc_id"))))

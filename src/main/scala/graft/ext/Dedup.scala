@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{QueryDef, Tables}
+import graft.core.{QueryDef, Tables, Width}
 
 /** Near-duplicate detection at corpus scale (SURVEY.md §2.11 L2):
   * MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine blocking.
@@ -136,40 +136,35 @@ object Dedup {
       .select(col("doc_id"), col("s.sig").as("sig"), col("s.bands").as("bands"))
   }
 
-  /** Spread a candidate-pair relation to the session width before its
+  /** Spread a candidate-pair relation (`Width.byKeys`) before its
     * verify stage. AQE coalesces the candidate exchange by BYTES (a few
     * MB of id pairs → 1 post-shuffle partition) and is blind to the
     * per-row verify CPU behind it — exact `array_intersect` over full
     * shingle sets, measured 1.4 s on ONE task of a 32-core session in
-    * dedup_containment's steady profile. An explicit-width repartition
-    * is REPARTITION_BY_NUM, which AQE never coalesces, so the verify
-    * joins and intersections run at the session width at any scale; the
-    * re-shuffled rows are two ids each, noise next to the verify-join
-    * payloads. */
+    * dedup_containment's steady profile. The re-shuffled rows are two
+    * ids each, noise next to the verify-join payloads. */
   private def spreadForVerify(cands: DataFrame): DataFrame =
-    graft.core.Spread.byKeys(cands, col("doc_a"), col("doc_b"))
+    Width.byKeys(cands, col("doc_a"), col("doc_b"))
 
-  /** Source-byte gate between the two exact-equivalent gram-df shapes
-    * (r17 verdict item #7). Gram frequency is Zipfian, so the two
-    * shapes trade off by scale:
-    *   - BELOW the gate, `count over (partition by g)` — ONE derivation
-    *     of the inventory, one exchange; the hottest gram's occurrence
-    *     list sorts comfortably inside one task (measured: the
-    *     aggregate shape costs +20-27% on dedup_allpairs/containment at
-    *     sf0.1, cold 3-sweep medians).
-    *   - ABOVE it, a partial-aggregating groupBy + SHUFFLED-HASH
-    *     join-back: the window would ship every occurrence of a hot
-    *     gram into ONE task's sorter (AQE skew handling cannot split a
-    *     single key), where the aggregate reduces map-side to
-    *     (g, count) and the join BUILDS on that unique-key side and
-    *     STREAMS the occurrences — no sort, no per-key buffering,
-    *     bounded memory at any document frequency.
+  /** The two exact-equivalent gram-df shapes; callers choose with
+    * `Width.windowFits(inv)` (r17 verdict item #7). Gram frequency is
+    * Zipfian, so the two shapes trade off by scale:
+    *   - `window`: `count over (partition by g)` — ONE derivation of the
+    *     inventory, one exchange; the hottest gram's occurrence list
+    *     sorts comfortably inside one task (measured: the aggregate
+    *     shape costs +20-27% on dedup_allpairs/containment at sf0.1,
+    *     cold 3-sweep medians).
+    *   - otherwise, a partial-aggregating groupBy + SHUFFLED-HASH
+    *     join-back: the aggregate reduces map-side to (g, count) and the
+    *     join BUILDS on that unique-key side and STREAMS the occurrences
+    *     — no sort, no per-key buffering, bounded memory at any
+    *     document frequency.
     * Both attach identical gdf values to identical rows — the oracle
     * result is shape-independent, exactly like Spark's own size-based
-    * broadcast-vs-SMJ choice. */
-  private val GramWindowMaxSourceBytes = 256L << 20
-  private def gramDfAttached(inv: DataFrame): DataFrame =
-    if (graft.core.Spread.sourceBytes(inv) <= GramWindowMaxSourceBytes)
+    * broadcast-vs-SMJ choice (pinned in GramShapeSpec). */
+  private[ext] def gramDfAttached(inv: DataFrame,
+      window: Boolean): DataFrame =
+    if (window)
       inv.withColumn("gdf", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("g"))))
     else {
@@ -225,7 +220,7 @@ object Dedup {
       // width) but flips its origin to REPARTITION_BY_NUM, which AQE
       // cannot coalesce — so the dedup + downstream verify CPU keeps
       // the session width instead of collapsing to one byte-sized task
-      .transform(graft.core.Spread.byKeys(_, col("doc_a"), col("doc_b")))
+      .transform(Width.byKeys(_, col("doc_a"), col("doc_b")))
       .dropDuplicates("doc_a", "doc_b")
       .filter(col("est_jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("est_jaccard"))
@@ -334,13 +329,13 @@ object Dedup {
     val inventory = withSh
       .select(col("doc_id"), explode(col("sh")).as("g"))
     // size-gated gram-df attachment (see gramDfAttached)
-    val invG = gramDfAttached(inventory)
+    val invG = gramDfAttached(inventory, Width.windowFits(inventory))
     // the anchor window ranks the FULL (doc_id, g, gdf) inventory —
     // ~1 M rows that compress below AQE's byte advisory, so the window
     // exchange coalesced to ONE partition and the rank sort ran 1.5 s
-    // on a single core (ScopedProbe stages). Spread pins the window at
-    // the session width (see core.Spread).
-    val anchors = graft.core.Spread.byKeys(invG, col("doc_id"))
+    // on a single core (ScopedProbe stages). Width.byKeys pins the
+    // window's width by source volume.
+    val anchors = Width.byKeys(invG, col("doc_id"))
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy(col("doc_id")).orderBy(col("gdf"), col("g"))))
@@ -482,11 +477,10 @@ object Dedup {
       .persist()
     val inv = sized.select(col("doc_id"), col("n"), explode(col("sh")).as("g"))
     // size-gated gram-df attachment (see gramDfAttached)
-    val invG = gramDfAttached(inv)
+    val invG = gramDfAttached(inv, Width.windowFits(inv))
     // prefix-rank window over the full inventory: same AQE byte-blind
     // single-task shape as the containment anchor window — spread it
-    val prefix = graft.core.Spread.byKeys(invG,
-        col("doc_id"))
+    val prefix = Width.byKeys(invG, col("doc_id"))
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy(col("doc_id")).orderBy(col("gdf"), col("g"))))
@@ -939,7 +933,7 @@ object Dedup {
         (overlap / lit(k.toDouble)).as("est_jaccard"))
       // non-coalescable width for the dedup + downstream verify CPU
       // (see minhashPairsUnordered)
-      .transform(graft.core.Spread.byKeys(_, col("doc_a"), col("doc_b")))
+      .transform(Width.byKeys(_, col("doc_a"), col("doc_b")))
       .dropDuplicates("doc_a", "doc_b")
       .filter(col("est_jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("est_jaccard"))

@@ -1,6 +1,5 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
 
 /** Cold-build wall probe for the banded kNN-graph index (SURVEY §6.2c —
   * the round-14 verdict's "measure the post-fix `ensureKnnGraph` build
@@ -14,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   * FIXED geometry at 30× measured ~2.7e9 candidates here.
   *
   * Usage: runMain graft.ext.KnnBuildProbe <sfDir> [label]
-  * Session geometry matches Bench (SPARK_GRAFT_CPUS, same default).
+  * Session geometry is Bench's ([[graft.Harness.session]]).
   */
 object KnnBuildProbe {
 
@@ -22,13 +21,7 @@ object KnnBuildProbe {
     require(args.nonEmpty, "usage: KnnBuildProbe <sfDir> [label]")
     val dir = args(0)
     val label = if (args.length > 1) args(1) else dir
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     if (args.length > 2 && args(2) == "stages")
       spark.sparkContext.addSparkListener(new graft.StageProbe)
     if (args.length > 2 && args(2) == "explain") {

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * Prints per-query recalls plus the mean/min summary line §6.2c records.
   *
   * Usage: runMain graft.ext.KnnRecallProbe <sfDir> [nQueries] [label]
-  * Session geometry matches Bench (SPARK_GRAFT_CPUS, same default).
+  * Session geometry is Bench's ([[graft.Harness.session]]).
   */
 object KnnRecallProbe {
 
@@ -68,13 +68,7 @@ object KnnRecallProbe {
     val dir = args(0)
     val nQ = if (args.length > 1) args(1).toInt else 20
     val label = if (args.length > 2) args(2) else dir
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     val n = graft.core.Tables.embeddings(spark, dir).count()
     val bits = Similarity.knnBandBits(n)
     val results = measure(spark, dir, nQ)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{QueryDef, Tables}
+import graft.core.{QueryDef, Tables, Width}
 
 /** Approximate-nearest-neighbor search over embedding columns (SURVEY.md
   * §2.11 L3).
@@ -303,11 +303,11 @@ object Similarity {
       nPlanes: Int = 4): DataFrame = {
     val e0 = Tables.embeddings(spark, dir)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    // derive dim from the data (memoized per corpus — corpusMetaOf):
+    // derive dim from the data (memoized per corpus — corpusDimOf):
     // a hardcoded width would trip SignBitLsh's length≠dim ⇒ cell-0
     // contract on a reshaped fixture and silently degrade the probe to
     // brute force; the memo keeps it one job per corpus, not per call
-    val dim = corpusMetaOf(spark, dir)._2
+    val dim = corpusDimOf(spark, dir)
     val e = e0.withColumn("cell", lshCellNative(col("v"), dim, nPlanes))
     val q = e.filter(col("vec_id") === qId)
       .select(col("v").as("q"), col("cell").as("qcell"))
@@ -332,7 +332,7 @@ object Similarity {
     // dim from the data (memoized — see lshTopK): the oracle's
     // range(0, 64) plane derivation then fails VISIBLY on a reshaped
     // fixture instead of this side silently collapsing into cell 0
-    val dim = corpusMetaOf(spark, dir)._2
+    val dim = corpusDimOf(spark, dir)
     val e = e0.withColumn("cell",
       graft.functions.SignBitLsh.sign_bit_lsh_md5(col("v"), dim, nPlanes))
     val q = e.filter(col("vec_id") === qId)
@@ -405,7 +405,7 @@ object Similarity {
       nPlanes: Int = 4): DataFrame = {
     val e0 = Tables.embeddings(spark, dir)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val dim = corpusMetaOf(spark, dir)._2
+    val dim = corpusDimOf(spark, dir)
     val e = e0.withColumn("cell",
       graft.functions.SignBitLsh.sign_bit_lsh_md5(col("v"), dim, nPlanes))
     val queries = e.filter(col("vec_id") % everyN === 0)
@@ -1197,25 +1197,22 @@ object Similarity {
     math.min(10, math.max(2, b))
   }
 
-  /** (row count, vector dim) of a corpus directory, memoized per JVM —
-    * the fixture corpus is immutable (the `Tables.spreadCache`
-    * discipline), and every graph-serving call otherwise re-paid a
-    * footer-count job plus a one-row dim probe for two constants that
-    * never change. Bounded driver metadata: two scalars per corpus. */
-  private val corpusMeta =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Int)]
-  private def corpusMetaOf(spark: SparkSession, dir: String): (Long, Int) =
-    corpusMeta.computeIfAbsent(dir, _ => {
-      val e0 = Tables.embeddings(spark, dir)
-        .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      (e0.count(), e0.select(size(col("v"))).head().getInt(0))
-    })
+  /** Vector dim of a corpus directory, memoized per JVM — the fixture
+    * corpus is immutable (the `Tables.spreadCache` discipline), and
+    * every graph-serving call otherwise re-paid a one-row dim probe for
+    * a constant that never changes. (The row count comes from the
+    * shared footer memo, `Width.rows`.) */
+  private val corpusDim =
+    new java.util.concurrent.ConcurrentHashMap[String, Integer]
+  private def corpusDimOf(spark: SparkSession, dir: String): Int =
+    corpusDim.computeIfAbsent(dir, _ => Tables.embeddings(spark, dir)
+      .select(size(asDouble(col("embedding")))).head().getInt(0)).intValue
 
   /** The band width for a corpus directory — one parquet-footer count
     * of the FULL embeddings table (the standing/batch split must agree
     * on geometry, so both derive b from the unsplit corpus). */
   private def knnBandBitsFor(spark: SparkSession, dir: String): Int =
-    knnBandBits(corpusMetaOf(spark, dir)._1)
+    knnBandBits(Width.rows(spark, dir, "embeddings"))
 
   private def bandKeys(e: DataFrame, bits: Int): DataFrame =
     e.select(col("vec_id"), explode(array((0 until 3).map(r =>
@@ -1240,21 +1237,19 @@ object Similarity {
     // 30× corpus put ~1.6M of them in every distinct/top-k-sort task —
     // starving per-task execution memory into multi-pass spill merges
     // (50M candidates: ~50 GB spill accounting, 1914 task-seconds, the
-    // whole 30× build overhang). Sizing tasks at ~500k candidate rows
-    // spills nothing; small corpora are protected by the max() below —
-    // width never drops under the session width, and it only exceeds it
-    // when the candidate volume genuinely warrants more tasks (AQE does
-    // NOT coalesce explicit-count repartitions, so the guard is the
-    // formula, not the runtime). The explicit hash repartitions SATISFY
+    // whole 30× build overhang). `Width.provision` spills nothing and
+    // protects small corpora: width never drops under the session
+    // width, and it only exceeds it when the candidate volume genuinely
+    // warrants more tasks (AQE does NOT coalesce explicit-count
+    // repartitions, so the guard is the formula, not the runtime). The explicit hash repartitions SATISFY
     // the downstream distribution requirements (distinct clusters on
     // (qid,nid), the window on qid), so no extra exchange is added —
     // the same two exchanges, wider. Known trade: repartition-then-
     // distinct forfeits map-side partial dedup of cross-band duplicate
     // pairs (≤3× inflation through the exchange; measured +2 MB at
     // sf0.1, dwarfed by the spill it prevents at 30×).
-    val session = qSide.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    val width = math.max(session, ((3L * nQ * 250L) / 500000L).toInt)
+    val width = Width.provision(3L * nQ * 250L,
+      Width.sessionWidth(qSide.sparkSession))
     val cand = bandKeys(qSide, bits).as("a")
       .join(bandKeys(nSide, bits).as("b"), Seq("band", "bkey"))
       .filter(col("a.vec_id") =!= col("b.vec_id"))
@@ -1497,7 +1492,8 @@ object Similarity {
     // bits → the standing build's memo key + the insert arm's bands —
     // and the broadcast decision; dim feeds the cell planes): the two
     // per-call metadata jobs the serve used to pay are now one-time
-    val (nCorpus, dim) = corpusMetaOf(spark, dir)
+    val nCorpus = Width.rows(spark, dir, "embeddings")
+    val dim = corpusDimOf(spark, dir)
     val bits = knnBandBits(nCorpus)
     val standingGraph = spark.read.parquet(
       ensureStandingKnnGraphB(spark, dir, graphK, batchMod, batchRem, bits))
@@ -1518,15 +1514,13 @@ object Similarity {
     // partitions on top of the pruned standing scan — per-probe task
     // count ∝ session width with bounded data behind it. The insert
     // relation is 2·graphK·|batch| rows by construction; size its
-    // partition count to that volume (the bandedKnnEdges 500k-rows/task
-    // discipline) so a bench-scale batch checkpoints into ONE partition
-    // and each probe job is a handful of tasks. Upstream (the banded
-    // connect chain) keeps its own width — only the final tiny edge
-    // relation is re-keyed.
-    val insertRows = 2L * graphK * (nCorpus / batchMod + 1L)
-    val insertParts = math.max(1L, math.min(
-      spark.sessionState.conf.numShufflePartitions.toLong,
-      insertRows / 500000L + 1L)).toInt
+    // partition count to that volume (`Width.spread`, capped at the
+    // session width) so a bench-scale batch checkpoints into ONE
+    // partition and each probe job is a handful of tasks. Upstream (the
+    // banded connect chain) keeps its own width — only the final tiny
+    // edge relation is re-keyed.
+    val insertParts = Width.spread(2L * graphK * (nCorpus / batchMod + 1L),
+      Width.sessionWidth(spark))
     val inserted = symWithVectors(
       bandedKnnEdges(withCell(batch, dim, bits),
         withCell(standing, dim, bits), graphK, bits,
@@ -1692,17 +1686,13 @@ object Similarity {
     * — per-probe task count ∝ file count, the r17 serving anti-scale
     * shape. coalesce (no shuffle) merges splits to a width
     * proportional to the graph's row volume (~2·graphK·N rows at
-    * graphK = 8, the 500k-rows/task discipline), capped at the session
-    * width; the src IN-list pushdown sits below the coalesce, so
-    * row-group pruning is untouched. */
+    * graphK = 8; `Width.spread`, capped at the session width); the src
+    * IN-list pushdown sits below the coalesce, so row-group pruning is
+    * untouched. */
   private def serveCoalesced(spark: SparkSession, dir: String,
-      g: DataFrame): DataFrame = {
-    val (nCorpus, _) = corpusMetaOf(spark, dir)
-    val serveParts = math.max(1L, math.min(
-      spark.sessionState.conf.numShufflePartitions.toLong,
-      16L * nCorpus / 500000L + 1L)).toInt
-    g.coalesce(serveParts)
-  }
+      g: DataFrame): DataFrame =
+    g.coalesce(Width.spread(16L * Width.rows(spark, dir, "embeddings"),
+      Width.sessionWidth(spark)))
 
   /** The serving walk over an explicit (src, dst, dvec) graph — shared
     * by the full-graph and incremental declared paths. `dir` feeds the

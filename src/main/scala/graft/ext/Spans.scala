@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{QueryDef, Tables}
+import graft.core.{QueryDef, Tables, Width}
 
 /** Span-level (substring) exact deduplication — the suffix-array-style
   * pass of Lee et al., "Deduplicating Training Data Makes Language
@@ -45,10 +45,6 @@ object Spans {
     * document length.) */
   val W = 8
 
-  /** Source-byte gate between the window and aggregate+join shapes for
-    * per-gram facts — the Dedup.GramWindowMaxSourceBytes rule. */
-  private val SpanWindowMaxSourceBytes = 256L << 20
-
   /** Positional w-grams: one row per gram start position, 1-based.
     * `g` is md5 of the space-joined w tokens — portable across engines.
     * The token array is bound once (Dedup.bind) so projection collapse
@@ -73,30 +69,9 @@ object Spans {
     * merged into the span. Island merge is the classic
     * pos − row_number() grouping per document. */
   def duplicatedSpans(docs: DataFrame, w: Int = W): DataFrame = {
-    // size-gated duplicated-occurrence marking (the Dedup.gramDfAttached
-    // rule): below the gate, ONE count window over a single gram
-    // derivation — the hottest gram sorts comfortably inside one task
-    // and the window shape measures ~35% faster at sf0.1. Above it, a
-    // partial-aggregating count + shuffled-hash semi-join, because
-    // boilerplate grams are exactly the hot keys this query hunts and a
-    // corpus-scale occurrence list must stream, not fill one window
-    // sorter (§2.5 — AQE skew handling cannot split a single key); the
-    // persist keeps the md5-per-position pass at one execution there.
     val grams0 = positionalGrams(docs, w)
-    val marked = (if (graft.core.Spread.sourceBytes(grams0)
-        <= SpanWindowMaxSourceBytes)
-      grams0
-        .withColumn("c", count(lit(1)).over(Window.partitionBy(col("g"))))
-        .where(col("c") > 1)
-    else {
-      val grams = grams0.persist()
-      grams.join(
-        grams.groupBy(col("g")).agg(count(lit(1)).as("c"))
-          .where(col("c") > 1).hint("shuffle_hash"),
-        Seq("g"), "left_semi")
-    }).select(col("doc_id"), col("pos"))
-    val isl = marked.withColumn("grp",
-      col("pos") - row_number().over(
+    val isl = duplicatedOccurrences(grams0, Width.windowFits(grams0))
+      .withColumn("grp", col("pos") - row_number().over(
         Window.partitionBy(col("doc_id")).orderBy(col("pos"))))
     isl
       .groupBy(col("doc_id"), col("grp"))
@@ -107,6 +82,56 @@ object Spans {
         col("n_grams"))
       .orderBy(col("doc_id"), col("span_start"))
   }
+
+  /** (doc_id, pos) of every occurrence of a gram that occurs more than
+    * once, in one of two row-identical shapes (pinned in
+    * GramShapeSpec); callers choose with `Width.windowFits(grams0)`, the
+    * `Dedup.gramDfAttached` rule. `window`: ONE count window over a
+    * single gram derivation — the window shape measures ~35% faster at
+    * sf0.1. Otherwise a partial-aggregating count + shuffled-hash
+    * semi-join, because boilerplate grams are exactly the hot keys this
+    * query hunts and a corpus-scale occurrence list must stream, not
+    * fill one window sorter (§2.5); the persist keeps the
+    * md5-per-position pass at one execution there. */
+  private[ext] def duplicatedOccurrences(grams0: DataFrame,
+      window: Boolean): DataFrame =
+    (if (window)
+      grams0
+        .withColumn("c", count(lit(1)).over(Window.partitionBy(col("g"))))
+        .where(col("c") > 1)
+    else {
+      val grams = grams0.persist()
+      grams.join(
+        grams.groupBy(col("g")).agg(count(lit(1)).as("c"))
+          .where(col("c") > 1).hint("shuffle_hash"),
+        Seq("g"), "left_semi")
+    }).select(col("doc_id"), col("pos"))
+
+  /** (doc_id, pos) of every scrubbable gram occurrence — duplicated AND
+    * not the gram's global-first occurrence. Both per-gram facts (count,
+    * first occurrence) come from one pass, in the two row-identical
+    * shapes of [[duplicatedOccurrences]]: the shared-spec window pair,
+    * or a partial-aggregating stats + shuffled-hash join-back. */
+  private[ext] def scrubbableOccurrences(grams0: DataFrame,
+      window: Boolean): DataFrame =
+    (if (window) {
+      val wG = Window.partitionBy(col("g"))
+      grams0
+        .withColumn("c", count(lit(1)).over(wG))
+        .withColumn("first_occ",
+          min(struct(col("doc_id"), col("pos"))).over(wG))
+        .where(col("c") > 1 &&
+          struct(col("doc_id"), col("pos")) =!= col("first_occ"))
+    } else {
+      val grams = grams0.persist()
+      val stats = grams.groupBy(col("g"))
+        .agg(count(lit(1)).as("c"),
+          min(struct(col("doc_id"), col("pos"))).as("first_occ"))
+        .where(col("c") > 1)
+      grams
+        .join(stats.hint("shuffle_hash"), Seq("g"))
+        .where(struct(col("doc_id"), col("pos")) =!= col("first_occ"))
+    }).select(col("doc_id"), col("pos"))
 
   /** Scrub transform — the Lee-et-al. payoff: rewrite the corpus with
     * every duplicated span removed EXCEPT its first occurrence. An
@@ -125,32 +150,9 @@ object Spans {
 
   private def scrubFromGrams(docs: DataFrame, grams0: DataFrame,
                              w: Int): DataFrame = {
-    // scrubbable gram occurrences: duplicated AND not the first. Both
-    // per-gram facts (count, first occurrence) come from one pass —
-    // size-gated between the shared-spec window pair and a
-    // partial-aggregating stats + shuffled-hash join-back (see
-    // duplicatedSpans for the gate rationale)
-    val scrub = (if (graft.core.Spread.sourceBytes(grams0)
-        <= SpanWindowMaxSourceBytes) {
-      val wG = Window.partitionBy(col("g"))
-      grams0
-        .withColumn("c", count(lit(1)).over(wG))
-        .withColumn("first_occ",
-          min(struct(col("doc_id"), col("pos"))).over(wG))
-        .where(col("c") > 1 &&
-          struct(col("doc_id"), col("pos")) =!= col("first_occ"))
-    } else {
-      val grams = grams0.persist()
-      val stats = grams.groupBy(col("g"))
-        .agg(count(lit(1)).as("c"),
-          min(struct(col("doc_id"), col("pos"))).as("first_occ"))
-        .where(col("c") > 1)
-      grams
-        .join(stats.hint("shuffle_hash"), Seq("g"))
-        .where(struct(col("doc_id"), col("pos")) =!= col("first_occ"))
-    }).select(col("doc_id"), col("pos"))
-    // merge into removal spans (same island trick as duplicatedSpans)
-    val spans = scrub
+    // merge scrubbable occurrences into removal spans (same island
+    // trick as duplicatedSpans)
+    val spans = scrubbableOccurrences(grams0, Width.windowFits(grams0))
       .withColumn("grp", col("pos") - row_number().over(
         Window.partitionBy(col("doc_id")).orderBy(col("pos"))))
       .groupBy(col("doc_id"), col("grp"))

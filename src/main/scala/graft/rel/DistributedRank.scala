@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Tables
+import graft.core.{Tables, Width}
 
 /** Scale-safe distribution functions (SURVEY.md §2.9 W1 — the at-scale
   * twin of `window_distribution`).
@@ -43,30 +43,15 @@ import graft.core.Tables
   */
 object DistributedRank {
 
-  /** Memoized parquet footer row count per (dir, table) — corpus
-    * metadata feeding the volume-sized range width below, never query
-    * results (every query still computes from the parquet inputs). */
-  private val rowsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
-  private def tableRows(spark: SparkSession, dir: String,
-      table: String): Long =
-    rowsMemo.computeIfAbsent(s"$dir/$table", _ =>
-      spark.read.parquet(s"$dir/$table.parquet").count()).longValue
-
-  /** Volume-sized range-partition count for the two-pass prefix-sum
-    * skeleton (the Graph.iterWidth discipline, r17 verdict #3): the
-    * former fixed parts = 32 ran 32 near-empty range partitions × two
-    * passes at any corpus size — pure width-multiplied fixed overhead
-    * at bench scale — while a 100 TB input needs far more than 32.
-    * One range partition per ~500k rows, capped at the session width
-    * ×4 (range tasks are sort-heavy, so oversubscribing cores a little
-    * keeps the tail busy without the per-task overhead of a fixed
-    * width). Every result in this module is partition-count invariant
-    * (property-pinned in DistributedRankSpec across parts sweeps). */
-  private def rangeParts(spark: SparkSession, rows: Long): Int =
-    math.max(1L, math.min(
-      4L * spark.sessionState.conf.numShufflePartitions,
-      rows / 500000L + 1L)).toInt
+  /** Range-partition count for the two-pass prefix-sum skeleton over
+    * `table` (see core.Width.spread). The cap is the session width ×4:
+    * range tasks are sort-heavy, so oversubscribing cores a little keeps
+    * the tail busy. Every result in this module is partition-count
+    * invariant (property-pinned in DistributedRankSpec across parts
+    * sweeps). */
+  private def rangeWidth(spark: SparkSession, dir: String,
+      table: String): Int =
+    Width.spread(Width.rows(spark, dir, table), 4L * Width.sessionWidth(spark))
 
   /** Spark/DuckDB NTILE bucket of global rank `rn` among `n` rows in `k`
     * buckets: the first n%k buckets take ⌈n/k⌉ rows, the rest ⌊n/k⌋. */
@@ -84,7 +69,7 @@ object DistributedRank {
     distributionOver(Tables.customer(spark, dir)
       .select(col("c_mktsegment"), col("c_custkey"), col("c_acctbal")),
       if (parts > 0) parts
-      else rangeParts(spark, tableRows(spark, dir, "customer")))
+      else rangeWidth(spark, dir, "customer"))
 
   /** The algorithm over any (segment STRING, key LONG, value DOUBLE)
     * projection — factored out so property tests can feed arbitrary
@@ -173,7 +158,7 @@ object DistributedRank {
         col("l_quantity"),
         (money(col("l_extendedprice")) * 100).cast("long").as("w_cents")),
       if (parts > 0) parts
-      else rangeParts(spark, tableRows(spark, dir, "lineitem")))
+      else rangeWidth(spark, dir, "lineitem"))
       .toDF("l_returnflag", "wmedian_qty")
   }
 
@@ -254,7 +239,7 @@ object DistributedRank {
   def quantileContScalable(spark: SparkSession, dir: String,
       parts: Int = 0, pcts: Seq[Int] = Seq(25, 50, 75)): DataFrame = {
     val p = if (parts > 0) parts
-      else rangeParts(spark, tableRows(spark, dir, "lineitem"))
+      else rangeWidth(spark, dir, "lineitem")
     val sorted = Tables.lineitem(spark, dir)
       .select(col("l_returnflag"), col("l_quantity"))
       .repartitionByRange(p, col("l_returnflag"), col("l_quantity"))
@@ -345,7 +330,7 @@ object DistributedRank {
         col("top.qty").as("qty"), col("top.n").as("n"))
     skylineFrontier(mx,
       if (parts > 0) parts
-      else rangeParts(spark, tableRows(spark, dir, "lineitem")))
+      else rangeWidth(spark, dir, "lineitem"))
       .orderBy(col("l_returnflag"), col("price"))
   }
 

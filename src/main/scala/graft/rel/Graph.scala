@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{QueryDef, Tables}
+import graft.core.{QueryDef, Tables, Width}
 
 /** Iterative graph analytics over a relation-derived graph: fixed-point
   * integer PageRank on the part co-purchase graph. The reference engine
@@ -160,6 +160,25 @@ object Graph {
     pageRankFromAdjacency(adj, iters)
   }
 
+  /** Co-purchase pair volume estimate from the lineitem footer count:
+    * orders average ~4 items, so ordered pairs ≈ 3·|lineitem|. It sizes
+    * both the standing builds and the folds over them:
+    *   - a BUILD joins/aggregates this O(|E|) pair stream, so it runs in
+    *     a child session provisioned for it (`Width.provision`: never
+    *     below the session width); its bucketed WRITE keeps the
+    *     caller's width, because bucket count = serving width is the
+    *     zero-exchange iteration contract;
+    *   - a FOLD's per-superstep message volume is O(|E|), so it runs at
+    *     `Width.spread` (capped at the session width) in a session
+    *     pinned at that width: its score aggregates then EXIT at
+    *     hash(key, p), matching the adjacency checkpointed at p, and
+    *     each superstep plans one partial-aggregated score exchange
+    *     (the GraphSpec one-exchange-per-iteration pin). Rank
+    *     arithmetic is order-independent integer math, so results are
+    *     bit-identical at any width. */
+  private def coPairVolume(spark: SparkSession, dir: String): Long =
+    3L * Width.rows(spark, dir, "lineitem")
+
   /** Build-once bucketed adjacency for the declared corpus: the graph
     * state a 100 TB deployment materializes ONCE and iterates over many
     * times. Bucket count = the session's shuffle partition count, so
@@ -168,82 +187,6 @@ object Graph {
     * side. Session-memoized via the catalog (the fixture corpus is
     * immutable); a stale on-disk directory from a dead session is swept
     * before the rewrite. */
-  /** Child session whose shuffle width is sized to a BUILD's dominant
-    * row volume (~500k rows/task — the `bandedKnnEdges` discipline,
-    * r15): the standing-graph corpus builds join/aggregate O(|E|) pair
-    * streams, and at 30× the session's SERVING width (32) starved
-    * per-task execution memory into multi-GB sort/aggregate spills
-    * (measured: 39 GB total across the adjacency builds in one bench
-    * warm-up). Every exchange planned in the returned session inherits
-    * the wide width; the bucketed WRITE still uses the caller's width,
-    * because bucket count = serving width is the zero-exchange
-    * iteration contract. At bench scale the max() keeps the build at
-    * the session width — a no-op. */
-  private def buildSession(spark: SparkSession, rows: Long): SparkSession = {
-    val width = math.max(spark.sessionState.conf.numShufflePartitions.toLong,
-      rows / 500000L).toInt
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", width.toString)
-    // AQE coalescing sizes partitions by SHUFFLE BYTES and would merge
-    // the sized width right back (observed: 108 → 36 at 30×, and the
-    // spill returned) — but the width here provisions the aggregation
-    // and sort EXECUTION memory (collect_set lists, SMJ runs), which
-    // AQE's advisory byte target never sees. Pin the width for the
-    // build session; serving sessions keep AQE untouched.
-    s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    s
-  }
-
-  /** Memoized per-dir lineitem row count (footer-only count, one tiny
-    * job per corpus per JVM) — feeds the build-session sizing and the
-    * volume-sized iteration width below. Corpus metadata, not results:
-    * every query still computes from the parquet inputs. */
-  private val liCountMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
-  private def lineitemCount(spark: SparkSession, dir: String): Long =
-    liCountMemo.computeIfAbsent(dir,
-      _ => Tables.lineitem(spark, dir).count()).longValue
-
-  /** Co-purchase pair volume estimate from the lineitem footer count:
-    * orders average ~4 items, so ordered pairs ≈ 3·|lineitem|. */
-  private def coPairVolume(spark: SparkSession, dir: String): Long =
-    3L * lineitemCount(spark, dir)
-
-  /** Volume-sized width for the iteration folds over the standing
-    * bucketed adjacencies (r17 verdict item #4): at the session width
-    * every superstep join ran `cpus` near-empty tasks — pure
-    * width-multiplied fixed overhead at bench scale (32-core walls
-    * 2-4× the 8-core walls on the same code) — while the per-superstep
-    * message volume is O(|E|). Width = |E|-proportional at the
-    * buildSession 500k-rows/task discipline, capped at the session
-    * width so deployment-scale corpora keep every core; the one-time
-    * checkpoint repartition from the bucketed layout replaces the
-    * re-keying every iteration used to amortize. Rank arithmetic is
-    * order-independent integer math, so results are bit-identical at
-    * any width. */
-  private def iterWidth(spark: SparkSession, pairVolume: Long): Int =
-    math.max(1L, math.min(
-      spark.sessionState.conf.numShufflePartitions.toLong,
-      pairVolume / 500000L + 1L)).toInt
-
-  /** Child session pinned at the volume-sized iteration width. The
-    * fold's score aggregates must EXIT at hash(key, p) to match the
-    * checkpointed adjacency — planned at the parent's session width
-    * they exit at hash(key, cpus) instead, the widths mismatch, and
-    * EnsureRequirements re-exchanges BOTH join sides every superstep,
-    * re-shuffling the O(|E|) adjacency payload per round (caught by
-    * the GraphSpec one-exchange-per-iteration pin). Planning the fold
-    * in a session whose shuffle width IS p keeps the exchange count at
-    * one partial-aggregated score shuffle per superstep at any scale.
-    * AQE coalescing is disabled inside: it would shrink a score
-    * exchange below p mid-plan and reintroduce the mismatch. */
-  private def iterSession(spark: SparkSession, p: Int): SparkSession = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", p.toString)
-    s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    s
-  }
-
   def ensureAdjacency(spark: SparkSession, dir: String): String = synchronized {
     val buckets = spark.sessionState.conf.numShufflePartitions
     val table = ("graft_pr_adj_" +
@@ -253,7 +196,8 @@ object Graph {
         spark.conf.get("spark.sql.warehouse.dir"), table)
       val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
       if (fs.exists(loc)) fs.delete(loc, true): Unit
-      val bs = buildSession(spark, coPairVolume(spark, dir))
+      val bs = Width.pinned(spark,
+        Width.provision(coPairVolume(spark, dir), Width.sessionWidth(spark)))
       graft.core.Bucketing.writeBucketed(
         adjacencyOf(coPurchasePairs(Tables.lineitem(bs, dir))),
         table, "src", buckets)
@@ -270,13 +214,13 @@ object Graph {
     * back deserialized and reports its hash(src) partitioning. */
   def partPageRankBucketed(spark: SparkSession, dir: String,
       iters: Int = 5, k: Int = 100): DataFrame = {
-    // volume-sized iteration width (see iterWidth): the checkpointed
-    // adjacency REPORTS hash(src, p) and the fold is PLANNED at width p
-    // (see iterSession), so each round plans exactly one exchange — the
-    // partial-aggregated rank sum at p — and the adjacency never moves
-    val p = iterWidth(spark, coPairVolume(spark, dir))
+    // fold width (see coPairVolume): the checkpointed adjacency REPORTS
+    // hash(src, p) and the fold is PLANNED at width p, so each round
+    // plans exactly one exchange — the partial-aggregated rank sum at
+    // p — and the adjacency never moves
+    val p = Width.spread(coPairVolume(spark, dir), Width.sessionWidth(spark))
     val adj = PlanBridge.checkpointHashPartitioned(
-      iterSession(spark, p).table(ensureAdjacency(spark, dir)), Seq("src"), p)
+      Width.pinned(spark, p).table(ensureAdjacency(spark, dir)), Seq("src"), p)
     pageRankFromAdjacency(adj, iters)
       .select(col("node").as("part"), col("rank"))
       .orderBy(col("rank").desc, col("part"))
@@ -894,7 +838,8 @@ object Graph {
         spark.conf.get("spark.sql.warehouse.dir"), table)
       val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
       if (fs.exists(loc)) fs.delete(loc, true): Unit
-      val bs = buildSession(spark, coPairVolume(spark, dir))
+      val bs = Width.pinned(spark,
+        Width.provision(coPairVolume(spark, dir), Width.sessionWidth(spark)))
       val half = backboneEdges(Tables.lineitem(bs, dir), minSupport)
       graft.core.Bucketing.writeBucketed(
         half.unionByName(
@@ -1635,8 +1580,8 @@ object Graph {
       val (tc, ts) = (stem + "_c", stem + "_s")
       if (!spark.catalog.tableExists(tc) || !spark.catalog.tableExists(ts)) {
         // pair volume here is |lineitem| (one (c,s) row per line item)
-        val bs = buildSession(spark,
-          Tables.lineitem(spark, dir).count())
+        val bs = Width.pinned(spark, Width.provision(
+          Width.rows(spark, dir, "lineitem"), Width.sessionWidth(spark)))
         val e = Tables.orders(bs, dir)
           .select(col("o_orderkey").as("ok"), col("o_custkey").as("c"))
           .join(Tables.lineitem(bs, dir)
@@ -1677,10 +1622,11 @@ object Graph {
   def custSupplierHitsBucketed(spark: SparkSession, dir: String,
       iters: Int = 4): DataFrame = {
     val (tc, ts) = ensureHitsAdjacency(spark, dir)
-    // volume-sized iteration width: the bipartite edge volume is
-    // |distinct (c, s)| ≤ |lineitem| (see iterWidth)
-    val p = iterWidth(spark, lineitemCount(spark, dir))
-    val is = iterSession(spark, p)
+    // fold width (see coPairVolume): the bipartite edge volume is
+    // |distinct (c, s)| ≤ |lineitem|
+    val p = Width.spread(Width.rows(spark, dir, "lineitem"),
+      Width.sessionWidth(spark))
+    val is = Width.pinned(spark, p)
     val adjC = PlanBridge.checkpointHashPartitioned(
       is.table(tc), Seq("c"), p)
     val adjS = PlanBridge.checkpointHashPartitioned(
@@ -1775,10 +1721,10 @@ object Graph {
     // re-scans the bucketed parquet and re-decodes the array column,
     // where the checkpointed LogicalRDD is read back deserialized and
     // reports its hash(src) partitioning to each round's join.
-    // Volume-sized width (see iterWidth), fold planned at p (iterSession).
-    val p = iterWidth(spark, coPairVolume(spark, dir))
+    // Fold width and pinned session as in partPageRankBucketed.
+    val p = Width.spread(coPairVolume(spark, dir), Width.sessionWidth(spark))
     val adj = PlanBridge.checkpointHashPartitioned(
-      iterSession(spark, p).table(ensureAdjacency(spark, dir)), Seq("src"), p)
+      Width.pinned(spark, p).table(ensureAdjacency(spark, dir)), Seq("src"), p)
     val seeds = adj.select(col("src").as("node"))
       .filter(col("node") % 97 === 0)
     pprFromAdjacency(adj, seeds, iters)
@@ -1906,7 +1852,8 @@ object Graph {
         spark.conf.get("spark.sql.warehouse.dir"), table)
       val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
       if (fs.exists(loc)) fs.delete(loc, true): Unit
-      val bs = buildSession(spark, coPairVolume(spark, dir))
+      val bs = Width.pinned(spark,
+        Width.provision(coPairVolume(spark, dir), Width.sessionWidth(spark)))
       val adj = weightedCoPurchaseEdges(Tables.lineitem(bs, dir))
         .groupBy(col("src"))
         .agg(collect_list(struct(col("dst"), col("w"))).as("nbrs"),
@@ -1921,10 +1868,10 @@ object Graph {
     * (see [[partPageRankBucketed]]). */
   def partPageRankWeightedBucketed(spark: SparkSession, dir: String,
       iters: Int = 5, k: Int = 100): DataFrame = {
-    // volume-sized iteration width (see iterWidth), fold planned at p
-    val p = iterWidth(spark, coPairVolume(spark, dir))
+    // fold width and pinned session as in partPageRankBucketed
+    val p = Width.spread(coPairVolume(spark, dir), Width.sessionWidth(spark))
     val adj = PlanBridge.checkpointHashPartitioned(
-      iterSession(spark, p).table(ensureWeightedAdjacency(spark, dir)),
+      Width.pinned(spark, p).table(ensureWeightedAdjacency(spark, dir)),
       Seq("src"), p)
     pageRankWeightedFromAdjacency(adj, iters)
       .select(col("node").as("part"), col("rank"))
@@ -2104,11 +2051,11 @@ object Graph {
     * adjacency (narrow explode, no edge rebuild). */
   def ssspWeightedBucketed(spark: SparkSession, dir: String,
       rounds: Int = 3): DataFrame = {
-    // volume-sized relaxation width (iterWidth/iterSession discipline):
+    // fold width (see coPairVolume), relaxation planned at p:
     // the per-round min-groupBy otherwise exchanges the O(V) distance
     // relation at the session width — near-empty tasks at bench scale
-    val p = iterWidth(spark, coPairVolume(spark, dir))
-    val adj = iterSession(spark, p).table(ensureWeightedAdjacency(spark, dir))
+    val p = Width.spread(coPairVolume(spark, dir), Width.sessionWidth(spark))
+    val adj = Width.pinned(spark, p).table(ensureWeightedAdjacency(spark, dir))
     ssspWeighted(adj
       .select(col("src"), explode(col("nbrs")).as("nb"))
       .select(col("src"), col("nb.dst").as("dst"), col("nb.w").as("w")),

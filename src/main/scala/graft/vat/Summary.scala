@@ -70,9 +70,9 @@ object Summary {
     // extraction plus the exact DECIMAL money/VAT cascade — is the
     // stage cost. Probe steady 1.00 → 0.82 s with the spread; a no-op
     // at deployment scale where the scan already splits (see
-    // core.Spread / core.Tables scaladocs for the measured rule on
+    // core.Width / core.Tables scaladocs for the measured rule on
     // which scans earn this).
-    val li = graft.core.Spread.byKeys(
+    val li = graft.core.Width.byKeys(
       Tables.lineitem(spark, dir), col("l_orderkey"))
     val base = li.select(
       year(col("l_shipdate")).as("year"),

@@ -366,4 +366,18 @@ class PlanSpec extends SparkSuite {
     assert(p.contains("WindowGroupLimit"),
       s"expected per-prefix group limit in:\n$p")
   }
+
+  test("PlanDump.normalize: two builds of one query dump byte-equal") {
+    def dump(): (String, String) = {
+      val raw = SparkEntry.queries("dedup_spans")(spark, sfDir)
+        .queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+      (raw, PlanDump.normalize(raw))
+    }
+    val (rawA, a) = dump()
+    val (rawB, b) = dump()
+    assert(rawA != rawB, "expression ids should differ between builds")
+    assert(a === b)
+    assert("#\\d|plan_id=\\d|lambda x_\\d".r.findFirstIn(a).isEmpty)
+  }
 }
