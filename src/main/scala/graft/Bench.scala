@@ -97,8 +97,7 @@ object Bench {
       (() => core.ZOrder.ensureBucketedFacts(spark, sfDir): Unit),
     // inverted text index both indexed search queries read: unwarmed,
     // the r12 driver artifact put the build's 4 MB of shuffle on
-    // text_search_indexed (committed map: 0.15 MB). The full-rebuild
-    // artifact is spec-only — no declared query reads it.
+    // text_search_indexed (committed map: 0.15 MB)
     "text_index_incremental" ->
       (() => ext.Search.ensureTextIndexIncremental(spark, sfDir): Unit),
     // standing shingle/fingerprint relation every "shingle the corpus"

@@ -18,10 +18,11 @@ package graft
   */
 object WarmupRehearsal {
 
-  /** Bytes under every graft-owned state root (memo dirs, index dirs,
-    * warehouse) that mention this corpus dir's mangled name. */
-  private def stateBytes(sfDir: String, warehouse: String): Long = {
-    val mangled = sfDir.replaceAll("[^A-Za-z0-9]", "_")
+  /** Bytes of this corpus's standing state: every memo dir under
+    * `ParquetMemo.memoRoot` whose name carries the corpus dir (in the
+    * store's own spelling), plus the warehouse. */
+  private[graft] def stateBytes(sfDir: String, warehouse: String): Long = {
+    val mangled = core.ParquetMemo.sanitize(sfDir)
     def sizeOf(root: java.io.File): Long =
       if (!root.exists()) 0L
       else if (root.isFile) root.length()
@@ -29,12 +30,10 @@ object WarmupRehearsal {
         val kids = root.listFiles()
         if (kids == null) 0L else kids.map(sizeOf).sum
       }
-    val tmp = new java.io.File("/tmp").listFiles()
-    val tmpOwned =
-      if (tmp == null) 0L
-      else tmp.filter(f => f.getName.startsWith("graft_") &&
-          f.getName.contains(mangled)).map(sizeOf).sum
-    tmpOwned + sizeOf(new java.io.File(warehouse))
+    val memos = Option(new java.io.File(core.ParquetMemo.memoRoot).listFiles())
+      .getOrElse(Array.empty)
+      .filter(f => f.getName.startsWith("graft_") && f.getName.contains(mangled))
+    memos.map(sizeOf).sum + sizeOf(new java.io.File(warehouse))
   }
 
   def main(args: Array[String]): Unit = {

@@ -194,24 +194,15 @@ object ZOrder {
     * to the hottest join in the schema. Paid once per corpus; every
     * subsequent orderkey join reads co-located buckets. */
   def ensureBucketedFacts(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (String, String) = synchronized {
-    val buckets = spark.sessionState.conf.numShufflePartitions
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-    val lt = s"graft_bkt_lineitem_${tag}_b$buckets"
-    val ot = s"graft_bkt_orders_${tag}_b$buckets"
-    def build(table: String, df: DataFrame, key: String): Unit =
-      if (!spark.catalog.tableExists(table)) {
-        val loc = new org.apache.hadoop.fs.Path(
-          spark.conf.get("spark.sql.warehouse.dir"), table)
-        val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
-        if (fs.exists(loc)) fs.delete(loc, true): Unit
-        Bucketing.writeBucketed(df, table, key, buckets, Seq(key))
-      }
-    build(lt, Tables.lineitem(spark, dir)
-      .select(col("l_orderkey"), col("l_extendedprice")), "l_orderkey")
-    build(ot, Tables.orders(spark, dir)
-      .select(col("o_orderkey"), col("o_orderstatus")), "o_orderkey")
-    (lt, ot)
+      dir: String): (String, String) = {
+    val stem = dir.replaceAll("[^A-Za-z0-9]", "_").toLowerCase + "_b" +
+      spark.sessionState.conf.numShufflePartitions
+    (Bucketing.ensure(spark, s"graft_bkt_lineitem_$stem", "l_orderkey",
+        Seq("l_orderkey"))(Tables.lineitem(spark, dir)
+      .select(col("l_orderkey"), col("l_extendedprice"))),
+     Bucketing.ensure(spark, s"graft_bkt_orders_$stem", "o_orderkey",
+        Seq("o_orderkey"))(Tables.orders(spark, dir)
+      .select(col("o_orderkey"), col("o_orderstatus"))))
   }
 
   /** The declared bucketed-layout query: the orderkey fact join served

@@ -1248,11 +1248,11 @@ object Dedup {
     *
     * Scale shape: the corpus side of the band join is exactly the
     * signature index a deployment builds once and reuses every batch
-    * (the ensureIvfIndex lifecycle applied to text); per-batch work is
-    * O(batch × bands) probe rows against bucket-partitioned corpus
-    * keys. The exact arm is a fingerprint semi-join whose batch side is
-    * broadcast-sized by construction. Nothing here is quadratic in the
-    * corpus. */
+    * (standing state, the `ParquetMemo.ensureWith` lifecycle); per-batch
+    * work is O(batch × bands) probe rows against bucket-partitioned
+    * corpus keys. The exact arm is a fingerprint semi-join whose batch
+    * side is broadcast-sized by construction. Nothing here is quadratic
+    * in the corpus. */
   def incrementalDedup(docs: DataFrame, batchFrac: Double,
       threshold: Double, k: Int = 4): DataFrame = {
     val u = conv(substring(md5(concat(lit("batch:"),

@@ -49,8 +49,8 @@ object Multimodal {
     * values — participates in every memo fingerprint below. */
   private val CorpusVersion = "v1"
 
-  /** Write-once memoization for the synthetic media corpora (the
-    * `ensureIvfIndex` `_SUCCESS` discipline via [[graft.core.ParquetMemo]]):
+  /** Write-once memoization for the synthetic media corpora (standing
+    * state via [[graft.core.ParquetMemo]]):
     * each corpus is a pure function of the documents table, so encoding
     * it (PNG/JPEG/WAV/AVI synthesis) belongs to corpus *creation*, paid
     * once per (source snapshot, generator version) — while every query

@@ -540,77 +540,23 @@ object Similarity {
   /** Bumped whenever the index build algorithm changes shape or values. */
   private val IndexAlgoVersion = "v2-exact-centroids"
 
-  /** Deterministic on-disk location for the IVF index of one data dir.
-    * The path embeds a fingerprint of the source parquet (length +
-    * mtime of every part file), so regenerated fixtures at the same
-    * path get a FRESH index instead of silently serving a stale one —
-    * the same freshness contract a real indexing system keys on source
-    * snapshot identity. */
-  def ivfIndexPath(dir: String): String = {
-    val src = new java.io.File(s"$dir/embeddings.parquet")
-    val parts: Seq[java.io.File] =
-      if (src.isDirectory) Option(src.listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(f => f.getName.endsWith(".parquet") || f.getName == "_SUCCESS")
-        .sortBy(_.getName).toSeq
-      else Seq(src)
-    // IndexAlgoVersion participates in the fingerprint: changing the
-    // build algorithm (e.g. the centroid reduction) must invalidate
-    // memoized indexes exactly like a regenerated source would — the
-    // stale-sibling sweep in ensureIvfIndex then reclaims the old dirs
-    // MD5 (not 32-bit String.hashCode): a fingerprint collision after a
-    // corpus change would silently serve a stale index as current
-    val fpInput = parts.map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .mkString("|") + "|" + IndexAlgoVersion
-    val fp = java.security.MessageDigest.getInstance("MD5")
-      .digest(fpInput.getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString.take(16)
-    graft.core.ParquetMemo.memoRoot + "/graft_ivf_" +
-      dir.replaceAll("[^A-Za-z0-9._-]", "_") + "_" + fp
-  }
+  /** Deterministic on-disk location for the IVF index of one data dir:
+    * the standing-state store's path for the embeddings snapshot, so a
+    * regenerated fixture at the same path — or a bumped
+    * IndexAlgoVersion — gets a FRESH index instead of a stale one. */
+  def ivfIndexPath(dir: String): String =
+    graft.core.ParquetMemo.cachePath(s"$dir/embeddings.parquet", "ivf",
+      IndexAlgoVersion)
 
-  /** Build-once memoization: the parquet writer's own `_SUCCESS` marker
-    * is the build receipt, so the index survives (and is shared) across
-    * sessions/JVMs pointed at the same data dir. Cross-JVM safety: the
-    * build lands in a per-process staging dir and is RENAMED into place
-    * (atomic on one filesystem), so two concurrent builders never write
-    * through each other — the loser just deletes its staging copy.
-    * Superseded fingerprints of the same data dir are swept so /tmp
-    * holds at most one index per corpus. The declared `simsearch_ivf`
-    * query calls this, making the index build the offline "add to
-    * index" step — exactly once per corpus — while every query
-    * execution is only the pruned probe. */
-  def ensureIvfIndex(spark: SparkSession, dir: String): String = synchronized {
-    val path = ivfIndexPath(dir)
-    if (!new java.io.File(s"$path/index/_SUCCESS").exists()) {
-      // sweep stale fingerprints of this corpus before building anew
-      val target = new java.io.File(path)
-      val prefix = target.getName.substring(0, target.getName.lastIndexOf('_') + 1)
-      Option(target.getParentFile.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith(prefix) &&
-          f.getName != target.getName && !f.getName.contains(".build."))
-        .foreach(deleteRecursively)
-      val staging = new java.io.File(
-        path + ".build." + java.lang.ProcessHandle.current().pid())
-      try {
-        buildIvfIndex(spark, dir, staging.getAbsolutePath)
-        if (!staging.renameTo(target)) {
-          // rename refused: either a concurrent builder won (fine — use
-          // theirs) or something is genuinely wrong; never hand back a
-          // path with no index behind it
-          deleteRecursively(staging)
-          require(new java.io.File(s"$path/index/_SUCCESS").exists(),
-            s"IVF index build could not be published at $path")
-        }
-      } catch { case e: Throwable => deleteRecursively(staging); throw e }
-    }
-    path
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(): Unit
-  }
+  /** Build-once IVF index at [[ivfIndexPath]], through the standing-state
+    * store (`ParquetMemo.ensureWith`: `_SUCCESS` receipt, staged build,
+    * publish by rename, stale fingerprints swept). The declared
+    * `simsearch_ivf` query calls this, making the index build the
+    * offline "add to index" step — exactly once per corpus — while
+    * every query execution is only the pruned probe. */
+  def ensureIvfIndex(spark: SparkSession, dir: String): String =
+    graft.core.ParquetMemo.ensureWith(s"$dir/embeddings.parquet", "ivf",
+      IndexAlgoVersion)(buildIvfIndex(spark, dir, _))
 
   /** Probe a prebuilt IVF index with a caller-supplied query vector (in
     * a serving system the query embedding arrives from outside — it is

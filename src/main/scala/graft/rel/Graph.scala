@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{QueryDef, Tables, Width}
+import graft.core.{Bucketing, QueryDef, Tables, Width}
 
 /** Iterative graph analytics over a relation-derived graph: fixed-point
   * integer PageRank on the part co-purchase graph. The reference engine
@@ -184,26 +184,23 @@ object Graph {
     * times. Bucket count = the session's shuffle partition count, so
     * the scan's hash(src) partitioning matches every downstream rank
     * vector and the iteration joins plan with zero exchanges on either
-    * side. Session-memoized via the catalog (the fixture corpus is
-    * immutable); a stale on-disk directory from a dead session is swept
-    * before the rewrite. */
-  def ensureAdjacency(spark: SparkSession, dir: String): String = synchronized {
-    val buckets = spark.sessionState.conf.numShufflePartitions
-    val table = ("graft_pr_adj_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") + "_b" + buckets).toLowerCase
-    if (!spark.catalog.tableExists(table)) {
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), table)
-      val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(loc)) fs.delete(loc, true): Unit
-      val bs = Width.pinned(spark,
-        Width.provision(coPairVolume(spark, dir), Width.sessionWidth(spark)))
-      graft.core.Bucketing.writeBucketed(
-        adjacencyOf(coPurchasePairs(Tables.lineitem(bs, dir))),
-        table, "src", buckets)
-    }
-    table
-  }
+    * side (lifecycle: `Bucketing.ensure`). */
+  def ensureAdjacency(spark: SparkSession, dir: String): String =
+    Bucketing.ensure(spark, standingTable(spark, "graft_pr_adj_", dir), "src")(
+      adjacencyOf(coPurchasePairs(Tables.lineitem(buildSession(spark, dir), dir))))
+
+  /** Catalog name of a standing table: prefix + mangled corpus dir +
+    * the bucket count it is written at. */
+  private def standingTable(spark: SparkSession, prefix: String,
+      dir: String): String =
+    (prefix + dir.replaceAll("[^A-Za-z0-9]", "_") + "_b" +
+      spark.sessionState.conf.numShufflePartitions).toLowerCase
+
+  /** Session a co-purchase standing build plans in: provisioned for the
+    * pair volume, never narrower than the session. */
+  private def buildSession(spark: SparkSession, dir: String): SparkSession =
+    Width.pinned(spark,
+      Width.provision(coPairVolume(spark, dir), Width.sessionWidth(spark)))
 
   /** Declared-query path: 5 iterations over the bucketed co-purchase
     * adjacency, top k parts by rank. The scan is checkpointed ONCE
@@ -829,25 +826,13 @@ object Graph {
     * buckets. (PageRank keeps its own adjacency table — it runs on the
     * RAW co-purchase graph, a different relation.) */
   def ensureBackbone(spark: SparkSession, dir: String,
-      minSupport: Long = 2L): String = synchronized {
-    val buckets = spark.sessionState.conf.numShufflePartitions
-    val table = ("graft_bb_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_s" + minSupport + "_b" + buckets).toLowerCase
-    if (!spark.catalog.tableExists(table)) {
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), table)
-      val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(loc)) fs.delete(loc, true): Unit
-      val bs = Width.pinned(spark,
-        Width.provision(coPairVolume(spark, dir), Width.sessionWidth(spark)))
-      val half = backboneEdges(Tables.lineitem(bs, dir), minSupport)
-      graft.core.Bucketing.writeBucketed(
-        half.unionByName(
-          half.select(col("dst").as("src"), col("src").as("dst"))),
-        table, "src", buckets)
+      minSupport: Long = 2L): String =
+    Bucketing.ensure(spark,
+        standingTable(spark, "graft_bb_", dir + "_s" + minSupport), "src") {
+      val half = backboneEdges(
+        Tables.lineitem(buildSession(spark, dir), dir), minSupport)
+      half.unionByName(half.select(col("dst").as("src"), col("src").as("dst")))
     }
-    table
-  }
 
   /** Connected components of the backbone graph: node → min reachable
     * id (the same component contract every clustering op in the engine
@@ -1570,36 +1555,27 @@ object Graph {
   /** Build-once bucketed bipartite adjacency for the HITS corpus — the
     * customer→supplier purchase graph as standing state, both
     * orientations bucketed on their own key so every iteration join is
-    * exchange-free (the `ensureAdjacency` discipline; session-memoized
-    * via the catalog). */
-  def ensureHitsAdjacency(spark: SparkSession, dir: String): (String, String) =
-    synchronized {
-      val buckets = spark.sessionState.conf.numShufflePartitions
-      val stem = ("graft_hits_adj_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_") + "_b" + buckets).toLowerCase
-      val (tc, ts) = (stem + "_c", stem + "_s")
-      if (!spark.catalog.tableExists(tc) || !spark.catalog.tableExists(ts)) {
-        // pair volume here is |lineitem| (one (c,s) row per line item)
-        val bs = Width.pinned(spark, Width.provision(
-          Width.rows(spark, dir, "lineitem"), Width.sessionWidth(spark)))
-        val e = Tables.orders(bs, dir)
-          .select(col("o_orderkey").as("ok"), col("o_custkey").as("c"))
-          .join(Tables.lineitem(bs, dir)
-            .select(col("l_orderkey").as("ok"), col("l_suppkey").as("s")), Seq("ok"))
-          .select(col("c"), col("s")).distinct()
-          .localCheckpoint(eager = true)
-        for ((t, df, key) <- Seq(
-            (tc, e.groupBy(col("c")).agg(collect_set(col("s")).as("ss")), "c"),
-            (ts, e.groupBy(col("s")).agg(collect_set(col("c")).as("cs")), "s"))) {
-          val loc = new org.apache.hadoop.fs.Path(
-            spark.conf.get("spark.sql.warehouse.dir"), t)
-          val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
-          if (fs.exists(loc)) fs.delete(loc, true): Unit
-          graft.core.Bucketing.writeBucketed(df, t, key, buckets)
-        }
-      }
-      (tc, ts)
+    * exchange-free (the `ensureAdjacency` discipline). The edge set
+    * both orientations group is checkpointed once, and only if one of
+    * them is missing. */
+  def ensureHitsAdjacency(spark: SparkSession, dir: String): (String, String) = {
+    val stem = standingTable(spark, "graft_hits_adj_", dir)
+    lazy val e = {
+      // pair volume here is |lineitem| (one (c,s) row per line item)
+      val bs = Width.pinned(spark, Width.provision(
+        Width.rows(spark, dir, "lineitem"), Width.sessionWidth(spark)))
+      Tables.orders(bs, dir)
+        .select(col("o_orderkey").as("ok"), col("o_custkey").as("c"))
+        .join(Tables.lineitem(bs, dir)
+          .select(col("l_orderkey").as("ok"), col("l_suppkey").as("s")), Seq("ok"))
+        .select(col("c"), col("s")).distinct()
+        .localCheckpoint(eager = true)
     }
+    (Bucketing.ensure(spark, stem + "_c", "c")(
+      e.groupBy(col("c")).agg(collect_set(col("s")).as("ss"))),
+     Bucketing.ensure(spark, stem + "_s", "s")(
+      e.groupBy(col("s")).agg(collect_set(col("c")).as("cs"))))
+  }
 
   /** Declared surface: 4 rounds over the customer→supplier graph, top
     * 25 authorities + top 25 hubs. */
@@ -1842,26 +1818,12 @@ object Graph {
     * distinct + count self-join, the query's data-sized work) runs
     * once per corpus; every ranking sweep then pays only the
     * iteration exchanges. */
-  def ensureWeightedAdjacency(spark: SparkSession,
-      dir: String): String = synchronized {
-    val buckets = spark.sessionState.conf.numShufflePartitions
-    val table = ("graft_wpr_adj_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") + "_b" + buckets).toLowerCase
-    if (!spark.catalog.tableExists(table)) {
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), table)
-      val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(loc)) fs.delete(loc, true): Unit
-      val bs = Width.pinned(spark,
-        Width.provision(coPairVolume(spark, dir), Width.sessionWidth(spark)))
-      val adj = weightedCoPurchaseEdges(Tables.lineitem(bs, dir))
+  def ensureWeightedAdjacency(spark: SparkSession, dir: String): String =
+    Bucketing.ensure(spark, standingTable(spark, "graft_wpr_adj_", dir), "src")(
+      weightedCoPurchaseEdges(Tables.lineitem(buildSession(spark, dir), dir))
         .groupBy(col("src"))
         .agg(collect_list(struct(col("dst"), col("w"))).as("nbrs"),
-          sum(col("w")).as("wsum"))
-      graft.core.Bucketing.writeBucketed(adj, table, "src", buckets)
-    }
-    table
-  }
+          sum(col("w")).as("wsum")))
 
   /** Declared-query path: 5 weighted iterations over the bucketed
     * standing adjacency, the scan checkpointed once before the fold

@@ -67,4 +67,43 @@ class BucketingSpec extends SparkSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
     }
   }
+
+  test("Bucketing.ensure: builds once, at the session's shuffle width") {
+    val table = "bucketing_ensure_once"
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    def build = {
+      builds.incrementAndGet()
+      Tables.orders(spark, sfDir).select(col("o_orderkey"), col("o_orderstatus"))
+    }
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    try {
+      assert(Bucketing.ensure(spark, table, "o_orderkey")(build) == table)
+      assert(Bucketing.ensure(spark, table, "o_orderkey")(build) == table)
+      assert(builds.get() == 1, "a catalogued table must not be rebuilt")
+      val meta = spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(table))
+      assert(meta.bucketSpec.map(_.numBuckets) ===
+        Some(spark.sessionState.conf.numShufflePartitions))
+      assert(spark.table(table).count() == Tables.orders(spark, sfDir).count())
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table"): Unit
+  }
+
+  test("Bucketing.ensure sweeps an orphan warehouse dir before writing") {
+    val table = "bucketing_ensure_orphan"
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    // a dead session's leftover: files on disk, no catalog entry — the
+    // bucketed writer refuses to write over such a location
+    val loc = new java.io.File(new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"), table).toUri.getPath)
+    assert(loc.mkdirs() || loc.isDirectory)
+    val orphan = new java.io.File(loc, "part-orphan.parquet")
+    java.nio.file.Files.write(orphan.toPath, Array[Byte](1, 2, 3))
+    try {
+      Bucketing.ensure(spark, table, "o_orderkey")(
+        Tables.orders(spark, sfDir).select(col("o_orderkey")))
+      assert(!orphan.exists(), "orphan warehouse dir was not swept")
+      assert(spark.table(table).count() == Tables.orders(spark, sfDir).count())
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table"): Unit
+  }
 }
+

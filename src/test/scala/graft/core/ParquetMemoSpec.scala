@@ -58,4 +58,19 @@ class ParquetMemoSpec extends SparkSuite {
       "stale sibling should have been reclaimed")
     assert(spark.read.parquet(p2).as[Long].collect().toSeq == Seq(2L))
   }
+
+  test("the stale-build sweep takes only its own tag: building tag t " +
+      "leaves tag t_x's build in place") {
+    import spark.implicits._
+    val src = s"$sfDir/documents.parquet"
+    val t = "memospec_sweep_" + System.nanoTime()
+    val builds = new AtomicInteger(0)
+    def buildX = { builds.incrementAndGet(); Seq(1L).toDF("x") }
+    val px = ParquetMemo.ensure(src, t + "_x", "v1")(buildX)
+    ParquetMemo.ensure(src, t, "v1")(Seq(2L).toDF("x"))
+    assert(new java.io.File(px, "_SUCCESS").exists(),
+      "a shorter tag's build swept a longer tag's memo")
+    assert(ParquetMemo.ensure(src, t + "_x", "v1")(buildX) == px)
+    assert(builds.get() == 1, "t_x was rebuilt after building t")
+  }
 }

@@ -248,7 +248,7 @@ class SearchSketchSpec extends SparkSuite {
   }
 
   test("indexed search probe prunes postings partitions (bucket IN)") {
-    val tmp = Search.ensureTextIndex(spark, sfDir)
+    val tmp = Search.ensureTextIndexIncremental(spark, sfDir)
     val p = Search.rankedSearchIndexed(spark, tmp, Seq("vector", "hash"), 10)
       .queryExecution.executedPlan.toString
     assert(p.contains("PartitionFilters: [bucket"),
