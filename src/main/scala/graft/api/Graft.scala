@@ -11,7 +11,7 @@ import graft.vat.{Conform, Summary}
   * Reference flow → engine call:
   *  - upload workbook, enumerate sheets (fianl2.py:212-213) →
   *    `VatPipeline.processSheets` over (csvPath, sheetName) pairs
-  *  - per-sheet clean/conform (fianl2.py:130-164) → `Conform.processCsvSheet`
+  *  - per-sheet clean/conform (fianl2.py:130-164) → `Conform.csvSheetBody`
   *  - error-tolerant ingest: failed sheets skipped, error surfaced
   *    (fianl2.py:216-221) → `VatResult.failures`
   *  - period mapping report (fianl2.py:230-233) → `VatResult.mapping`
@@ -88,6 +88,13 @@ object VatPipeline {
     * try/except report (fianl2.py:216-221). */
   final case class SheetFailure(sheet: String, error: String)
 
+  /** Spark's string order (UTF-8 bytes, unsigned), for driver-side sorts
+    * that must agree with an `orderBy` on a string column. */
+  private val BinaryOrder: Ordering[String] = (a, b) =>
+    java.util.Arrays.compareUnsigned(
+      a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
   final case class VatResult(data: DataFrame, failures: Seq[SheetFailure],
       warnings: Seq[String] = Seq.empty) {
 
@@ -97,8 +104,16 @@ object VatPipeline {
       .dropDuplicates("source_sheet", "month", "year")
       .orderBy(col("source_sheet"))
 
-    /** The reference's whole analytical output (fianl2.py:167-195). */
-    def summary: DataFrame = Summary.vatSummary(data)
+    /** The reference's whole analytical output (fianl2.py:167-195), as a
+      * snapshot: the summary is computed once, on first access, and
+      * served from a driver-local relation to every later reader —
+      * `collect`, `writeXlsx`, `writeCsv`, `writeParquet`, `writeJdbc` —
+      * so no sink recomputes it. Bounded at 4 rows per period. */
+    lazy val summary: DataFrame = {
+      val s = Summary.vatSummary(data)
+      data.sparkSession.createDataFrame(
+        java.util.Arrays.asList(s.collect(): _*), s.schema)
+    }
 
     /** Typed view of the conformed rows (SURVEY.md §1.4's
       * `Dataset[VatTransaction]`) for compile-time Scala pipelines. */
@@ -118,7 +133,8 @@ object VatPipeline {
 
     /** The reference's download sink (fianl2.py:241-248): the summary as
       * a one-sheet xlsx. Driver-side by design — the summary is 4 rows
-      * per period (bounded), never cluster-scale data. */
+      * per period (bounded), never cluster-scale data, and already
+      * local once computed, so the sink runs no job. */
     def writeXlsx(path: String, sheet: String = "VAT Summary"): Unit = {
       val df = summary.select("period", "fta_box", "description",
         "net_value", "vat_value", "net_vat_payable")
@@ -142,7 +158,7 @@ object VatPipeline {
 }
 
 final class VatPipeline(spark: SparkSession) {
-  import VatPipeline.{SheetFailure, VatResult}
+  import VatPipeline.{BinaryOrder, SheetFailure, VatResult}
 
   /** Ingest many sheets (one CSV file per sheet, junk preamble + synonym
     * headers tolerated), conform to the canonical schema, union by name.
@@ -164,7 +180,7 @@ final class VatPipeline(spark: SparkSession) {
   def processSheets(sheets: Seq[(String, String)],
       config: VatConfig): VatResult = {
     val results = sheets.map { case (path, name) =>
-      try Right(name -> Conform.processCsvSheet(spark, path, name,
+      try Right(name -> Conform.csvSheetBody(spark, path, name,
         config.nanBoxCompat, config.decimalMoney))
       catch { case e: Exception => Left(SheetFailure(name, String.valueOf(e.getMessage))) }
     }
@@ -172,51 +188,68 @@ final class VatPipeline(spark: SparkSession) {
       results.collect { case Left(f) => f }, config)
   }
 
-  /** Shared tail of every ingest front door: union, per-sheet
-    * diagnostics in ONE grouped job, warning assembly. */
+  /** Shared tail of every ingest front door. `frames` are sheet bodies
+    * (`Conform.enrichBody`, year not yet set). ONE grouped pass over
+    * all of them — never a pass per sheet — counts rows, null-box rows
+    * and rate outliers per (sheet position, parsed year). From those
+    * counts the driver derives each sheet's mode year (keyed by
+    * position: two sheets may share a name), the multiple-years
+    * warnings (frame order) and the null-box and rate warnings (summed
+    * by sheet name, in name order). Null-box rows change boxes between
+    * compat modes, so their existence is always surfaced; the rate
+    * check flags Box-A-membership rows whose VAT is not net × vatRate
+    * within tolerance (the sidebar rate input put to real use: it
+    * catches mis-keyed or mis-rated invoices before they reach the
+    * return). */
   private def finish(frames: Seq[(String, DataFrame)],
       failures: Seq[SheetFailure], config: VatConfig): VatResult = {
     require(frames.nonEmpty, "No valid sheets processed")
-    // A5 — the reference's "Multiple years detected" warning
-    // (fianl2.py:124-125), surfaced per sheet
-    val warnings = frames.flatMap { case (name, df) =>
-      val counts = Conform.yearCounts(df)
-      if (counts.size > 1)
-        Some(s"Sheet '$name': multiple years detected: " +
-          counts.toSeq.sorted.map { case (y, n) => s"$y→$n" }.mkString(", ") +
-          " — using most frequent year.")
-      else None
-    }
-    val all = frames.map(_._2).reduce(_.unionByName(_, allowMissingColumns = true))
-    // per-sheet diagnostics in ONE grouped job over the union (never a
-    // job per sheet): null-box rows (they change boxes between compat
-    // modes, so their existence is always surfaced) and the rate check —
-    // Box-A-membership rows whose VAT is not net × vatRate within
-    // tolerance (the sidebar rate input put to real use: it catches
-    // mis-keyed or mis-rated invoices before they reach the return)
     val rateOutlier = col("box").contains("A") &&
       col("net_value").isNotNull && col("vat_value").isNotNull &&
       abs(col("vat_value").cast("double") -
         col("net_value").cast("double") * lit(config.vatRate)) >
         lit(config.rateTolerance)
-    val diag = all.groupBy(col("source_sheet")).agg(
-      sum(when(col("box_was_null"), 1L).otherwise(0L)).as("n_null_box"),
-      sum(when(rateOutlier, 1L).otherwise(0L)).as("n_rate_outliers"))
-      .orderBy(col("source_sheet"))
-      .collect()
-    val nullBoxWarnings = diag.filter(_.getLong(1) > 0).map { r =>
+    // rows: (pos, y, n, n_null_box, n_rate_outliers)
+    val counts = frames.zipWithIndex.map { case ((_, body), i) =>
+      body.select(lit(i).as("pos"), Conform.parsedYear(body).as("y"),
+        col("box_was_null"), rateOutlier.as("rate_outlier"))
+    }.reduce(_.union(_))
+      .groupBy(col("pos"), col("y")).agg(
+        count(lit(1)).as("n"),
+        sum(when(col("box_was_null"), 1L).otherwise(0L)).as("n_null_box"),
+        sum(when(col("rate_outlier"), 1L).otherwise(0L)).as("n_rate_outliers"))
+      .collect().toSeq
+    val byPos = counts.groupBy(_.getInt(0))
+    val yearCounts = frames.indices.map(i =>
+      byPos.getOrElse(i, Nil).filterNot(_.isNullAt(1))
+        .map(r => r.getInt(1) -> r.getLong(2)).toMap)
+    // A5 — the reference's "Multiple years detected" warning
+    // (fianl2.py:124-125), surfaced per sheet
+    val yearWarnings = frames.zip(yearCounts).collect {
+      case ((name, _), ys) if ys.size > 1 =>
+        s"Sheet '$name': multiple years detected: " +
+          ys.toSeq.sorted.map { case (y, n) => s"$y→$n" }.mkString(", ") +
+          " — using most frequent year."
+    }
+    val diag = counts.groupMapReduce(r => frames(r.getInt(0))._1)(
+      r => (r.getLong(3), r.getLong(4))) { case ((a, b), (x, y)) => (a + x, b + y) }
+      .toSeq.sortBy(_._1)(BinaryOrder)
+    val nullBoxWarnings = diag.collect { case (name, (n, _)) if n > 0 =>
       val fate = if (config.nanBoxCompat)
         "counted into Box A as 'NAN' (astype-str compat)"
       else "in NO box (nulls stay null; enable nanBoxCompat to replay the reference)"
-      s"Sheet '${r.getString(0)}': ${r.getLong(1)} rows with null Box — $fate."
+      s"Sheet '$name': $n rows with null Box — $fate."
     }
     val rateWarnings =
-      if (!config.rateCheck) Array.empty[String]
-      else diag.filter(_.getLong(2) > 0).map { r =>
-        f"Sheet '${r.getString(0)}': ${r.getLong(2)} Box-A rows where " +
+      if (!config.rateCheck) Seq.empty[String]
+      else diag.collect { case (name, (_, n)) if n > 0 =>
+        f"Sheet '$name': $n Box-A rows where " +
           f"|vat − net × ${config.vatRate * 100}%.2f%%| > ${config.rateTolerance}%.2f (rate check)."
       }
-    VatResult(all, failures, warnings ++ nullBoxWarnings ++ rateWarnings)
+    val all = frames.zip(yearCounts).map { case ((_, body), ys) =>
+      Conform.withYear(body, Conform.modeYear(ys))
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
+    VatResult(all, failures, yearWarnings ++ nullBoxWarnings ++ rateWarnings)
   }
 
   /** The reference's actual front door (fianl2.py:212-221): one xlsx
@@ -274,11 +307,14 @@ final class VatPipeline(spark: SparkSession) {
       }
       .toDF("sheet_label", "idx", "cells")
       .persist()
-    val labels = decoded.select("sheet_label").distinct()
-      .orderBy("sheet_label").collect().map(_.getString(0)).toSeq
-    val results = labels.map { label =>
-      try Right(label -> Conform.processCellsSheet(
+    // every sheet's label and ≤30-row header sample in ONE job; a sheet
+    // with no rows has no label, so it is not enumerated
+    val heads = decoded.filter(col("idx") < 30).collect().toSeq
+      .groupBy(_.getString(0)).toSeq.sortBy(_._1)(BinaryOrder)
+    val results = heads.map { case (label, rows) =>
+      try Right(label -> Conform.cellsSheetBody(
         decoded.filter(col("sheet_label") === label).drop("sheet_label"),
+        rows.sortBy(_.getLong(1)).map(_.getSeq[String](2)),
         label, config.nanBoxCompat, config.decimalMoney))
       catch { case e: Exception =>
         Left(SheetFailure(label, String.valueOf(e.getMessage))) }

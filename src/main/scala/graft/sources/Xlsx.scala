@@ -18,7 +18,7 @@ import scala.collection.mutable
   * This is a DRIVER-SIDE metadata/ingest shim by design: workbooks are
   * interactive uploads (the reference's largest evidenced file is
   * ~440 KB), not cluster-scale data. Sheets are extracted to CSV files
-  * that the distributed pipeline (`Conform.processCsvSheet`) then reads
+  * that the distributed pipeline (`Conform.csvSheetBody`) then reads
   * through Spark's parallel CSV reader — the engine never parses XML on
   * executors. Cell coverage: shared strings (`t="s"`), inline strings
   * (`t="inlineStr"`), formula-cached strings (`t="str"`), booleans

@@ -32,9 +32,18 @@ case class VatTransaction(
   * (fianl2.py:130-150) re-expressed for Spark.
   *
   * Header-row detection and header normalization are *metadata* ops — they
-  * run driver-side over a bounded `limit(30)` sample (one tiny job), never
-  * over the full data (SURVEY.md §4.1: the reference reads every sheet
-  * twice; we read the head once for metadata and the body once for data).
+  * run driver-side over a bounded ≤30-row sample (one tiny job per CSV
+  * sheet; one job for ALL sheets of a bulk backfill), never over the full
+  * data (SURVEY.md §4.1: the reference reads every sheet twice; we read
+  * the head once for metadata and the body once for data).
+  *
+  * A sheet is conformed in two steps: a *body* (`csvSheetBody` /
+  * `cellsSheetBody` → `enrichBody`, every column but the year) and a
+  * *year step* (`withYear`). The year is the one per-sheet fact that
+  * needs a pass over the data; `VatPipeline` — the only ingest entry
+  * point — counts `parsedYear` for all sheets of a filing in ONE grouped
+  * pass, together with the null-box and rate diagnostics, and picks
+  * each sheet's `modeYear` from those counts.
   */
 object Conform {
 
@@ -92,16 +101,16 @@ object Conform {
   }
 
   /** One "sheet" (a headerless CSV file with possible junk preamble) →
-    * conformed, typed, enriched VAT table. Mirrors process_sheet
-    * (fianl2.py:130-164) but distributed:
+    * conformed, typed, enriched VAT body, year not yet set (see
+    * `enrichBody`). Mirrors process_sheet (fianl2.py:130-164) but
+    * distributed:
     *
     *  - header detection on a driver-side `limit(30)` sample
     *  - preamble rows dropped by zipWithIndex (no second file read)
     *  - currency conversion / box canon / period literals as Column ops
     */
-  def processCsvSheet(spark: SparkSession, path: String, sheetName: String,
+  def csvSheetBody(spark: SparkSession, path: String, sheetName: String,
       nanBoxCompat: Boolean = false, decimalMoney: Boolean = false): DataFrame = {
-    import spark.implicits._
     val raw = spark.read
       .option("header", "false").option("inferSchema", "false")
       // RFC-4180 quoting: xlsx-extracted sheets carry doubled-quote
@@ -110,8 +119,8 @@ object Conform {
       // so losing intra-file split parallelism is irrelevant)
       .option("escape", "\"").option("multiLine", "true")
       .csv(path)
-    val head = raw.limit(30).collect().toSeq
-      .map(_.toSeq.map(v => if (v == null) "None" else v.toString))
+    val head = sampleHead(raw.limit(30).collect().toSeq
+      .map(r => Seq.tabulate(r.length)(r.getString)))
     val headerIdx = detectHeaderRow(head)
     val headers = head(headerIdx).map(normalizeHeader)
 
@@ -121,32 +130,41 @@ object Conform {
     val named = spark.createDataFrame(bodyRdd, raw.schema)
       .toDF(headers.zipWithIndex.map { case (h, i) => if (h.isEmpty) s"_c$i" else h }: _*)
 
-    enrich(conformColumns(named), sheetName, nanBoxCompat, decimalMoney)
+    enrichBody(conformColumns(named), sheetName, nanBoxCompat, decimalMoney)
   }
 
-  /** `processCsvSheet`'s twin over ALREADY-DECODED cells — `cellsDf` is
+  /** `csvSheetBody`'s twin over ALREADY-DECODED cells — `cellsDf` is
     * (idx BIGINT, cells ARRAY<STRING>) rows from the executor-side
     * workbook codec (`sources.Xlsx.readAllSheets`), dense and padded,
     * with empty cells as SQL nulls (mirroring what the driver path's
-    * CSV round trip reads back). Same ≤30-row header sample, same
-    * preamble drop, same conform/enrich — the decode TRANSPORT is the
-    * only difference, so the two paths agree bit-for-bit
-    * (GraftApiSpec pins it). */
-  def processCellsSheet(cellsDf: DataFrame, sheetName: String,
-      nanBoxCompat: Boolean = false, decimalMoney: Boolean = false): DataFrame = {
-    val head = cellsDf.orderBy(col("idx")).limit(30).collect().toSeq
-      .map(_.getSeq[String](1).map(v => if (v == null) "None" else v))
-    val headerIdx = detectHeaderRow(head)
-    val headers = head(headerIdx).map(normalizeHeader)
+    * CSV round trip reads back). `head` is the sheet's first ≤30 rows
+    * of cells, in `idx` order, which the caller already holds — a bulk
+    * backfill collects every sheet's sample in one job. Same preamble
+    * drop, same conform/enrich — the decode TRANSPORT is the only
+    * difference, so the two paths agree bit-for-bit (GraftApiSpec pins
+    * it). */
+  def cellsSheetBody(cellsDf: DataFrame, head: Seq[Seq[String]],
+      sheetName: String, nanBoxCompat: Boolean = false,
+      decimalMoney: Boolean = false): DataFrame = {
+    val sample = sampleHead(head)
+    val headerIdx = detectHeaderRow(sample)
+    val headers = sample(headerIdx).map(normalizeHeader)
     val named = cellsDf.filter(col("idx") > headerIdx)
       .select(headers.zipWithIndex.map { case (h, i) =>
         col("cells").getItem(i).as(if (h.isEmpty) s"_c$i" else h) }: _*)
-    enrich(conformColumns(named), sheetName, nanBoxCompat, decimalMoney)
+    enrichBody(conformColumns(named), sheetName, nanBoxCompat, decimalMoney)
   }
 
+  /** A collected header sample as header detection reads it: SQL nulls
+    * spelled "None" (Python's `str(None)`). */
+  private def sampleHead(rows: Seq[Seq[String]]): Seq[Seq[String]] =
+    rows.map(_.map(v => if (v == null) "None" else v))
+
   /** Currency conversion, period detection, provenance, box letter
-    * (fianl2.py:153-163). Year = mode of parsed Date years with pinned
-    * min-year tie-break (SURVEY.md A4).
+    * (fianl2.py:153-163), every column but the year: `year` is a typed
+    * null that only holds the column's place, so `withYear` (the mode
+    * of parsed Date years with pinned min-year tie-break, SURVEY.md A4)
+    * sets it without moving it.
     *
     * `box_was_null` records which rows had no Box value BEFORE
     * canonicalization — the always-on seam for the null-box diagnostic
@@ -158,26 +176,28 @@ object Conform {
     * the source, making every downstream aggregate exact and
     * partition-order-invariant; `Summary.vatSummary` detects the type
     * from the schema, so the flag is set once, here. */
-  def enrich(conformed: DataFrame, sheetName: String,
+  def enrichBody(conformed: DataFrame, sheetName: String,
       nanBoxCompat: Boolean = false, decimalMoney: Boolean = false): DataFrame = {
     val (monthAbbr, monthNum) = extractMonthFromSheet(sheetName)
     val asMoney: Column => Column =
       if (decimalMoney) c => currencyToAed(c).cast(DecimalType(18, 2))
       else currencyToAed(_)
-    val withMoney = conformed
+    conformed
       .withColumn("net_value", asMoney(col("net_value")))
       .withColumn("vat_value", asMoney(col("vat_value")))
       .withColumn("invoice_value", asMoney(col("invoice_value")))
-    val yearVal = modeYear(withMoney)
-    withMoney
       .withColumn("month", lit(monthAbbr))
       .withColumn("month_num", lit(monthNum))
-      .withColumn("year", lit(yearVal))
+      .withColumn("year", lit(null).cast(IntegerType))
       .withColumn("source_sheet", lit(sheetName))
       .withColumn("box_was_null", col("box").isNull)
       .withColumn("box", boxCanon(col("box"), nanBoxCompat))
       .withColumn("box_letter", boxLetter(col("box")))
   }
+
+  /** The year step: the sheet's period year as a literal, in place. */
+  def withYear(body: DataFrame, yearVal: Int): DataFrame =
+    body.withColumn("year", lit(yearVal))
 
   /** The typed Scala API over an enriched VAT table: compile-time field
     * access (`ds.map(_.net_value)`) after the dynamic conformance did
@@ -200,26 +220,17 @@ object Conform {
       .as[VatTransaction]
   }
 
-  /** A5 — per-year counts of parseable dates, for the reference's
-    * multiple-years warning (fianl2.py:124-125). */
-  def yearCounts(df: DataFrame): Map[Int, Long] = {
-    if (!df.columns.contains("date")) return Map.empty
-    df.select(year(parseDateMulti(col("date"))).as("y"))
-      .where(col("y").isNotNull)
-      .groupBy("y").count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-  }
+  /** The year of each row's parsed Date, null when unparseable or when
+    * the sheet has no `date` column. */
+  def parsedYear(df: DataFrame): Column =
+    if (df.columns.contains("date")) year(parseDateMulti(col("date")))
+    else lit(null).cast(IntegerType)
 
-  /** A4 — most frequent year in the Date column; ties → smallest year
-    * (pinned); no parseable dates → current year (fianl2.py:115-126). */
-  def modeYear(df: DataFrame): Int = {
-    if (!df.columns.contains("date")) return java.time.Year.now.getValue
-    val top = df
-      .select(year(parseDateMulti(col("date"))).as("y"))
-      .where(col("y").isNotNull)
-      .groupBy("y").count()
-      .orderBy(col("count").desc, col("y").asc)
-      .limit(1).collect()
-    if (top.isEmpty) java.time.Year.now.getValue else top(0).getInt(0)
-  }
+  /** A4 — most frequent year in the Date column, from per-year counts
+    * of parseable dates (`VatPipeline` takes every sheet's counts from
+    * one shared pass); ties → smallest year (pinned); no parseable
+    * dates → current year (fianl2.py:115-126). */
+  def modeYear(counts: Map[Int, Long]): Int =
+    if (counts.isEmpty) java.time.Year.now.getValue
+    else counts.minBy { case (y, n) => (-n, y) }._1
 }

@@ -32,10 +32,10 @@ object Summary {
   private case class BoxSpec(label: String, letter: String)
 
   /** Reference-parity summary over a conformed VAT table (post
-    * `Conform.enrich`): double money, round(2) like fianl2.py:195.
+    * `Conform.enrichBody`): double money, round(2) like fianl2.py:195.
     *
-    * Decimal money mode is schema-driven: when `Conform.enrich` typed the
-    * money columns DECIMAL(18,2) (the `decimalMoney` flag), the whole
+    * Decimal money mode is schema-driven: when `Conform.enrichBody` typed
+    * the money columns DECIMAL(18,2) (the `decimalMoney` flag), the whole
     * aggregate — sums, Box D subtraction, output columns — stays decimal
     * end-to-end (exact cents, no float drift, partition-order-invariant);
     * round(2) is then a no-op on an already-scale-2 type. */
@@ -141,10 +141,13 @@ object Summary {
           (col("net_vat_payable") * 100).cast("long")
             .as("net_vat_payable_cents"))
       else Seq(col("net_value"), col("vat_value"), col("net_vat_payable"))
+    // the output is 4 rows per period: sorted in ONE partition, not by a
+    // range-partitioned global sort (a sampling job plus a shuffle)
     long.join(broadcast(desc), Seq("fta_box"), "left")
       .select(Seq(col("year"), col("month_num"), col("period"),
         col("fta_box"), col("description")) ++ moneyCols: _*)
-      .orderBy(col("year"), col("month_num"), col("fta_box"))
+      .coalesce(1)
+      .sortWithinPartitions(col("year"), col("month_num"), col("fta_box"))
   }
 
   /** DuckDB oracle for the exact-cents mode (`vat_summary_decimal`):

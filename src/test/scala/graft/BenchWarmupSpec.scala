@@ -28,19 +28,13 @@ class BenchWarmupSpec extends AnyFunSuite with SparkSuite {
   }
 
   /** Run `body`, return the shuffle bytes its stages wrote. Listener
-    * events are async, so drain with a short settle loop (stable
-    * reading twice in a row), BOUNDED at ~30 s so trickling background
-    * stage events can never spin it forever. (This suite relies on
-    * sbt's default sequential forked-test execution — the shared
-    * SparkSession and the `graft.memo.root` patch below are not safe
-    * under parallel suites.) */
+    * events are async, so drain the listener bus before each reading.
+    * (This suite relies on sbt's default sequential forked-test
+    * execution — the shared SparkSession and the `graft.memo.root`
+    * patch below are not safe under parallel suites.) */
   private def settle(l: ShuffleListener): Long = {
-    var prev = -1L
-    var rounds = 0
-    while (prev != l.bytes.get && rounds < 150) {
-      prev = l.bytes.get; rounds += 1; Thread.sleep(200)
-    }
-    prev
+    org.apache.spark.graftbridge.ListenerDrain(spark.sparkContext)
+    l.bytes.get
   }
 
   private def shuffleOf(l: ShuffleListener)(body: => Unit): Long = {

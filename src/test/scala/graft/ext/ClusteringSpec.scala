@@ -119,8 +119,8 @@ class ClusteringSpec extends SparkSuite {
       val k = 8
       val res = Clustering.kcenterOn(emb, k)
       res.count(): Unit
-      // listener events are async; a short settle keeps the count honest
-      Thread.sleep(500)
+      // listener events are async; drain the bus so the count is whole
+      org.apache.spark.graftbridge.ListenerDrain(spark.sparkContext)
       // seed + (k-1) argmax rounds + the final toDF/count on driver
       // rows; a small slack absorbs Spark-internal bookkeeping jobs
       val n = jobs.get()

@@ -39,7 +39,8 @@ class SummarySpec extends SparkSuite {
   private lazy val boxedJan = Seq("A", "A", "B", "C")
 
   private def janConformed = {
-    val df = Conform.processCsvSheet(spark, janPath, "Jan 2024")
+    val df = new graft.api.VatPipeline(spark)
+      .processSheets(Seq(janPath -> "Jan 2024")).data
     // the raw sheet has no Box column → inject per-row boxes for the test
     import org.apache.spark.sql.expressions.Window
     val w = Window.orderBy(col("invoice_number"))
