@@ -1,9 +1,10 @@
 package graft.rel
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.core.{Bucketing, QueryDef, Tables, Width}
 
@@ -907,206 +908,124 @@ object Graph {
       .distinct()
   }
 
-  /** FUSED forward/backward min-label fixpoint: per vertex,
-    * f(v) = min({v} ∪ {f(u) : u→v}) and b(v) = min({v} ∪ {b(w) : v→w}),
-    * both advanced in the SAME superstep (forward messages carry f with
-    * a MaxValue b-sentinel, backward messages the reverse; the shared
-    * groupBy-min merges them — sentinels never survive because the
-    * state rows ride in the union). Halves the superstep count of
-    * running two fixpoints back-to-back: iterations = max of the two
-    * propagation radii, not their sum. Messaging is DELTA/FRONTIER
-    * (only vertices whose label improved last superstep send — exact
-    * for min-propagation, see the in-loop comment), and convergence
-    * detection is the frontier count: labels are monotone
-    * non-increasing, so an empty frontier is an exact fixpoint
-    * witness. The state is checkpointed LAZILY and the frontier-count
-    * aggregate is the action that materializes it — one job per
-    * superstep, no separate checkpoint job. `maxIters` must cover the
-    * min-label propagation
-    * radius of the largest same-class SCC — data-dependent, growing
-    * roughly with graph diameter; callers on deeper graphs should pass
-    * a larger budget (the failure mode is a loud require, never a
-    * silent wrong answer). */
-  private def fbFixpoint(e: DataFrame, verts: DataFrame,
-      maxIters: Int): (DataFrame, Long) = {
-    val sentinel = Long.MaxValue
-    // ONE tagged message relation instead of separate forward/backward
-    // joins: a forward message reads f at the edge's source and lands
-    // on its destination, a backward message reads b at the destination
-    // and lands on the source — tagging halves the per-superstep
-    // exchange count (narrow union of two projections, no extra
-    // shuffle). The relation is FIXED across the fixpoint, so it is
-    // hash-partitioned on the join key ONCE and persisted: the cached
-    // InMemoryRelation advertises that partitioning and every
-    // superstep's join reuses it — only the O(V) label side exchanges
-    // per superstep, never the 2|E| message rows (the r13 tier-2
-    // rehearsal measured the re-shuffled form at 20× bytes for 10×
-    // data once labels outgrew the broadcast threshold; this caps the
-    // per-superstep exchange at state size, the PageRank standing-
-    // adjacency discipline applied inside the query).
-    val msgs0 = e.select(col("src").as("key"), col("dst").as("out"),
-        lit(true).as("isf"))
-      .unionByName(e.select(col("dst").as("key"), col("src").as("out"),
-        lit(false).as("isf")))
-      .repartition(col("key")).persist()
-    var lbl = verts.select(col("v"), col("v").as("f"), col("v").as("b"),
-        lit(true).as("changed"))
+  /** Strongly connected components of the directed `src` → `dst` graph
+    * (non-null integral vertex ids). Output: one row per SCC —
+    * (scc_id = min member, scc_size, v_min, v_max). The edges are
+    * checkpointed at full width, then an iterative Tarjan labels every
+    * vertex with its SCC's minimum member inside ONE executor task
+    * ([[tarjanMinLabels]]), so the query is a fixed handful of jobs
+    * whatever the graph's depth — the serial finish of the "Multistep"
+    * scheme (Slota, Rajamanickam and Madduri, IPDPS 2014). A
+    * distributed forward/backward min-label refinement pays one job
+    * per superstep instead: ~50 jobs on the ~500-vertex sf0.01
+    * succession graph, where the wall is almost all driver
+    * coordination. The limit is one task's heap (see
+    * [[tarjanMinLabels]]); the largest benchmark input, sf0.1, has 183k
+    * edges. */
+  def stronglyConnectedComponents(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long"), col("dst").cast("long"))
       .localCheckpoint(true)
-    // empty vertex set: already converged (guards the empty-relation
-    // head() below; callers today pre-filter, but this helper
-    // shouldn't mine)
-    if (lbl.isEmpty) {
-      msgs0.unpersist()
-      return (lbl.select(col("v"), col("f"), col("b")), 0L)
-    }
-    try {
-      var iter = 0
-      var converged = false
-      // DELTA/FRONTIER messaging: only vertices whose (f, b) improved
-      // last superstep send. Exact for min-propagation — a vertex's
-      // current label persists in `lbl` across supersteps, so a resend
-      // of an unchanged label can never improve any receiver's min;
-      // the first superstep marks everyone changed, so every initial
-      // label is delivered once. Each superstep's groupBy therefore
-      // exchanges O(V + 2·E_active) rows instead of O(V + 2|E|), and
-      // the frontier decays geometrically once labels stabilize.
-      // Convergence detection is the frontier count itself — an empty
-      // frontier IS the fixpoint witness (replaces the r13 Σf/Σb
-      // DECIMAL checksum pair), and
-      // the count is the one materializing action per BLOCK: supersteps
-      // run in blocks of 2 between convergence checks. A 2-step unroll
-      // was measured SLOWER under full-width messaging (steady 5.40 s
-      // vs 4.52 s at sf0.1 — overshoot supersteps cost the whole 2|E|
-      // join), but DELTA messaging flips that trade: the one overshoot
-      // superstep a block boundary can add runs on an EMPTY frontier
-      // (no messages, every label unchanged), so its cost is the V-row
-      // agg alone while the block halves driver materializing actions
-      // — at cluster scale, half the DAG-scheduler round-trips for the
-      // same exchange volume. The survivor count rides the same
-      // aggregate (f <> b over the current labels), so the caller's
-      // per-peel survivors.count() job disappears too.
-      var survivors = -1L
-      while (iter < maxIters && !converged) {
-        var sub = 0
-        while (sub < 2 && iter < maxIters) {
-          val active = lbl.filter(col("changed"))
-            .select(col("v").as("key"), col("f"), col("b"))
-          val msgs = msgs0.join(active, Seq("key"))
-            .select(col("out").as("v"),
-              when(col("isf"), col("f")).otherwise(sentinel).as("f"),
-              when(col("isf"), lit(sentinel)).otherwise(col("b")).as("b"))
-          // old rows tagged so the same min-agg yields both the new
-          // label and the pre-superstep label — `changed` costs no
-          // second join and no second exchange
-          lbl = lbl
-            .select(col("v"), col("f"), col("b"), lit(true).as("isold"))
-            .unionByName(msgs.withColumn("isold", lit(false)))
-            .groupBy(col("v"))
-            .agg(min(col("f")).as("f"), min(col("b")).as("b"),
-              min(when(col("isold"), col("f"))).as("oldf"),
-              min(when(col("isold"), col("b"))).as("oldb"))
-            .select(col("v"), col("f"), col("b"),
-              (col("f") < col("oldf") || col("b") < col("oldb"))
-                .as("changed"))
-            .localCheckpoint(eager = false)
-          sub += 1
-          iter += 1
-        }
-        val r = lbl.agg(
-          sum(when(col("changed"), 1L).otherwise(0L)),
-          sum(when(col("f") =!= col("b"), 1L).otherwise(0L))).head()
-        val nChanged = r.getLong(0)
-        survivors = r.getLong(1)
-        converged = nChanged == 0L
-        if (sys.env.contains("SPARK_GRAFT_SCC_TRACE"))
-          println(s"scc block end $iter: frontier=$nChanged " +
-            s"survivors=$survivors")
-      }
-      require(converged, s"FW-BW fixpoint did not converge in $maxIters")
-      if (sys.env.contains("SPARK_GRAFT_SCC_TRACE"))
-        println(s"scc fixpoint: $iter supersteps")
-      (lbl.select(col("v"), col("f"), col("b")), survivors)
-    } finally msgs0.unpersist(): Unit
-  }
-
-  /** Strongly connected components via forward/backward min-label
-    * REFINEMENT (the FW-BW coloring scheme, Orzan 2004 / Fleischer
-    * et al. 2000, re-expressed as DataFrame fixpoints): each peel
-    * computes F(v) = min vertex reaching v and B(v) = min vertex v
-    * reaches, both inside v's current class; vertices with F = B are
-    * exactly SCC(F) and retire, survivors refine their class to the
-    * (F, B) pair, and edges whose endpoints now disagree on (F, B) are
-    * deleted — safe because every cycle through an SCC lies wholly
-    * inside one class, so no SCC-internal edge ever crosses classes.
-    * All classes refine IN PARALLEL inside the same DataFrames (class
-    * membership is data, not driver loop structure), which is what
-    * keeps peel count at the REFINEMENT depth (2–3 on the level-chain
-    * succession graph, independent of corpus size) instead of the
-    * condensation depth that one-SCC-at-a-time FW-BW peeling pays.
-    * Driver sees only per-iteration convergence scalars; state is
-    * O(|V|) labels + the shrinking O(|E|) edge relation, checkpoint-
-    * truncated every step (the BFS/CC lineage discipline). Output: one
-    * row per SCC — (scc_id = min member, scc_size, v_min, v_max). */
-  def stronglyConnectedComponents(edges: DataFrame, maxPeels: Int = 12,
-      maxIters: Int = 64): DataFrame = {
-    var e = edges.select(col("src"), col("dst")).localCheckpoint(true)
-    var remaining = e.select(col("src").as("v"))
-      .unionByName(e.select(col("dst").as("v")))
-      .distinct().localCheckpoint(true)
-    // Toy-scale wall anatomy, measured so nobody re-chases it: at
-    // sf0.1 (5k vertices) a StageProbe run summed all stages to ~1.5 s
-    // of a ~9 s wall — the rest is DRIVER coordination (AQE
-    // materializing each superstep exchange/broadcast as its own async
-    // query stage). Two levers were A/B'd in-window and REJECTED:
-    // volume-sizing the fixpoint width down via a child session
-    // (steady 5.1→7.6 s — single-partition supersteps serialize
-    // execution without cutting the coordination), and disabling AQE
-    // in that session (6.5–6.8 s vs 4.9–5.3 baseline — AQE's
-    // broadcast/coalesce decisions earn their round-trips even at this
-    // size). The remaining per-superstep fixed cost is irreducible
-    // without fusing supersteps into one job, which the convergence
-    // witness forbids; at corpus scale the wall is data-bound and none
-    // of this matters.
-    // empty seed fixes both degenerate-input reduce and result schema
-    val assigned = scala.collection.mutable.ArrayBuffer[DataFrame](
-      edges.sparkSession.range(0)
-        .select(col("id").as("v"), col("id").as("scc_id")))
-    var peel = 0
-    var nRemaining = remaining.count()
-    while (peel < maxPeels && nRemaining > 0) {
-      // the fixpoint's own convergence action materialized `lab`'s
-      // lineage tail AND counted the survivors (f <> b rode the same
-      // aggregate) — no per-peel count job
-      val (lab, nSurv) = fbFixpoint(e, remaining, maxIters)
-      assigned += lab.filter(col("f") === col("b"))
-        .select(col("v"), col("f").as("scc_id"))
-      nRemaining = nSurv
-      if (sys.env.contains("SPARK_GRAFT_SCC_TRACE"))
-        println(s"scc peel $peel: survivors=$nRemaining")
-      if (nRemaining > 0) {
-        remaining = lab.filter(col("f") =!= col("b")).select(col("v"))
-        // keep only intra-class edges between SURVIVORS: retired
-        // vertices have f = b, so the sf <> sb guard drops their
-        // incident edges in the same pass as the class filter
-        e = e
-          .join(lab.select(col("v").as("src"), col("f").as("sf"),
-            col("b").as("sb")), Seq("src"))
-          .join(lab.select(col("v").as("dst"), col("f").as("df"),
-            col("b").as("db")), Seq("dst"))
-          .filter(col("sf") === col("df") && col("sb") === col("db") &&
-            col("sf") =!= col("sb"))
-          .select(col("src"), col("dst"))
-          .localCheckpoint(true)
-      }
-      peel += 1
-    }
-    require(nRemaining == 0,
-      s"SCC refinement did not converge in $maxPeels peels")
-    assigned.reduce(_.unionByName(_))
+      .coalesce(1)
+      .mapPartitions(tarjanMinLabels)(Encoders.row(SccLabels))
       .groupBy(col("scc_id"))
       .agg(count(lit(1)).as("scc_size"), min(col("v")).as("v_min"),
         max(col("v")).as("v_max"))
       .orderBy(col("scc_id"))
+
+  /** (v, scc_id) vertex labels of [[stronglyConnectedComponents]]. */
+  private val SccLabels = StructType(Seq(
+    StructField("v", LongType), StructField("scc_id", LongType)))
+
+  /** Tarjan's SCC algorithm over one partition of (src, dst) rows,
+    * recursion-free (explicit DFS frame arrays, so path depth is bounded
+    * by the heap, not the thread stack) and on primitive arrays only:
+    * sorted distinct ids (a vertex IS its index, found by binary
+    * search), a CSR adjacency, and int/boolean DFS state. A component
+    * pops off the Tarjan stack whole, so its minimum member is the
+    * minimum index popped — ids are sorted. Heap: 40 bytes per edge
+    * (endpoints, id sort, CSR) and 33 per vertex (offsets, DFS state),
+    * at most ~110 bytes per edge when every endpoint is distinct: ~20 MB
+    * for sf0.1's 183k edges, ~110 MB per million edges.
+    * Emits (v, min member of SCC(v)) per vertex. */
+  private def tarjanMinLabels(rows: Iterator[Row]): Iterator[Row] = {
+    val srcB = new scala.collection.mutable.ArrayBuilder.ofLong
+    val dstB = new scala.collection.mutable.ArrayBuilder.ofLong
+    rows.foreach { r => srcB += r.getLong(0); dstB += r.getLong(1) }
+    val src = srcB.result()
+    val dst = dstB.result()
+    val m = src.length
+    // sorted distinct vertex ids in ids(0 until n)
+    val ids = java.util.Arrays.copyOf(src, 2 * m)
+    System.arraycopy(dst, 0, ids, m, m)
+    java.util.Arrays.sort(ids)
+    var n = 0
+    var i = 0
+    while (i < ids.length) {
+      if (n == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 }
+      i += 1
+    }
+    def vertex(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, id)
+    // CSR adjacency: out-edges of v are adj(off(v) until off(v + 1))
+    val from = new Array[Int](m)
+    val off = new Array[Int](n + 1)
+    i = 0
+    while (i < m) { from(i) = vertex(src(i)); off(from(i) + 1) += 1; i += 1 }
+    i = 0
+    while (i < n) { off(i + 1) += off(i); i += 1 }
+    val fill = java.util.Arrays.copyOf(off, n)
+    val adj = new Array[Int](m)
+    i = 0
+    while (i < m) {
+      adj(fill(from(i))) = vertex(dst(i)); fill(from(i)) += 1; i += 1
+    }
+    // Tarjan state; `order` = discovery index (-1 unvisited), the DFS
+    // frames are (callV, callE = next out-edge to scan)
+    val order = Array.fill(n)(-1)
+    val low = new Array[Int](n)
+    val onStack = new Array[Boolean](n)
+    val stack = new Array[Int](n)
+    val callV = new Array[Int](n)
+    val callE = new Array[Int](n)
+    val label = new Array[Int](n)
+    var sp = 0
+    var cp = 0
+    var next = 0
+    def visit(v: Int): Unit = {
+      order(v) = next; low(v) = next; next += 1
+      stack(sp) = v; sp += 1; onStack(v) = true
+      callV(cp) = v; callE(cp) = off(v); cp += 1
+    }
+    var root = 0
+    while (root < n) {
+      if (order(root) < 0) visit(root)
+      while (cp > 0) {
+        val v = callV(cp - 1)
+        val k = callE(cp - 1)
+        if (k < off(v + 1)) {
+          callE(cp - 1) = k + 1
+          val w = adj(k)
+          if (order(w) < 0) visit(w)
+          else if (onStack(w)) low(v) = math.min(low(v), order(w))
+        } else {
+          cp -= 1
+          if (low(v) == order(v)) {
+            var top = sp
+            var least = Int.MaxValue
+            while ({ top -= 1; least = math.min(least, stack(top))
+              stack(top) != v }) ()
+            while (sp > top) {
+              sp -= 1; label(stack(sp)) = least; onStack(stack(sp)) = false
+            }
+          }
+          if (cp > 0) {
+            val u = callV(cp - 1)
+            low(u) = math.min(low(u), low(v))
+          }
+        }
+      }
+      root += 1
+    }
+    Iterator.range(0, n).map(v => Row(ids(v), ids(label(v))))
   }
 
   /** Oracle: exact transitive closure as a recursive CTE; v ∈ SCC(m)
@@ -1996,8 +1915,8 @@ object Graph {
     // blocks the driver until the CALLER's action, which materializes
     // all `rounds` relaxations as one job. Eager checkpoints here cost
     // one driver-blocking job per round for state no driver decision
-    // ever reads (the fixed-horizon loop has no convergence check —
-    // contrast fbFixpoint, whose frontier count IS a driver decision).
+    // ever reads (the fixed-horizon loop has no convergence check, so
+    // no frontier count is a driver decision).
     (1 to rounds).foldLeft(d0) { (d, _) =>
       d.unionByName(
           d.join(c, col("node") === col("src"))

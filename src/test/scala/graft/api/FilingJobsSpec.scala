@@ -1,10 +1,6 @@
 package graft.api
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.graftbridge.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.SparkSuite
 
@@ -28,24 +24,6 @@ class FilingJobsSpec extends SparkSuite {
     }
     w.close()
     (f.getAbsolutePath, name)
-  }
-
-  /** Jobs started while `body` runs, with the listener bus drained on
-    * both sides so no event is missed or carried over. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    ListenerDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = body
-      ListenerDrain(spark.sparkContext)
-      (out, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   private def filing(sheets: Seq[(String, String)]): (Int, Int) = {

@@ -1,5 +1,6 @@
 package graft.rel
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -824,7 +825,7 @@ class GraphSpec extends SparkSuite {
 
   // ------------------------------------------------------- directed SCC
 
-  private def sccMap(e: org.apache.spark.sql.DataFrame) =
+  private def sccMap(e: DataFrame) =
     Graph.stronglyConnectedComponents(e)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
@@ -846,8 +847,8 @@ class GraphSpec extends SparkSuite {
     assert(sccMap(e) === Map(1L -> ((4L, 1L, 4L))))
   }
 
-  /** Pure DAG: every vertex is its own singleton SCC — the all-
-    * refinement path (no peel ever finds a cycle). */
+  /** Pure DAG: every vertex is its own singleton SCC — every DFS
+    * frame closes a component of one. */
   test("scc: path DAG yields all singletons") {
     val e = edges(1L -> 2L, 2L -> 3L, 3L -> 4L)
     assert(sccMap(e) === Map(
@@ -875,9 +876,11 @@ class GraphSpec extends SparkSuite {
     e.unpersist(): Unit
   }
 
-  /** Bit-identity across partitionings: min-label fixpoints and the
-    * refinement are integer-exact, so 1-partition and 8-partition runs
-    * must agree row-for-row. */
+  /** Bit-identity across partitionings: the one-task Tarjan visits
+    * vertices and edges in the row order its single partition receives,
+    * which follows the input partitioning, but labels each vertex with
+    * its component's minimum — so 1-partition and 8-partition runs must
+    * agree row-for-row. */
   test("scc: bit-identical across partitionings") {
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
     def run(parts: Int) =
@@ -886,5 +889,45 @@ class GraphSpec extends SparkSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1),
           r.getLong(2), r.getLong(3))).toSeq
     assert(run(1) === run(8))
+  }
+
+  /** Job budget of the declared `graph_scc` query on the fixture: the
+    * edge build and checkpoint, the one-task Tarjan and the final
+    * aggregate — a fixed handful of jobs, not one per superstep. */
+  test("scc: graph_scc submits at most 5 jobs on the fixture") {
+    val q = Graph.queries.toMap.apply("graph_scc")
+    val (rows, jobs) = jobsOf(q.fn(spark, sfDir).collect())
+    assert(rows.nonEmpty)
+    assert(jobs <= 5, s"graph_scc took $jobs jobs")
+  }
+
+  test("scc: an empty edge set yields no rows") {
+    val out = Graph.stronglyConnectedComponents(
+      Seq.empty[(Long, Long)].toDF("src", "dst"))
+    assert(out.columns.toSeq === Seq("scc_id", "scc_size", "v_min", "v_max"))
+    assert(out.isEmpty)
+  }
+
+  /** The one-task Tarjan at scale: a 200k-vertex cycle (one giant SCC)
+    * and a 200k-vertex path (all singletons), each with self-loops and
+    * duplicate edges mixed in. DFS depth is the vertex count on both,
+    * so a recursive Tarjan would overflow the thread stack here. */
+  test("scc: one-task Tarjan on a 200k-vertex cycle and a 200k-vertex path") {
+    val n = 200000L
+    def graph(dst: Column, arcs: Long) = {
+      val base = spark.range(arcs).select(col("id").as("src"), dst.as("dst"))
+      val e = base
+        .unionByName(base.filter(col("src") % 7 === 0))
+        .unionByName(spark.range(0, n, 1000)
+          .select(col("id").as("src"), col("id").as("dst")))
+      Graph.stronglyConnectedComponents(e)
+    }
+    val cycle = graph((col("id") + 1) % n, n).collect().toSeq
+    assert(cycle === Seq(Row(0L, n, 0L, n - 1)))
+    val path = graph(col("id") + 1, n - 1)
+    assert(path.count() === n)
+    assert(path.filter(col("scc_size") =!= 1L ||
+      col("scc_id") =!= col("v_min") || col("v_min") =!= col("v_max"))
+      .isEmpty, "a path's SCCs are its singletons")
   }
 }
