@@ -26,7 +26,7 @@ object SparkEntry {
         Summary.lineitemVatSummarySql),
       // the exact-cents output mode: money stays DECIMAL(18,2) end to
       // end instead of surfacing as DOUBLE (golden-replay twin of the
-      // Conform.enrichBody decimalMoney flag, here behind the oracle gate)
+      // Conform.Projection decimalMoney flag, here behind the oracle gate)
       "vat_summary_decimal" -> QueryDef(
         (s: SparkSession, d: String) =>
           Summary.lineitemVatSummary(s, d, decimalMoney = true),

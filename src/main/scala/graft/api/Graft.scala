@@ -1,9 +1,10 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.vat.{Conform, Summary}
+import graft.vat.Conform.SheetLayout
 
 /** Front door of the engine: everything the reference app does
   * (fianl2.py:198-259), as a library a reference user can switch to.
@@ -11,7 +12,9 @@ import graft.vat.{Conform, Summary}
   * Reference flow → engine call:
   *  - upload workbook, enumerate sheets (fianl2.py:212-213) →
   *    `VatPipeline.processSheets` over (csvPath, sheetName) pairs
-  *  - per-sheet clean/conform (fianl2.py:130-164) → `Conform.csvSheetBody`
+  *  - per-sheet clean/conform (fianl2.py:130-164) → one
+  *    `Conform.SheetLayout` per sheet, every sheet conformed by ONE
+  *    `Conform.Projection`
   *  - error-tolerant ingest: failed sheets skipped, error surfaced
   *    (fianl2.py:216-221) → `VatResult.failures`
   *  - period mapping report (fianl2.py:230-233) → `VatResult.mapping`
@@ -165,6 +168,13 @@ final class VatPipeline(spark: SparkSession) {
     * Sheets that fail to parse are skipped and reported, like the
     * reference.
     *
+    * Per sheet, only metadata is read: the CSV schema and the ≤30-row
+    * head its `SheetLayout` comes from. Each file then becomes a narrow
+    * leaf of cells rows (`zipWithIndex` keeps the file's row order, so
+    * the preamble drops by index, without a second read); the leaves
+    * are the only per-sheet branches, and one `Conform.Projection`
+    * conforms them all.
+    *
     * `nanBoxCompat = true` replays the reference's pandas `astype(str)`
     * quirk: null Box cells become the literal "NAN", which the contains
     * matching counts into Box A with box letter "N" (fianl2.py:162-163,
@@ -180,58 +190,75 @@ final class VatPipeline(spark: SparkSession) {
   def processSheets(sheets: Seq[(String, String)],
       config: VatConfig): VatResult = {
     val results = sheets.map { case (path, name) =>
-      try Right(name -> Conform.csvSheetBody(spark, path, name,
-        config.nanBoxCompat, config.decimalMoney))
-      catch { case e: Exception => Left(SheetFailure(name, String.valueOf(e.getMessage))) }
+      try {
+        val raw = spark.read
+          .option("header", "false").option("inferSchema", "false")
+          // RFC-4180 quoting: xlsx-extracted sheets carry doubled-quote
+          // escapes and may hold newlines inside quoted cells; multiLine
+          // keeps such records whole (sheets are interactive-upload
+          // sized, so losing intra-file split parallelism is irrelevant)
+          .option("escape", "\"").option("multiLine", "true")
+          .csv(path)
+        val head = raw.limit(30).collect().toSeq
+          .map(r => Seq.tabulate(r.length)(r.getString))
+        Right(SheetLayout(name, head) -> raw)
+      } catch { case e: Exception => Left(SheetFailure(name, String.valueOf(e.getMessage))) }
     }
-    finish(results.collect { case Right(r) => r },
-      results.collect { case Left(f) => f }, config)
+    val read = results.collect { case Right(r) => r }
+    val leaves = read.zipWithIndex.map { case ((_, raw), pos) =>
+      raw.rdd.zipWithIndex().map { case (r, i) =>
+        Row(pos, i, Seq.tabulate(r.length)(r.getString))
+      }
+    }
+    finish(spark.createDataFrame(spark.sparkContext.union(leaves), Conform.Cells),
+      read.map(_._1).toIndexedSeq, results.collect { case Left(f) => f }, config)
   }
 
-  /** Shared tail of every ingest front door. `frames` are sheet bodies
-    * (`Conform.enrichBody`, year not yet set). ONE grouped pass over
-    * all of them — never a pass per sheet — counts rows, null-box rows
-    * and rate outliers per (sheet position, parsed year). From those
-    * counts the driver derives each sheet's mode year (keyed by
-    * position: two sheets may share a name), the multiple-years
-    * warnings (frame order) and the null-box and rate warnings (summed
-    * by sheet name, in name order). Null-box rows change boxes between
-    * compat modes, so their existence is always surfaced; the rate
-    * check flags Box-A-membership rows whose VAT is not net × vatRate
-    * within tolerance (the sidebar rate input put to real use: it
-    * catches mis-keyed or mis-rated invoices before they reach the
-    * return). */
-  private def finish(frames: Seq[(String, DataFrame)],
+  /** Shared tail of every ingest front door: `cells` rows (`Conform.Cells`)
+    * of the sheets `layouts`, by position, all conformed by ONE
+    * `Conform.Projection`. ONE grouped pass over it — never a pass per
+    * sheet — counts rows, null-box rows and rate outliers per (sheet
+    * position, parsed year). From those counts the driver derives each
+    * sheet's mode year (keyed by position: two sheets may share a name),
+    * the multiple-years warnings (sheet order) and the null-box and rate
+    * warnings (summed by sheet name, in name order). Null-box rows change
+    * boxes between compat modes, so their existence is always surfaced;
+    * the rate check flags Box-A-membership rows whose VAT is not
+    * net × vatRate within tolerance (the sidebar rate input put to real
+    * use: it catches mis-keyed or mis-rated invoices before they reach
+    * the return). */
+  private def finish(cells: DataFrame, layouts: IndexedSeq[SheetLayout],
       failures: Seq[SheetFailure], config: VatConfig): VatResult = {
-    require(frames.nonEmpty, "No valid sheets processed")
-    val rateOutlier = col("box").contains("A") &&
-      col("net_value").isNotNull && col("vat_value").isNotNull &&
-      abs(col("vat_value").cast("double") -
-        col("net_value").cast("double") * lit(config.vatRate)) >
+    require(layouts.nonEmpty, "No valid sheets processed")
+    val conform = new Conform.Projection(layouts, config.nanBoxCompat,
+      config.decimalMoney)
+    val body = conform.body(cells)
+    val rateOutlier = conform("box").contains("A") &&
+      conform("net_value").isNotNull && conform("vat_value").isNotNull &&
+      abs(conform("vat_value").cast("double") -
+        conform("net_value").cast("double") * lit(config.vatRate)) >
         lit(config.rateTolerance)
     // rows: (pos, y, n, n_null_box, n_rate_outliers)
-    val counts = frames.zipWithIndex.map { case ((_, body), i) =>
-      body.select(lit(i).as("pos"), Conform.parsedYear(body).as("y"),
-        col("box_was_null"), rateOutlier.as("rate_outlier"))
-    }.reduce(_.union(_))
+    val counts = body.select(col("pos"), conform.parsedYear.as("y"),
+        conform("box_was_null").as("box_was_null"), rateOutlier.as("rate_outlier"))
       .groupBy(col("pos"), col("y")).agg(
         count(lit(1)).as("n"),
         sum(when(col("box_was_null"), 1L).otherwise(0L)).as("n_null_box"),
         sum(when(col("rate_outlier"), 1L).otherwise(0L)).as("n_rate_outliers"))
       .collect().toSeq
     val byPos = counts.groupBy(_.getInt(0))
-    val yearCounts = frames.indices.map(i =>
+    val yearCounts = layouts.indices.map(i =>
       byPos.getOrElse(i, Nil).filterNot(_.isNullAt(1))
         .map(r => r.getInt(1) -> r.getLong(2)).toMap)
     // A5 — the reference's "Multiple years detected" warning
     // (fianl2.py:124-125), surfaced per sheet
-    val yearWarnings = frames.zip(yearCounts).collect {
-      case ((name, _), ys) if ys.size > 1 =>
-        s"Sheet '$name': multiple years detected: " +
+    val yearWarnings = layouts.zip(yearCounts).collect {
+      case (l, ys) if ys.size > 1 =>
+        s"Sheet '${l.label}': multiple years detected: " +
           ys.toSeq.sorted.map { case (y, n) => s"$y→$n" }.mkString(", ") +
           " — using most frequent year."
     }
-    val diag = counts.groupMapReduce(r => frames(r.getInt(0))._1)(
+    val diag = counts.groupMapReduce(r => layouts(r.getInt(0)).label)(
       r => (r.getLong(3), r.getLong(4))) { case ((a, b), (x, y)) => (a + x, b + y) }
       .toSeq.sortBy(_._1)(BinaryOrder)
     val nullBoxWarnings = diag.collect { case (name, (n, _)) if n > 0 =>
@@ -246,10 +273,8 @@ final class VatPipeline(spark: SparkSession) {
         f"Sheet '$name': $n Box-A rows where " +
           f"|vat − net × ${config.vatRate * 100}%.2f%%| > ${config.rateTolerance}%.2f (rate check)."
       }
-    val all = frames.zip(yearCounts).map { case ((_, body), ys) =>
-      Conform.withYear(body, Conform.modeYear(ys))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
-    VatResult(all, failures, yearWarnings ++ nullBoxWarnings ++ rateWarnings)
+    VatResult(conform.rows(body, yearCounts.map(Conform.modeYear)), failures,
+      yearWarnings ++ nullBoxWarnings ++ rateWarnings)
   }
 
   /** The reference's actual front door (fianl2.py:212-221): one xlsx
@@ -273,16 +298,19 @@ final class VatPipeline(spark: SparkSession) {
   /** Bulk-backfill front door: MANY workbooks decoded on EXECUTORS.
     * `binaryFile` ships each workbook's bytes to a partition, the same
     * StAX codec (`sources.Xlsx.readAllSheets`) parses there, and only
-    * the ≤30-row header samples and per-sheet metadata ever reach the
-    * driver — a backfill of thousands of workbooks parallelizes across
-    * the cluster instead of serializing through driver-side decode.
-    * The interactive path (`processWorkbook`) stays for single uploads
-    * (mirrors the reference's upload flow, fianl2.py:212). Sheet labels
-    * are `<workbook basename>/<sheet name>` so same-named sheets across
-    * workbooks stay distinct. Decoded cells are persisted once (every
-    * per-sheet conform filters the cache, not the zip codec) and
-    * lazily back the returned frames — release is the caller's
-    * contract (`spark.catalog.clearCache()`), as with every standing
+    * the ≤30-row header samples ever reach the driver — a backfill of
+    * thousands of workbooks parallelizes across the cluster instead of
+    * serializing through driver-side decode. The interactive path
+    * (`processWorkbook`) stays for single uploads (mirrors the
+    * reference's upload flow, fianl2.py:212). Sheet labels are
+    * `<workbook basename>/<sheet name>` so same-named sheets across
+    * workbooks stay distinct. Decoded cells are persisted once, and ONE
+    * `Conform.Projection` reads them directly (a literal label →
+    * position map keys each row to its sheet's layout): the plan has
+    * no per-sheet branch, so its size, planning time and generated code
+    * do not grow with the number of sheets. The cache lazily backs the
+    * returned frames — release is the caller's contract
+    * (`spark.catalog.clearCache()`), as with every standing
     * intermediate in this engine. */
   def processWorkbooks(pathOrGlob: String,
       config: VatConfig = VatConfig()): VatResult = {
@@ -312,15 +340,15 @@ final class VatPipeline(spark: SparkSession) {
     val heads = decoded.filter(col("idx") < 30).collect().toSeq
       .groupBy(_.getString(0)).toSeq.sortBy(_._1)(BinaryOrder)
     val results = heads.map { case (label, rows) =>
-      try Right(label -> Conform.cellsSheetBody(
-        decoded.filter(col("sheet_label") === label).drop("sheet_label"),
-        rows.sortBy(_.getLong(1)).map(_.getSeq[String](2)),
-        label, config.nanBoxCompat, config.decimalMoney))
+      try Right(SheetLayout(label, rows.sortBy(_.getLong(1)).map(_.getSeq[String](2))))
       catch { case e: Exception =>
         Left(SheetFailure(label, String.valueOf(e.getMessage))) }
     }
-    finish(results.collect { case Right(r) => r },
-      results.collect { case Left(f) => f }, config)
+    val layouts = results.collect { case Right(l) => l }.toIndexedSeq
+    val pos = typedlit(layouts.map(_.label).zipWithIndex.toMap)
+    finish(decoded.select(element_at(pos, col("sheet_label")).as("pos"),
+        col("idx"), col("cells")),
+      layouts, results.collect { case Left(f) => f }, config)
   }
 
   /** S3 — sheet enumeration: one CSV per sheet in a directory, sheet

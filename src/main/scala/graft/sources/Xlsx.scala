@@ -18,9 +18,9 @@ import scala.collection.mutable
   * This is a DRIVER-SIDE metadata/ingest shim by design: workbooks are
   * interactive uploads (the reference's largest evidenced file is
   * ~440 KB), not cluster-scale data. Sheets are extracted to CSV files
-  * that the distributed pipeline (`Conform.csvSheetBody`) then reads
-  * through Spark's parallel CSV reader — the engine never parses XML on
-  * executors. Cell coverage: shared strings (`t="s"`), inline strings
+  * that the distributed pipeline (`VatPipeline.processSheets`) then
+  * reads through Spark's parallel CSV reader; only the bulk backfill
+  * (`readAllSheets`) parses XML on executors. Cell coverage: shared strings (`t="s"`), inline strings
   * (`t="inlineStr"`), formula-cached strings (`t="str"`), booleans
   * (`t="b"`), and raw numerics — which is how Excel stores dates too
   * (serial numbers; `VatFunctions.parseDateMulti` already decodes them).

@@ -1,6 +1,8 @@
 package graft.vat
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -31,19 +33,25 @@ case class VatTransaction(
 /** Schema-on-read conformance: the reference's fuzzy header pipeline
   * (fianl2.py:130-150) re-expressed for Spark.
   *
-  * Header-row detection and header normalization are *metadata* ops — they
-  * run driver-side over a bounded ≤30-row sample (one tiny job per CSV
-  * sheet; one job for ALL sheets of a bulk backfill), never over the full
-  * data (SURVEY.md §4.1: the reference reads every sheet twice; we read
-  * the head once for metadata and the body once for data).
+  * The reference runs `process_sheet` once per sheet and concatenates
+  * the results (fianl2.py:130-164, 212-221). Here every sheet of a
+  * filing or a backfill conforms through ONE projection over ONE cells
+  * relation, `(pos INT, idx BIGINT, cells ARRAY<STRING>)`: `pos` is the
+  * sheet's position among the sheets conformed together, `idx` the row's
+  * index within its sheet and `cells` the row's dense cells, SQL null
+  * for an empty cell. What differs between sheets is metadata: a
+  * driver-side [[SheetLayout]], read from the sheet's ≤30-row head (one
+  * tiny job per CSV sheet; one job for ALL sheets of a bulk backfill),
+  * never from the full data. [[Projection]] folds the layouts into the
+  * select as literal arrays indexed by `pos`, so the plan, its planning
+  * time and its generated code do not grow with the number of sheets.
   *
-  * A sheet is conformed in two steps: a *body* (`csvSheetBody` /
-  * `cellsSheetBody` → `enrichBody`, every column but the year) and a
-  * *year step* (`withYear`). The year is the one per-sheet fact that
-  * needs a pass over the data; `VatPipeline` — the only ingest entry
-  * point — counts `parsedYear` for all sheets of a filing in ONE grouped
-  * pass, together with the null-box and rate diagnostics, and picks
-  * each sheet's `modeYear` from those counts.
+  * The year is the one per-sheet fact that needs a pass over the data;
+  * `VatPipeline` — the only ingest entry point — counts
+  * [[Projection.parsedYear]] for all sheets of a filing in ONE grouped
+  * pass, together with the null-box and rate diagnostics, picks each
+  * sheet's `modeYear` from those counts and hands the years to
+  * [[Projection.rows]].
   */
 object Conform {
 
@@ -85,119 +93,207 @@ object Conform {
     }
   }
 
-  /** P1+P2 — rename known headers to canonical names and add missing
-    * canonical columns as string nulls (fianl2.py:139-150). Unknown
-    * columns are preserved (the reference keeps them too). */
-  def conformColumns(df: DataFrame): DataFrame = {
-    val renamed = df.columns.foldLeft(df) { (acc, raw) =>
-      val norm = normalizeHeader(raw)
-      HeaderMap.get(norm) match {
-        case Some(canon) => acc.withColumnRenamed(raw, canon)
-        case None        => acc
+  /** Money columns: converted to AED from their cell (P3). */
+  private val MoneyCols = Seq("net_value", "vat_value", "invoice_value")
+
+  /** Columns every sheet gets from enrichment, in the order they are
+    * added; none reads a cell of its own. */
+  private val EnrichedCols = Seq("month", "month_num", "year",
+    "source_sheet", "box_was_null", "box_letter")
+
+  /** Columns the conform reads; a sheet where one of them names more
+    * than one column is refused. */
+  private val ReadCols = MoneyCols ++ Seq("box", "date")
+
+  /** One sheet's conform as data: `label` is its `source_sheet`,
+    * `headerRow` the `idx` of its header row (body rows come after it),
+    * `columns` its output columns in order, each with the index of the
+    * cell behind it (none for a missing required column and for the
+    * enriched ones), and `month`/`monthNum` its period from the label. */
+  final case class SheetLayout(label: String, headerRow: Int,
+      columns: Seq[(String, Option[Int])], month: String, monthNum: Int) {
+
+    /** The cell of the column named exactly `date`, the only one the
+      * year is parsed from (a `DATE` header keeps its cells but not the
+      * year). */
+    def dateCell: Option[Int] = columns.collectFirst { case ("date", c) => c }.flatten
+
+    /** The cell behind each of `names` (a [[SheetLayout.union]] order):
+      * the k-th column named like `names(j)` (case-insensitive, k
+      * counting earlier equal names) or none. */
+    def cellsFor(names: Seq[String]): Seq[Option[Int]] =
+      names.indices.map { j =>
+        val k = names.take(j).count(_.equalsIgnoreCase(names(j)))
+        columns.filter(_._1.equalsIgnoreCase(names(j))).lift(k).flatMap(_._2)
       }
+  }
+
+  object SheetLayout {
+
+    /** The layout of a sheet from its head, the first ≤30 rows of cells
+      * (SQL null for an empty cell), by the reference's naming rules:
+      *
+      *  - the header row is `detectHeaderRow` of the head with nulls
+      *    spelled "None" (Python's `str(None)`, so an empty header cell
+      *    names a `None` column); a header blank after `normalizeHeader`
+      *    names column i `_c<i>`
+      *  - P1: a header whose normalized text is in `HeaderMap` renames
+      *    every column it equals ignoring case — Spark's default name
+      *    resolution, which every later step follows too
+      *  - P2: required columns no header names are appended as nulls
+      *  - P3: money and box columns keep their place under their
+      *    canonical names; the enriched columns replace same-named
+      *    headers in place or are appended
+      *
+      * A sheet where a column the conform reads (`ReadCols`) names two
+      * columns fails with the analyzer's own ambiguous-reference error. */
+    def apply(label: String, head: Seq[Seq[String]]): SheetLayout = {
+      val sample = head.map(_.map(v => if (v == null) "None" else v))
+      val headerRow = detectHeaderRow(sample)
+      val raw = sample(headerRow).map(normalizeHeader).zipWithIndex
+        .map { case (h, i) => if (h.isEmpty) s"_c$i" else h }
+      val renamed = raw.foldLeft(raw) { (names, h) =>
+        HeaderMap.get(h).fold(names)(canon =>
+          names.map(n => if (n.equalsIgnoreCase(h)) canon else n))
+      }
+      val present = renamed.map(_.toLowerCase)
+      val conformed = renamed.zipWithIndex.map { case (n, i) => n -> Option(i) } ++
+        RequiredCols.filterNot(present.contains).map(_ -> Option.empty[Int])
+      ReadCols.foreach { c =>
+        val hits = conformed.map(_._1).filter(_.equalsIgnoreCase(c))
+        if (hits.size > 1) throw new AnalysisException("AMBIGUOUS_REFERENCE",
+          Map("name" -> s"`$c`", "referenceNames" -> hits.map(h => s"`$h`").mkString("[", ", ", "]")))
+      }
+      val canonical = conformed.map { case (n, cell) =>
+        (if ((MoneyCols :+ "box").exists(n.equalsIgnoreCase)) n.toLowerCase else n) -> cell
+      }
+      val columns = EnrichedCols.foldLeft(canonical) { (cols, e) =>
+        if (cols.exists(_._1.equalsIgnoreCase(e)))
+          cols.map { case (n, cell) => if (n.equalsIgnoreCase(e)) e -> None else n -> cell }
+        else cols :+ (e -> None)
+      }
+      val (month, monthNum) = extractMonthFromSheet(label)
+      SheetLayout(label, headerRow, columns, month, monthNum)
     }
-    val missing = RequiredCols.filterNot(renamed.columns.map(_.toLowerCase).contains)
-    missing.foldLeft(renamed)((acc, c) => acc.withColumn(c, lit(null).cast(StringType)))
+
+    /** The output columns of sheets conformed together, in
+      * `unionByName(allowMissingColumns = true)` order: the first sheet's
+      * columns, then each later sheet's new ones, names matched ignoring
+      * case (a sheet's second `None` column is a new one). */
+    def union(layouts: Seq[SheetLayout]): Seq[String] =
+      layouts.foldLeft(Vector.empty[String]) { (out, l) =>
+        l.columns.map(_._1).foldLeft((out, Map.empty[String, Int])) {
+          case ((acc, seen), n) =>
+            val k = seen.getOrElse(n.toLowerCase, 0)
+            (if (acc.count(_.equalsIgnoreCase(n)) > k) acc else acc :+ n,
+              seen.updated(n.toLowerCase, k + 1))
+        }._1
+      }
   }
 
-  /** One "sheet" (a headerless CSV file with possible junk preamble) →
-    * conformed, typed, enriched VAT body, year not yet set (see
-    * `enrichBody`). Mirrors process_sheet (fianl2.py:130-164) but
-    * distributed:
+  /** The schema of the cells relation every sheet is conformed from. */
+  val Cells: StructType = StructType(Seq(StructField("pos", IntegerType),
+    StructField("idx", LongType), StructField("cells", ArrayType(StringType))))
+
+  /** Every sheet's conform as one projection over the cells relation
+    * (`Cells`), sheet `layouts(pos)` for the rows of position `pos`.
+    * Each output column is ONE expression for all sheets; a per-sheet
+    * value — header row, cell index, month, label, year — is a lookup
+    * by `pos` in a literal array, so the generated code does not depend
+    * on the layout values and a row with no layout (`pos` null) drops.
     *
-    *  - header detection on a driver-side `limit(30)` sample
-    *  - preamble rows dropped by zipWithIndex (no second file read)
-    *  - currency conversion / box canon / period literals as Column ops
-    */
-  def csvSheetBody(spark: SparkSession, path: String, sheetName: String,
-      nanBoxCompat: Boolean = false, decimalMoney: Boolean = false): DataFrame = {
-    val raw = spark.read
-      .option("header", "false").option("inferSchema", "false")
-      // RFC-4180 quoting: xlsx-extracted sheets carry doubled-quote
-      // escapes and may hold newlines inside quoted cells; multiLine
-      // keeps such records whole (sheets are interactive-upload sized,
-      // so losing intra-file split parallelism is irrelevant)
-      .option("escape", "\"").option("multiLine", "true")
-      .csv(path)
-    val head = sampleHead(raw.limit(30).collect().toSeq
-      .map(r => Seq.tabulate(r.length)(r.getString)))
-    val headerIdx = detectHeaderRow(head)
-    val headers = head(headerIdx).map(normalizeHeader)
-
-    // drop preamble + header row; keep partition-order semantics of the file
-    val bodyRdd = raw.rdd.zipWithIndex()
-      .filter(_._2 > headerIdx).map(_._1)
-    val named = spark.createDataFrame(bodyRdd, raw.schema)
-      .toDF(headers.zipWithIndex.map { case (h, i) => if (h.isEmpty) s"_c$i" else h }: _*)
-
-    enrichBody(conformColumns(named), sheetName, nanBoxCompat, decimalMoney)
-  }
-
-  /** `csvSheetBody`'s twin over ALREADY-DECODED cells — `cellsDf` is
-    * (idx BIGINT, cells ARRAY<STRING>) rows from the executor-side
-    * workbook codec (`sources.Xlsx.readAllSheets`), dense and padded,
-    * with empty cells as SQL nulls (mirroring what the driver path's
-    * CSV round trip reads back). `head` is the sheet's first ≤30 rows
-    * of cells, in `idx` order, which the caller already holds — a bulk
-    * backfill collects every sheet's sample in one job. Same preamble
-    * drop, same conform/enrich — the decode TRANSPORT is the only
-    * difference, so the two paths agree bit-for-bit (GraftApiSpec pins
-    * it). */
-  def cellsSheetBody(cellsDf: DataFrame, head: Seq[Seq[String]],
-      sheetName: String, nanBoxCompat: Boolean = false,
-      decimalMoney: Boolean = false): DataFrame = {
-    val sample = sampleHead(head)
-    val headerIdx = detectHeaderRow(sample)
-    val headers = sample(headerIdx).map(normalizeHeader)
-    val named = cellsDf.filter(col("idx") > headerIdx)
-      .select(headers.zipWithIndex.map { case (h, i) =>
-        col("cells").getItem(i).as(if (h.isEmpty) s"_c$i" else h) }: _*)
-    enrichBody(conformColumns(named), sheetName, nanBoxCompat, decimalMoney)
-  }
-
-  /** A collected header sample as header detection reads it: SQL nulls
-    * spelled "None" (Python's `str(None)`). */
-  private def sampleHead(rows: Seq[Seq[String]]): Seq[Seq[String]] =
-    rows.map(_.map(v => if (v == null) "None" else v))
-
-  /** Currency conversion, period detection, provenance, box letter
-    * (fianl2.py:153-163), every column but the year: `year` is a typed
-    * null that only holds the column's place, so `withYear` (the mode
-    * of parsed Date years with pinned min-year tie-break, SURVEY.md A4)
-    * sets it without moving it.
+    * `body` picks each sheet's cells into one column per output column
+    * that reads a cell; `rows` and `apply` conform those columns, as
+    * the reference's `process_sheet` does a sheet's named columns. The
+    * pick is `element_at`, which the optimizer does not copy into every
+    * expression that reads the column, so a money cell is extracted
+    * once per row however many expressions convert it.
     *
-    * `box_was_null` records which rows had no Box value BEFORE
-    * canonicalization — the always-on seam for the null-box diagnostic
-    * (those rows silently change boxes between compat modes, so the
-    * pipeline surfaces their count as a warning either way).
+    * Currency conversion, period, provenance and box letter follow
+    * fianl2.py:153-163. `box_was_null` records which rows had no Box
+    * value BEFORE canonicalization — the always-on seam for the null-box
+    * diagnostic (those rows silently change boxes between compat modes,
+    * so the pipeline surfaces their count as a warning either way).
     *
     * `decimalMoney` (SURVEY.md §1.4/§7.4 — off by default, reference
     * parity keeps DOUBLE) types the three money columns DECIMAL(18,2) at
     * the source, making every downstream aggregate exact and
     * partition-order-invariant; `Summary.vatSummary` detects the type
     * from the schema, so the flag is set once, here. */
-  def enrichBody(conformed: DataFrame, sheetName: String,
-      nanBoxCompat: Boolean = false, decimalMoney: Boolean = false): DataFrame = {
-    val (monthAbbr, monthNum) = extractMonthFromSheet(sheetName)
-    val asMoney: Column => Column =
+  final class Projection(layouts: IndexedSeq[SheetLayout],
+      nanBoxCompat: Boolean, decimalMoney: Boolean) {
+
+    /** Output column names, in order. */
+    val columns: Seq[String] = SheetLayout.union(layouts)
+
+    private def bySheet[T: TypeTag](values: Seq[T]): Column =
+      get(typedlit(values), col("pos"))
+
+    /** `bySheet` for a value that is never null, typed non-null like the
+      * literal it stands for. */
+    private def bySheet[T: TypeTag](values: Seq[T], none: T): Column =
+      coalesce(bySheet(values), lit(none))
+
+    /** The sheet's cell behind `cell`, null when the sheet has none. */
+    private def pick(cell: Seq[Option[Int]]): Column =
+      element_at(col("cells"), bySheet(cell.map(_.map(_ + 1))))
+
+    private val cellIndex = layouts.map(_.cellsFor(columns))
+
+    /** Output columns whose value is read from a cell: the required ones
+      * in `RequiredCols` order, then the rest. The counts pass reads only
+      * required columns, so its generated code is the same for every
+      * header order. */
+    private val fromCells = columns.indices
+      .filterNot(j => EnrichedCols.contains(columns(j)))
+      .sortBy(j => RequiredCols.indexWhere(columns(j).equalsIgnoreCase) match {
+        case -1 => RequiredCols.size + j
+        case r  => r
+      })
+
+    private def cell(j: Int): Column = col(s"cell$j")
+
+    private val rawBox = cell(columns.indexOf("box"))
+
+    private val asMoney: Column => Column =
       if (decimalMoney) c => currencyToAed(c).cast(DecimalType(18, 2))
       else currencyToAed(_)
-    conformed
-      .withColumn("net_value", asMoney(col("net_value")))
-      .withColumn("vat_value", asMoney(col("vat_value")))
-      .withColumn("invoice_value", asMoney(col("invoice_value")))
-      .withColumn("month", lit(monthAbbr))
-      .withColumn("month_num", lit(monthNum))
-      .withColumn("year", lit(null).cast(IntegerType))
-      .withColumn("source_sheet", lit(sheetName))
-      .withColumn("box_was_null", col("box").isNull)
-      .withColumn("box", boxCanon(col("box"), nanBoxCompat))
-      .withColumn("box_letter", boxLetter(col("box")))
-  }
 
-  /** The year step: the sheet's period year as a literal, in place. */
-  def withYear(body: DataFrame, yearVal: Int): DataFrame =
-    body.withColumn("year", lit(yearVal))
+    private val box = boxCanon(rawBox, nanBoxCompat)
+
+    private def value(j: Int, years: Seq[Int]): Column = columns(j) match {
+      case n if MoneyCols.contains(n) => asMoney(cell(j))
+      case "box" => box
+      case "month" => bySheet(layouts.map(_.month), "")
+      case "month_num" => bySheet(layouts.map(_.monthNum), 0)
+      case "year" => bySheet(years, 0)
+      case "source_sheet" => bySheet(layouts.map(_.label), "")
+      case "box_was_null" => rawBox.isNull
+      case "box_letter" => boxLetter(box)
+      case _ => cell(j)
+    }
+
+    /** The output column `name` of `body` (not `year`, which needs the
+      * years). */
+    def apply(name: String): Column = value(columns.indexOf(name), Nil)
+
+    /** The year of each row's parsed `date` cell, null when unparseable
+      * or when the sheet has no column named `date`. */
+    val parsedYear: Column = year(parseDateMulti(col("date_cell")))
+
+    /** Each sheet's body: its rows after its header row, as `pos` and
+      * the cells the output columns and `parsedYear` read. */
+    def body(cells: DataFrame): DataFrame =
+      cells.filter(col("idx") > bySheet(layouts.map(_.headerRow)))
+        .select(col("pos") +: fromCells.map(j =>
+          pick(cellIndex.map(_(j))).as(s"cell$j")) :+
+          pick(layouts.map(_.dateCell)).as("date_cell"): _*)
+
+    /** The conformed rows: every output column of `body`, sheet `pos`
+      * dated `years(pos)`. */
+    def rows(body: DataFrame, years: Seq[Int]): DataFrame =
+      body.select(columns.indices.map(j => value(j, years).as(columns(j))): _*)
+  }
 
   /** The typed Scala API over an enriched VAT table: compile-time field
     * access (`ds.map(_.net_value)`) after the dynamic conformance did
@@ -219,12 +315,6 @@ object Conform {
       col("source_sheet"), col("box_was_null"), col("box_letter"))
       .as[VatTransaction]
   }
-
-  /** The year of each row's parsed Date, null when unparseable or when
-    * the sheet has no `date` column. */
-  def parsedYear(df: DataFrame): Column =
-    if (df.columns.contains("date")) year(parseDateMulti(col("date")))
-    else lit(null).cast(IntegerType)
 
   /** A4 — most frequent year in the Date column, from per-year counts
     * of parseable dates (`VatPipeline` takes every sheet's counts from

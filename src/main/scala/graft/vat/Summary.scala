@@ -31,10 +31,10 @@ object Summary {
     * equality; the quirk is reproduced, not fixed (SURVEY.md §7.4). */
   private case class BoxSpec(label: String, letter: String)
 
-  /** Reference-parity summary over a conformed VAT table (post
-    * `Conform.enrichBody`): double money, round(2) like fianl2.py:195.
+  /** Reference-parity summary over a conformed VAT table (the rows of
+    * `Conform.Projection`): double money, round(2) like fianl2.py:195.
     *
-    * Decimal money mode is schema-driven: when `Conform.enrichBody` typed
+    * Decimal money mode is schema-driven: when `Conform.Projection` typed
     * the money columns DECIMAL(18,2) (the `decimalMoney` flag), the whole
     * aggregate — sums, Box D subtraction, output columns — stays decimal
     * end-to-end (exact cents, no float drift, partition-order-invariant);

@@ -167,7 +167,7 @@ class GraftApiSpec extends SparkSuite {
     val bulk = p.processWorkbooks(dir.getAbsolutePath, cfg)
     assert(bulk.failures.isEmpty, bulk.failures)
     assert(bulk.mapping.count() == 4) // 4 sheets across 3 workbooks
-    // per-sheet conforms must filter the ONE persisted decode, never
+    // the conform must read the ONE persisted decode, never
     // re-run the zip codec (the at-scale contract: decode once)
     assert(bulk.data.queryExecution.optimizedPlan.toString
       .contains("InMemoryRelation"), "decoded cells not cached")

@@ -81,19 +81,6 @@ DRIFT_CLEAN_MED = 1.03
 DRIFT_FLOOR_SHARE = 0.5
 DRIFT_SPILL_TOL_MB = 1.0
 
-# Known BROADCAST-THRESHOLD bistability: queries whose label/edge side
-# sits near spark.sql.autoBroadcastJoinThreshold at the bench SF, so
-# AQE legitimately flips some supersteps between broadcast (lower
-# shuffle) and exchange (higher) across environments with bit-identical
-# code. Values are the two observed stable states in MB; a candidate/
-# baseline pair where EACH side matches ONE of the listed states is
-# treated as plan-identical (the r14 verdict item #7 exemption, encoded
-# as tool data instead of prose). At 100 TB the exchange state is the
-# only one — the transition itself is the documented design.
-KNOWN_BISTABLE_SHUFFLE_MB = {
-    "graph_scc": (8.58, 10.26),
-}
-
 
 def load(path):
     with open(path) as f:
@@ -131,25 +118,6 @@ def shuffle_identical(a, b):
         return False
     return abs(a - b) <= SHUFFLE_ABS_MB or (
         max(a, b) > 0 and abs(a - b) / max(a, b) <= SHUFFLE_REL)
-
-
-def shuffle_identical_q(q, a, b):
-    """shuffle_identical, plus the known broadcast-threshold bistable
-    states: both sides matching (possibly different) listed states for
-    q is the SAME plan caught on different sides of the threshold."""
-    if shuffle_identical(a, b):
-        return True
-    states = KNOWN_BISTABLE_SHUFFLE_MB.get(q)
-    if states is None or a is None or b is None:
-        return False
-    def matches_some(x):
-        return any(shuffle_identical(x, s) for s in states)
-    if matches_some(a) and matches_some(b):
-        print(f"[adjudicate] INFO: {q} shuffle {a} vs {b} MB matches the "
-              f"known broadcast-threshold bistable states {states} — "
-              f"treated as plan-identical")
-        return True
-    return False
 
 
 def drift_verdict(med, n, cand, base, threshold):
@@ -275,7 +243,7 @@ def main():
             continue
         if bq[q] < args.min_wall:
             continue
-        if not shuffle_identical_q(q, csh.get(q), bsh.get(q)):
+        if not shuffle_identical(csh.get(q), bsh.get(q)):
             continue  # plan changed: wall delta is code, not load
         ratios.append((cq[q] / bq[q], q))
 
@@ -287,7 +255,7 @@ def main():
             q for q in sorted(set(cq) & set(bq))
             if wc.get(q, "steady") in ("steady", "iterative")
             and bq[q] >= args.min_wall
-            and shuffle_identical_q(q, csh.get(q), bsh.get(q))
+            and shuffle_identical(csh.get(q), bsh.get(q))
             and cq[q] / bq[q] > args.probe_threshold]
         sf_dir = cand.get("sf") or base.get("sf") or "/root/testdata/sf0.1"
 
