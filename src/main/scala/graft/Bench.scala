@@ -30,7 +30,11 @@ object Bench {
     val metrics = new MetricsListener
     spark.sparkContext.addSparkListener(metrics)
     warmStandingState(spark, sfDir)
-    runSweeps(spark, sfDir, metrics)
+    val failed = runSweeps(spark, sfDir, metrics)
+    if (failed.nonEmpty) {
+      System.err.println(s"${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 
   /** Pre-sweep warm-up: JVM/codegen/parquet-footer init plus every
@@ -133,13 +137,24 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** One timed query execution: its seconds, or None — with `name`
+    * recorded in `failed` — when it threw. A failed query is never
+    * timed and totalled as if it had run. */
+  private[graft] def timeQuery(name: String,
+      failed: scala.collection.mutable.Set[String])(run: => Unit): Option[Double] = {
+    val t0 = System.nanoTime()
+    try { run; Some((System.nanoTime() - t0) / 1e9) }
+    catch { case _: Throwable => failed += name; None }
+  }
+
   /** Durable-map routing (spec-gated in BenchLocalGuardSpec): a scoped
     * run must never write the canonical full-coverage file. */
   private[graft] def benchMapFile(scoped: Boolean): String =
     if (scoped) "BENCH_SCOPED.json" else "BENCH_LOCAL.json"
 
+  /** Runs and prints the sweeps; returns the queries that threw. */
   private def runSweeps(spark: SparkSession, sfDir: String,
-      metrics: MetricsListener): Unit = {
+      metrics: MetricsListener): Seq[String] = {
     // optional subset for local iteration: SPARK_GRAFT_ONLY=q1,q2
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
@@ -160,6 +175,8 @@ object Bench {
     val times = scala.collection.mutable.Map
       .empty[String, List[Double]].withDefaultValue(Nil)
     val shuffle = scala.collection.mutable.Map.empty[String, Double]
+    // a query that throws in ANY sweep is reported, never timed
+    val failed = scala.collection.mutable.SortedSet.empty[String]
 
     // harness floor: the fixed per-query cost at this parallelism —
     // scheduling + tiny-file scan + one shuffle over a 5-row table. A
@@ -184,10 +201,7 @@ object Bench {
       val out = scala.collection.mutable.Map.empty[String, Double]
       names.zipWithIndex.foreach { case (name, qi) =>
         val sw0 = metrics.shuffleWrite.get
-        val t0 = System.nanoTime()
-        try { picked(name)(spark, sfDir).count() }
-        catch { case _: Throwable => () }
-        val dt = (System.nanoTime() - t0) / 1e9
+        val dt = timeQuery(name, failed)(picked(name)(spark, sfDir).count(): Unit)
         // drop intermediates persisted inside a query so later queries
         // (and the next sweep) aren't timed under leftover memory
         // pressure
@@ -203,7 +217,7 @@ object Bench {
         // fresh executor would be; the GC pause itself is never inside
         // any query's timer.
         if (qi % 20 == 19) System.gc()
-        out(name) = dt
+        dt.foreach(out(name) = _)
         // shuffle volume is deterministic — attribute it from the first
         // attempt that ran the query, re-runs included
         if (!shuffle.contains(name))
@@ -292,7 +306,7 @@ object Bench {
     }
     val contaminated = sweeps.exists(s => suspects.contains(s._1))
     sweeps.foreach(_._2.foreach { case (n, dt) => times(n) = dt :: times(n) })
-    val results = names.map { name =>
+    val results = names.filterNot(failed).map { name =>
       val ts = times(name).sorted
       // a real median: middle element for odd run counts, mean of the
       // two middles for even (upper-middle alone would bias high)
@@ -338,6 +352,7 @@ object Bench {
     // per-query seconds (most of which fit), with the bulky deterministic
     // shuffle map first where truncation costs nothing new.
     val floorsJson = floors.map(num("%.4f", _)).mkString("[", ",", "]")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val floorCurveJson =
       floorCurve.map(num("%.4f", _)).mkString("[", ",", "]")
     // Provenance marker for tools/check_bench_local.py: the builder's
@@ -347,7 +362,7 @@ object Bench {
     // committed canonical map (the r14 working-tree-overwrite nit).
     val provenance = sys.env.getOrElse("SPARK_GRAFT_BENCH_PROVENANCE",
       "unmarked")
-    val line = s"""{"metric":"total","unit":"sec","provenance":"$provenance","runs":$runs,"runs_note":"per-query seconds are the median of $runs runs","sf":"$sfDir","floor_note":"median of 5 runs of scan+shuffle+count on the 5-row region table; the fixed per-query harness cost at this parallelism","sentinel_note":"floors = per-sweep bounding floor measurements + the final median-of-5; contaminated = an accepted sweep was bounded by a floor >25% above the GLOBAL minimum floor (retrospective re-judgment; only the leading pre-sweep-1 floor is exempt as JIT warm-up) even after re-runs","floor_curve_note":"every raw floor-probe execution in measurement order (warm-up executions excluded): a flagged floor median can be adjudicated as JIT ramp vs ambient load from the artifact alone","floor_curve":$floorCurveJson,"shuffle_write_mb":$sh,"wall_class":$wcJson,"queries":$qs,"spill_mb_total":$totalSpillMb,"floors":$floorsJson,"contaminated":$contaminated,"salvaged_sweeps":$salvaged,"floor_sec":$floor,"total_minus_floor":$totalMinusFloor,"value":$total,"total":$total}"""
+    val line = s"""{"metric":"total","unit":"sec","provenance":"$provenance","runs":$runs,"runs_note":"per-query seconds are the median of $runs runs","sf":"$sfDir","floor_note":"median of 5 runs of scan+shuffle+count on the 5-row region table; the fixed per-query harness cost at this parallelism","sentinel_note":"floors = per-sweep bounding floor measurements + the final median-of-5; contaminated = an accepted sweep was bounded by a floor >25% above the GLOBAL minimum floor (retrospective re-judgment; only the leading pre-sweep-1 floor is exempt as JIT warm-up) even after re-runs","floor_curve_note":"every raw floor-probe execution in measurement order (warm-up executions excluded): a flagged floor median can be adjudicated as JIT ramp vs ambient load from the artifact alone","floor_curve":$floorCurveJson,"shuffle_write_mb":$sh,"wall_class":$wcJson,"queries":$qs,"failed":$failedJson,"spill_mb_total":$totalSpillMb,"floors":$floorsJson,"contaminated":$contaminated,"salvaged_sweeps":$salvaged,"floor_sec":$floor,"total_minus_floor":$totalMinusFloor,"value":$total,"total":$total}"""
     println(line)
     // durable copy: the full untruncated line, committed per round so
     // per-query seconds are always recoverable from the repo itself.
@@ -369,7 +384,8 @@ object Bench {
     val slow = results.sortBy(-_._2._1).take(30)
       .map { case (k, (v, _)) => s"\"" + k + "\":" + num("%.3f", v) }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","total":$total,"sf":"$sfDir","n_queries":${results.size},"runs":$runs,"floor_sec":$floor,"contaminated":$contaminated,"floors":$floorsJson,"total_minus_floor":$totalMinusFloor,"spill_mb_total":$totalSpillMb,"queries_note":"slowest 30 of ${results.size}; full per-query medians + shuffle-MB map in BENCH_LOCAL.json","queries":$slow}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","total":$total,"sf":"$sfDir","n_queries":${results.size},"runs":$runs,"floor_sec":$floor,"contaminated":$contaminated,"failed":$failedJson,"floors":$floorsJson,"total_minus_floor":$totalMinusFloor,"spill_mb_total":$totalSpillMb,"queries_note":"slowest 30 of ${results.size}; full per-query medians + shuffle-MB map in BENCH_LOCAL.json","queries":$slow}""")
     spark.stop()
+    failed.toSeq
   }
 }

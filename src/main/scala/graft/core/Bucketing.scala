@@ -55,16 +55,4 @@ object Bucketing {
       }
       table
     }
-
-  def readBucketed(spark: SparkSession, table: String): DataFrame =
-    spark.table(table)
-
-  /** Join two same-bucketed tables on their bucket key — plans without
-    * Exchange when bucket counts align. */
-  def cocatedJoin(spark: SparkSession, left: String, right: String,
-      leftKey: String, rightKey: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    readBucketed(spark, left)
-      .join(readBucketed(spark, right), col(leftKey) === col(rightKey))
-  }
 }

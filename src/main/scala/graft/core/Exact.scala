@@ -38,9 +38,6 @@ object Exact {
     * semantics, fianl2.py:179-181). */
   def dsum0(c: Column): Column = coalesce(sum(money(c)), lit(0)).cast("double")
 
-  /** SUM of an already-decimal expression (e.g. decimal products). */
-  def dsumExpr(c: Column): Column = sum(c).cast("double")
-
   /** AVG as exact-sum / count — one double division, identical in both
     * engines. */
   def davg(c: Column): Column = sum(money(c)).cast("double") / count(c)

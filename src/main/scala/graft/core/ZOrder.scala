@@ -40,19 +40,6 @@ object ZOrder {
   def zValue(a: Column, b: Column): Column =
     spreadBits(a).bitwiseOR(shiftleft(spreadBits(b), 1))
 
-  /** Write `df` z-ordered on (c1, c2): range-partition by the Morton
-    * code (so file boundaries are z-curve intervals), sort within each
-    * file, drop the helper column. Each output file then covers a
-    * bounded box in BOTH dimensions — the property ZOrderSpec asserts
-    * through file-level pruning counts. */
-  def writeZOrdered(df: DataFrame, c1: String, c2: String,
-      path: String, nFiles: Int): Unit =
-    df.withColumn("__z", zValue(col(c1), col(c2)))
-      .repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
-
   /** Layout audit: bucket the fact table by z-curve block and report
     * each block's row count and bounding box in both dimensions. The
     * oracle-checked surface for the bit math AND the clustering claim —

@@ -472,17 +472,10 @@ object Corpus {
 
   /** Near-duplicate clusters: MinHash LSH candidate pairs → connected
     * components (so A~B, B~C collapse into one cluster even when A and C
-    * never collide directly). Rows-only: the murmur3 hash family is not
-    * SQL-reproducible; transitivity is property-tested in CorpusSpec. */
-  def nearDupClusters(docs: DataFrame, threshold: Double = 0.5): DataFrame =
-    connectedComponents(
-      Dedup.minhashPairsUnordered(Dedup.withShingles(docs), threshold)
-        .select(col("doc_a"), col("doc_b")))
-
-  /** Oracle-checked clustering twin: the same connected components over
-    * the md5-family candidate pairs, so even the GRAPH stage of dedup
-    * sits behind the hash gate — the DuckDB oracle states reachability
-    * declaratively as a recursive CTE and takes min per node. */
+    * never collide directly). Candidates come from the md5 family, so
+    * even the GRAPH stage of dedup sits behind the hash gate — the
+    * DuckDB oracle states reachability declaratively as a recursive CTE
+    * and takes min per node. */
   def nearDupClustersMd5(docs: DataFrame, threshold: Double = 0.5): DataFrame =
     connectedComponents(
       Dedup.md5MinhashPairsUnordered(Dedup.withShingles(docs), threshold)
@@ -591,14 +584,10 @@ object Corpus {
 
   /** The cleaned corpus: keep one canonical document per near-dup
     * cluster (min doc_id), everything not in any cluster passes
-    * through. This is the operator a pipeline actually deploys. */
-  def canonicalCorpus(docs: DataFrame, threshold: Double = 0.5): DataFrame =
-    keepCanonical(docs, nearDupClusters(docs, threshold))
-
-  /** Oracle-checked deploy twin: same keep-one semantics over the
-    * md5-family clusters, so the final corpus membership itself is
-    * hash-compared (doc ids + provenance; text stays out of the compare
-    * surface only for artifact size, membership is what matters). */
+    * through — the operator a pipeline actually deploys. The final
+    * corpus membership itself is hash-compared (doc ids + provenance;
+    * text stays out of the compare surface only for artifact size,
+    * membership is what matters). */
   def canonicalCorpusMd5(docs: DataFrame, threshold: Double = 0.5): DataFrame =
     keepCanonical(docs, nearDupClustersMd5(docs, threshold))
       .select(col("doc_id"), col("source"), col("lang"))

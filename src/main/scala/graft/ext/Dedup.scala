@@ -104,20 +104,6 @@ object Dedup {
   def minhashSignature(sh: Column): Column =
     graft.functions.MinHashSig.minhash_sig(sh, NumHashes)
 
-  /** HOF formulation (slot k = min over shingles of xxhash64(k, s)) —
-    * interpreted; kept as the differential-testing twin. Uses a
-    * different hash family than the native expression, so signatures
-    * differ in VALUE but share every structural property the pipeline
-    * relies on (tested in DedupSpec). */
-  def minhashSignatureHof(sh: Column): Column =
-    transform(sequence(lit(0), lit(NumHashes - 1)), k =>
-      aggregate(sh, lit(Long.MaxValue), (acc, s) => least(acc, xxhash64(k, s))))
-
-  /** doc_id + signature + B band keys, the full chain let-bound so each
-    * stage is computed exactly once per row. */
-  def signatures(docs: DataFrame): DataFrame =
-    signaturesFromShingles(withShingles(docs))
-
   /** Signature pipeline over an ALREADY-shingled (doc_id, sh) frame —
     * the seam that lets one corpus scan + shingle pass feed several
     * consumers (murmur3 and md5 chains shingle identically, so e.g. the
@@ -172,23 +158,13 @@ object Dedup {
       inv.join(gdf.hint("shuffle_hash"), Seq("g"))
     }
 
-  /** Candidate pairs from shared LSH buckets, verified by estimated
-    * jaccard = fraction of matching minhash slots. */
-  def minhashPairs(docs: DataFrame, threshold: Double): DataFrame =
-    minhashPairsFromShingles(withShingles(docs), threshold)
-
-  def minhashPairsFromShingles(shingled: DataFrame, threshold: Double): DataFrame =
-    minhashPairsUnordered(shingled, threshold)
-      .orderBy(col("doc_a"), col("doc_b"))
-
-  /** [[minhashPairsFromShingles]] WITHOUT the trailing total order —
-    * the variant every internal consumer (verify joins, connected
-    * components, containment) composes over: the declared pair-list
-    * queries need the total ORDER BY, but a mid-pipeline consumer
-    * re-keys immediately and the global Sort + range Exchange the
-    * public form carries survived the optimizer inside those chains as
-    * pure waste (visible in plans/r17/dedup_containment_before.txt,
-    * nodes 26–27). */
+  /** Candidate pairs from shared LSH buckets over an ALREADY-shingled
+    * (doc_id, sh) frame, verified by estimated jaccard = fraction of
+    * matching minhash slots. No trailing total order: every consumer
+    * (verify joins, connected components, containment) re-keys
+    * immediately, and a global Sort + range Exchange survived the
+    * optimizer inside those chains as pure waste (visible in
+    * plans/r17/dedup_containment_before.txt, nodes 26–27). */
   private[graft] def minhashPairsUnordered(shingled: DataFrame,
       threshold: Double): DataFrame = {
     val sigs = signaturesFromShingles(shingled)
@@ -226,35 +202,10 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("est_jaccard"))
   }
 
-  /** Exact n-gram Jaccard for candidate pairs (verification stage of the
-    * MinHash pipeline — exact set overlap via sorted-array intersection,
-    * computed per pair without re-exploding the corpus). */
-  def jaccardVerify(docs: DataFrame, threshold: Double): DataFrame =
-    jaccardVerifyFromShingles(withShingles(docs).persist(), threshold)
-
-  /** As `jaccardVerify` over a pre-shingled (persisted) frame: ONE
-    * corpus shingle pass feeds candidate generation AND both verify
-    * joins (it previously shingled twice — once inside `minhashPairs`,
-    * once for the verify side). */
-  def jaccardVerifyFromShingles(withSh: DataFrame, threshold: Double): DataFrame = {
-    val cands = minhashPairsUnordered(withSh, threshold * 0.5)
-      .select(col("doc_a"), col("doc_b"))
-    cands
-      .join(withSh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
-      .join(withSh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (size(col("sh_a")) + size(col("sh_b")) - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
-
   /** The verification stage behind the oracle gate: exact n-gram Jaccard
     * over md5-family LSH candidates — with `md5MinhashPairs` this puts
     * the ENTIRE dedup chain (signatures → banding → candidates → exact
-    * verify → threshold) under the DuckDB hash compare. Production twin:
-    * `jaccardVerify` (murmur3 candidates, faster, rows-only). */
+    * verify → threshold) under the DuckDB hash compare. */
   def jaccardVerifyMd5(docs: DataFrame, threshold: Double): DataFrame =
     jaccardVerifyMd5FromShingles(md5Shingled(docs).persist(), threshold)
 
@@ -310,18 +261,16 @@ object Dedup {
     *    candidate generation: the anchor side carries k rows per doc,
     *    the inventory side is the shingle pass this operator already
     *    ran, and the join shuffles candidates only (AQE splits hot
-    *    shingle keys). */
-  def containmentVerifyMd5(docs: DataFrame, threshold: Double): DataFrame =
-    containmentFromShingles(md5Shingled(docs), threshold)
-
-  /** [[containmentVerifyMd5]] over the standing [[shingleTable]] —
-    * the declared serving path: the shingle pass is index build. */
+    *    shingle keys).
+    *
+    * The declared serving path reads the standing [[shingleTable]]: the
+    * shingle pass is index build. */
   def containmentVerifyMd5Standing(spark: SparkSession, dir: String,
       threshold: Double): DataFrame =
     containmentFromShingles(
       shingleTable(spark, dir).select(col("doc_id"), col("sh")), threshold)
 
-  private def containmentFromShingles(shingled: DataFrame,
+  private[ext] def containmentFromShingles(shingled: DataFrame,
       threshold: Double): DataFrame = {
     val withSh = shingled.persist()
     val banded = md5MinhashPairsUnordered(withSh, 0.3, 4)
@@ -446,31 +395,17 @@ object Dedup {
     * not hot trigrams (same economics as the containment anchor arm).
     * The per-doc ranking window partitions on doc_id — key width
     * bounded by document length, never a fat key. Verify joins move
-    * candidates only. */
-  def allPairsJaccard(docs: DataFrame, num: Long = 3L, den: Long = 5L): DataFrame =
-    // grams as 60-bit md5 ints (the portable hash family): every
-    // downstream stage — the df aggregate, the ranking join, the
-    // prefix self-join, the verify intersections — shuffles and
-    // compares 8-byte ints instead of ~25-byte gram strings.
-    // Cross-gram collisions (≈ |grams|²/2^60) are deterministic and
-    // identical in both engines; list_distinct after hashing keeps the
-    // set sizes consistent under one.
-    allPairsFromHashed(withShingles(docs)
-      .filter(size(col("sh")) > 0)
-      .select(col("doc_id"),
-        array_distinct(transform(col("sh"), s =>
-          conv(substring(md5(s), 1, 15), 16, 10).cast("long"))).as("sh")),
-      num, den)
-
-  /** [[allPairsJaccard]] over the standing [[shingleTable]]'s
-    * pre-hashed fingerprint arrays — the declared serving path. */
+    * candidates only.
+    *
+    * The declared serving path reads the standing [[shingleTable]]'s
+    * pre-hashed fingerprint arrays. */
   def allPairsJaccardStanding(spark: SparkSession, dir: String,
       num: Long = 3L, den: Long = 5L): DataFrame =
     allPairsFromHashed(shingleTable(spark, dir)
       .filter(size(col("fph")) > 0)
       .select(col("doc_id"), col("fph").as("sh")), num, den)
 
-  private def allPairsFromHashed(hashed: DataFrame, num: Long,
+  private[ext] def allPairsFromHashed(hashed: DataFrame, num: Long,
       den: Long): DataFrame = {
     val sized = hashed
       .select(col("doc_id"), col("sh"), size(col("sh")).cast("long").as("n"))
@@ -555,30 +490,6 @@ object Dedup {
        |WHERE $den * inter >= $num * (na + nb - inter)
        |ORDER BY doc_a, doc_b""".stripMargin
 
-  /** 64-bit SimHash fingerprint over tokens as a Long column, computed
-    * entirely with array HOFs (one narrow projection, no shuffle): bit b
-    * of the fingerprint is the sign of Σ_tokens (±1 by bit b of
-    * xxhash64(token)). Shift amounts are lambda variables, so we go
-    * through `call_function` (the Scala `shiftleft/shiftright` helpers
-    * only accept literal Int bit counts). */
-  /** Fingerprint from a MATERIALIZED token-hash array column (same
-    * inlining hazard as `shinglesFromTokens` — the 64 per-bit votes each
-    * re-evaluate their argument subtree). */
-  def simhashFromHashes(hashes: Column): Column = {
-    // per-bit vote: +1 if bit set, -1 otherwise; fingerprint bit = vote>0
-    val votes = transform(sequence(lit(0), lit(63)), b =>
-      aggregate(hashes, lit(0L), (acc, h) =>
-        acc + when(call_function("shiftright", h, b).bitwiseAND(lit(1L)) === 1L, 1L)
-          .otherwise(-1L)))
-    aggregate(
-      zip_with(votes, sequence(lit(0), lit(63)), (v, b) =>
-        when(v > 0, call_function("shiftleft", lit(1L), b)).otherwise(lit(0L))),
-      lit(0L), (acc, x) => acc.bitwiseOR(x))
-  }
-
-  def simhashFingerprint(text: Column): Column =
-    simhashFromHashes(transform(tokens(text), t => xxhash64(t)))
-
   /** SimHash blocking plan: split the 64-bit fingerprint into `numChunks`
     * near-equal bit ranges and key each LSH table on the concatenation of
     * a `keyBlocks`-subset of chunks (Manku/Jain/Sarma, WWW'07 "Detecting
@@ -628,7 +539,7 @@ object Dedup {
     * exact-recall for hamming ≤ maxDist, verified by bit_count on the
     * fingerprint XOR. The keyed projection is persisted so the
     * scan→tokenize→simhash pipeline runs once, not once per side of the
-    * bucket self-join (mirrors `minhashPairs`). */
+    * bucket self-join (mirrors `minhashPairsUnordered`). */
   def simhashPairs(docs: DataFrame, maxDist: Int,
       numChunks: Int = 0, keyBlocks: Int = 0): DataFrame = {
     // no explicit re-spread (see withShingles)
@@ -686,33 +597,22 @@ object Dedup {
     p
   }
 
-  /** Embedding near-dup with cells from the SAME coarse quantizer the
-    * IVF index uses (`Similarity.lshCell` — deterministic sign-bit LSH),
-    * so cell count scales with the corpus instead of the fixture's label
-    * cardinality. Multi-probe blocking: every vector is keyed under its
-    * own cell plus each 1-bit-flip neighbor, so a candidate pair
-    * survives whenever the two signatures differ in ≤ 2 hyperplanes.
-    * Every candidate is verified with the exact native-codegen cosine,
-    * so precision is 1 by construction; recall is probabilistic in the
-    * pair's angle — near-certain at dedup thresholds (cos ≥ 0.9 ⇒
-    * per-plane flip prob ≈ 0.08, so ≥3 flips are rare), partial at
-    * moderate similarity (that regime is similarity SEARCH — brute/IVF —
-    * not dedup blocking; no LSH family fixes it). Both properties, and
-    * strict recall dominance over the fixture-label blocking, are pinned
-    * in DedupSpec. */
-  def embeddingPairsQuantized(emb: DataFrame, minCos: Double,
-      nPlanes: Int): DataFrame =
-    embeddingPairsBlocked(emb, minCos, nPlanes,
-      (v, dim) => Similarity.lshCellNative(v, dim, nPlanes))
-
-  /** The declared `dedup_embedding_lsh`: identical blocking plan, but
-    * the quantizer is the md5-derived portable hyperplane family
-    * (`Similarity.md5Planes`), so the ENTIRE pipeline — plane
-    * derivation → sign-bit cells → radius-1 multi-probe → bucket join →
-    * exact-cosine verify — is reproducible in DuckDB and sits behind
-    * the hash gate. The xxhash64 native quantizer
-    * (`embeddingPairsQuantized`) stays the throughput path, pinned in
-    * DedupSpec/SignBitLshSpec. */
+  /** The declared `dedup_embedding_lsh`: embedding near-dup with cells
+    * from a sign-bit LSH quantizer, so cell count scales with the
+    * corpus instead of the fixture's label cardinality. Multi-probe
+    * blocking: every vector is keyed under its own cell plus each
+    * 1-bit-flip neighbor, so a candidate pair survives whenever the two
+    * signatures differ in ≤ 2 hyperplanes. Every candidate is verified
+    * with the exact native-codegen cosine, so precision is 1 by
+    * construction; recall is probabilistic in the pair's angle —
+    * near-certain at dedup thresholds (cos ≥ 0.9 ⇒ per-plane flip prob
+    * ≈ 0.08, so ≥3 flips are rare), partial at moderate similarity
+    * (that regime is similarity SEARCH — brute/IVF — not dedup
+    * blocking; no LSH family fixes it). The quantizer is the
+    * md5-derived portable hyperplane family (`SignBitLsh.md5PlaneMatrix`),
+    * so the ENTIRE pipeline — plane derivation → sign-bit cells →
+    * radius-1 multi-probe → bucket join → exact-cosine verify — is
+    * reproducible in DuckDB and sits behind the hash gate. */
   def embeddingPairsPortable(emb: DataFrame, minCos: Double,
       nPlanes: Int): DataFrame =
     embeddingPairsBlocked(emb, minCos, nPlanes,
@@ -866,15 +766,6 @@ object Dedup {
     * (the hash families diverge AFTER shingling, which is exactly why
     * the containment contracts can run both families off one pass). */
   private def md5Shingled(docs: DataFrame): DataFrame = withShingles(docs)
-
-  /** HOF formulation of one md5-family slot — interpreted; kept as the
-    * differential-testing twin of the native codegen'd `Md5MinHashSig`
-    * (bit-equal incl. empty/null-element semantics, Md5MinHashSigSpec). */
-  def md5SlotHof(sh: Column, seed: Int): Column =
-    when(size(sh) === 0, lit(null).cast("long")).otherwise(
-      aggregate(sh, lit(Long.MaxValue), (acc, s) =>
-        least(acc, conv(substring(md5(concat(lit(s"$seed:"), s)), 1, 15), 16, 10)
-          .cast("long"))))
 
   private def md5SigsFromShingles(shingled: DataFrame, k: Int): DataFrame =
     shingled
@@ -1364,8 +1255,7 @@ object Dedup {
   // ---- declared queries (rows-only: hash seeds not SQL-reproducible) ----
   private val q: Seq[(String, QueryDef)] = Seq(
     // murmur3 candidate generator behind its containment contract (the
-    // raw pair list is `minhashPairs` — still the production API and
-    // spec-pinned; the declared surface is what DuckDB can recompute)
+    // declared surface is what DuckDB can recompute)
     "dedup_minhash" -> QueryDef(
       (s: SparkSession, d: String) => minhashContainmentQuery(Tables.documents(s, d), 0.5),
       Some(minhashContainmentSql)),

@@ -44,32 +44,6 @@ object Entities {
     base.unionByName(dirty)
   }
 
-  /** Jaro–Winkler arm of the blocked matcher: the same candidate
-    * blocking, scored by the native integer-micro JW expression
-    * (`functions/JaroWinkler.scala` — prefix-rewarding, the
-    * name-matching default where edit distance over-penalizes long
-    * names). Spec-gated (the matching loop is not SQL-expressible):
-    * EntitiesSpec pins textbook vectors through the expression and the
-    * planted-dupe recall through this op. Scale shape identical to
-    * [[entityMatches]]: candidates only ever meet inside a block. */
-  def entityMatchesJw(recs: DataFrame, minMicro: Long): DataFrame = {
-    val blocked = recs
-      .select(col("rec_id"), upper(col("name")).as("norm"), col("nation"))
-      .withColumn("blk",
-        concat_ws("|", col("nation"), expr("substring(norm, -4, 4)")))
-    blocked.as("a")
-      .join(blocked.as("b"),
-        col("a.blk") === col("b.blk") &&
-          col("a.rec_id") < col("b.rec_id"))
-      .withColumn("jw_micro",
-        graft.functions.JaroWinklerMicro.jaro_winkler_micro(
-          col("a.norm"), col("b.norm")))
-      .filter(col("jw_micro") >= minMicro)
-      .select(col("a.rec_id").as("id_a"), col("b.rec_id").as("id_b"),
-        col("jw_micro"))
-      .orderBy(col("id_a"), col("id_b"))
-  }
-
   /** Blocked fuzzy matching: candidate pairs share (nation, suffix-4 of
     * the upper-cased name); a pair matches when Levenshtein ≤ maxEdits.
     * Output: (id_a, id_b, edits), id_a < id_b. */

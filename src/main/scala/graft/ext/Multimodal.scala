@@ -952,22 +952,6 @@ object Multimodal {
       |FROM documents WHERE doc_id % 3 = 2
       |ORDER BY doc_id""".stripMargin
 
-  /** Per-type feature statistics over the mixed-type media table (the
-    * stub decode path observable end-to-end; `multimodal_metadata` and
-    * the spec suite carry its checks). */
-  def featureStats(spark: SparkSession, dir: String): DataFrame = {
-    val feats = extractFeatures(mediaTable(spark, dir)).toDF()
-    feats.select(col("doc_id"), col("media_type"), col("n_bytes"),
-      aggregate(col("feature"), lit(0.0), (acc, x) => acc + x.cast("double"))
-        .as("feat_sum"))
-      .groupBy(col("media_type"))
-      .agg(count(lit(1)).as("n_media"),
-        sum(col("n_bytes")).as("total_bytes"),
-        min(col("feat_sum")).as("min_feat_sum"),
-        max(col("feat_sum")).as("max_feat_sum"))
-      .orderBy(col("media_type"))
-  }
-
   /** Oracle-checked metadata path: typed media rows reduce to
     * engine-agnostic facts — byte length and content digest of the
     * BINARY column (md5 over the raw bytes is identical in any engine;
@@ -1153,9 +1137,6 @@ object Multimodal {
         (r.doc_id, h(0), h(1), h(2), h(3), h(4), h(5), h(6), h(7))))
     }.toDF("doc_id", "b0", "b1", "b2", "b3", "b4", "b5", "b6", "b7")
   }
-
-  def imageAHashQuery(spark: SparkSession, dir: String): DataFrame =
-    imageAHashes(spark, dir).orderBy(col("doc_id"))
 
   private val imageAHashSql: String =
     """WITH b AS (
@@ -1454,9 +1435,6 @@ object Multimodal {
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  def audioFpPairs(media: Dataset[MediaRow], maxDist: Int): DataFrame =
-    bandedHammingPairs(audioFingerprints(media), bands = 9, bits = 7, maxDist)
-
   private val audioFpPairsSql: String =
     """WITH par AS (
       |  SELECT doc_id, ((doc_id - 1) // 3) // 2 AS g,
@@ -1699,8 +1677,7 @@ object Multimodal {
         bandedHammingPairs(audioFpTable(s, d), bands = 9, bits = 7,
           maxDist = 8),
       Some(audioFpPairsSql)),
-    // real encode→decode round trip behind a closed-form oracle; the
-    // mixed-type stub statistics remain available via `featureStats`
+    // real encode→decode round trip behind a closed-form oracle
     "multimodal_features" -> QueryDef(
       (s: SparkSession, d: String) => imageDecodeQuery(s, d),
       Some(imageDecodeSql)),

@@ -24,13 +24,6 @@ import graft.core.{QueryDef, Tables}
   */
 object Pipeline {
 
-  /** Tokens per document for the chunk/quality surfaces: whitespace
-    * split with empty strings dropped. The PACK and MIXTURE budgets
-    * below count REAL subword tokens instead (`Tokenizer
-    * .docTokenCounts`) — the unit a trainer actually consumes. */
-  private def nTokens(text: Column): Column =
-    size(graft.functions.WordShingles.word_ngrams(text, 1))
-
   // ---------------------------------------------------------------- packing
 
   /** Sequence packing: lay each shard's documents end-to-end (ordered
@@ -48,12 +41,10 @@ object Pipeline {
     *
     * All arithmetic is integer (BIGINT token counts, integer division
     * by `seqLen`), so the oracle comparison is exact by construction.
-    */
-  def packSequences(docs: DataFrame, seqLen: Int, nShards: Int): DataFrame =
-    packSequencesWith(docs, Tokenizer.docTokenCounts(docs), seqLen, nShards)
-
-  /** [[packSequences]] over an explicitly supplied (doc_id, n_tokens)
-    * relation — the standing-table seam (`Tokenizer.docTokenTable`). */
+    *
+    * Token counts come from an explicitly supplied (doc_id, n_tokens)
+    * relation: `Tokenizer.docTokenCounts`, or its standing table
+    * `Tokenizer.docTokenTable`. */
   def packSequencesWith(docs: DataFrame, tokenCounts: DataFrame,
       seqLen: Int, nShards: Int): DataFrame = {
     require(seqLen >= 1 && nShards >= 1,
@@ -111,12 +102,10 @@ object Pipeline {
     * rounded division. Same trick as the IVF centroid oracle
     * (`Similarity.scala`). The corpus collapses to one row per source
     * via partial-aggregated SUM/COUNT before any of this math runs.
-    */
-  def mixtureWeights(docs: DataFrame, budget: Long): DataFrame =
-    mixtureWeightsWith(docs, Tokenizer.docTokenCounts(docs), budget)
-
-  /** [[mixtureWeights]] over an explicitly supplied (doc_id, n_tokens)
-    * relation — the standing-table seam (`Tokenizer.docTokenTable`). */
+    *
+    * Token counts come from an explicitly supplied (doc_id, n_tokens)
+    * relation: `Tokenizer.docTokenCounts`, or its standing table
+    * `Tokenizer.docTokenTable`. */
   def mixtureWeightsWith(docs: DataFrame, tokenCounts: DataFrame,
       budget: Long): DataFrame = {
     // REAL subword budgets (the pack rewire's twin); left join keeps
@@ -258,10 +247,9 @@ object Pipeline {
     *
     * Scale: BOTH windows here are the shapes the engine avoids at
     * 100 TB (source is a fat key; the global position is a one-task
-    * window) — this declared form is the semantics statement, and
-    * `interleaveScalable` below is the deploy path: the same order via
-    * range-partition + per-partition counts + driver prefix-sum (the
-    * `DistributedRank` algorithm), bit-equal by spec pin. */
+    * window); the same order via range-partition + per-partition
+    * counts + driver prefix-sum (the `DistributedRank` algorithm) is
+    * the path to build when a workload needs it. */
   def interleave(docs: DataFrame): DataFrame = {
     val keyed = docs.select(col("doc_id"), col("source"),
       md5(col("doc_id").cast("string")).as("u"))
@@ -271,67 +259,6 @@ object Pipeline {
         Window.orderBy(col("r"), col("source"), col("doc_id"))))
       .select(col("position").cast("long").as("position"),
         col("doc_id"), col("source"))
-      .orderBy(col("position"))
-  }
-
-  /** `interleave` without either problem window: the in-source rank
-    * AND the global position both come from range-partitioned sorts
-    * with per-partition counts prefix-summed on the driver (bounded
-    * metadata: parts × sources rows, then parts rows) — no single-task
-    * stage anywhere, any number of sources/rows. Bit-equal to the
-    * declared form (PipelineSpec). */
-  def interleaveScalable(docs: DataFrame, parts: Int = 32): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    val spark = docs.sparkSession
-    // pass A: in-source rank via range sort on (source, u, doc_id)
-    val keyed = docs.select(col("doc_id"), col("source"),
-        md5(col("doc_id").cast("string")).as("u"))
-      .repartitionByRange(parts, col("source"), col("u"), col("doc_id"))
-      .sortWithinPartitions(col("source"), col("u"), col("doc_id"))
-      .persist()
-    val srcCounts = keyed.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val m = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      it.foreach { r =>
-        val s = r.getString(1); m.update(s, m.getOrElse(s, 0L) + 1L) }
-      m.iterator.map { case (s, c) => (pid, s, c) }
-    }.collect()
-    val srcOff = {
-      val run = scala.collection.mutable.Map.empty[String, Long]
-      srcCounts.sortBy(_._1).map { case (pid, s, c) =>
-        val o = run.getOrElse(s, 0L); run.update(s, o + c); ((pid, s), o)
-      }.toMap
-    }
-    val bSrcOff = spark.sparkContext.broadcast(srcOff)
-    val rankedRdd = keyed.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val local = scala.collection.mutable.Map.empty[String, Long]
-      it.map { r =>
-        val s = r.getString(1)
-        val lr = local.getOrElse(s, 0L) + 1L; local.update(s, lr)
-        Row(r.getLong(0), s, bSrcOff.value((pid, s)) + lr)
-      }
-    }
-    val ranked = spark.createDataFrame(rankedRdd, StructType(Seq(
-        StructField("doc_id", LongType), StructField("source", StringType),
-        StructField("r", LongType))))
-      // pass B: global position via range sort on (r, source, doc_id)
-      .repartitionByRange(parts, col("r"), col("source"), col("doc_id"))
-      .sortWithinPartitions(col("r"), col("source"), col("doc_id"))
-      .persist()
-    val posCounts = ranked.rdd.mapPartitionsWithIndex { (pid, it) =>
-      Iterator.single((pid, it.size.toLong))
-    }.collect().sortBy(_._1)
-    val posOff = posCounts.scanLeft(0L)(_ + _._2).zip(posCounts)
-      .map { case (off, (pid, _)) => pid -> off }.toMap
-    val bPosOff = spark.sparkContext.broadcast(posOff)
-    val out = ranked.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var i = 0L
-      it.map { r => i += 1; Row(bPosOff.value(pid) + i, r.getLong(0), r.getString(1)) }
-    }
-    keyed.unpersist()
-    spark.createDataFrame(out, StructType(Seq(
-        StructField("position", LongType), StructField("doc_id", LongType),
-        StructField("source", StringType))))
       .orderBy(col("position"))
   }
 
@@ -637,12 +564,11 @@ object Pipeline {
     * real BPE-ish tokenizer's per-doc counts ([[Tokenizer.docTokenCounts]]
     * — vocabulary-bounded broadcast join, the corpus_mixture plumbing);
     * word counts are one narrow HOF map; the surface is exact integer
-    * milli-tokens-per-word. */
-  def fertility(docs: DataFrame): DataFrame =
-    fertilityWith(docs, Tokenizer.docTokenCounts(docs))
-
-  /** [[fertility]] over an explicitly supplied (doc_id, n_tokens)
-    * relation — the standing-table seam (`Tokenizer.docTokenTable`). */
+    * milli-tokens-per-word.
+    *
+    * Token counts come from an explicitly supplied (doc_id, n_tokens)
+    * relation: `Tokenizer.docTokenCounts`, or its standing table
+    * `Tokenizer.docTokenTable`. */
   def fertilityWith(docs: DataFrame, tokenCounts: DataFrame): DataFrame = {
     val words = docs.select(col("doc_id"), col("lang"),
       size(filter(split(col("text"), " "), t => t =!= ""))

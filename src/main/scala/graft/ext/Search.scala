@@ -577,13 +577,11 @@ object Search {
     * vocabulary hit can never be "corrected" away by a more frequent
     * neighbor; unmatched terms surface with NULL suggestion. Vocabulary variants are Σ\|w\| rows over the
     * DISTINCT word relation — vocabulary-sized, never corpus-sized —
-    * and the query side is a literal handful. */
-  def spellSuggest(docs: DataFrame, terms: Seq[String]): DataFrame =
-    spellSuggestFromCounts(docs.sparkSession, Tokenizer.wordCounts(docs),
-      terms)
-
-  /** [[spellSuggest]] over an explicitly supplied (word, n_occ)
-    * relation — the standing-table seam (`Tokenizer.wordTokenTable`). */
+    * and the query side is a literal handful.
+    *
+    * The vocabulary is an explicitly supplied (word, n_occ) relation
+    * (`Tokenizer.wordCounts` of a corpus) — the standing-table seam
+    * (`Tokenizer.wordTokenTable`). */
   def spellSuggestFromCounts(spark: org.apache.spark.sql.SparkSession,
       wc: DataFrame, terms: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window

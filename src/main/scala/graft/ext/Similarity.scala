@@ -22,28 +22,17 @@ import graft.core.{QueryDef, Tables, Width}
   */
 object Similarity {
 
-  /** Σ aᵢ·bᵢ as a fold — strictly left-to-right double accumulation.
-    * HOF form (interpreted); kept as the differential-testing twin of
-    * the native expression below. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
   /** Native codegen'd inner product (graft.functions.InnerProduct) —
-    * bit-identical to `dot` (same accumulation order, spec-pinned),
+    * Σ aᵢ·bᵢ with strictly left-to-right double accumulation,
+    * bit-identical to the interpreted HOF fold (CosineSimilaritySpec),
     * the throughput form for full-scan MIPS scoring. */
   def dotNative(a: Column, b: Column): Column =
     graft.functions.InnerProduct.inner_product(a, b)
 
-  def norm(a: Column): Column =
-    sqrt(aggregate(transform(a, x => x * x), lit(0.0), (acc, x) => acc + x))
-
-  /** HOF formulation — interpreted (CodegenFallback); kept as the
-    * differential-testing twin of the native expression. */
-  def cosineHof(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
   /** Native codegen'd expression (graft.functions.CosineSimilarity);
-    * bit-identical to `cosineHof` (same accumulation order), ~10× the
-    * throughput in the brute-force scan. */
+    * bit-identical to the interpreted HOF formulation (same
+    * accumulation order, CosineSimilaritySpec), ~10× its throughput in
+    * the brute-force scan. */
   def cosine(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.cosine_similarity(a, b)
 
@@ -248,90 +237,25 @@ object Similarity {
     * shift, deliberately: the arithmetic `shiftright` would keep the
     * hash's sign and fold every component into [-2, 0) — all-negative
     * hyperplanes still partition space but are heavily correlated,
-    * wasting quantizer balance. */
-  private def planeComponent(p: Int, i: Column): Column =
+    * wasting quantizer balance. The `SignBitLsh` plane matrix
+    * replicates it (SignBitLshSpec). */
+  private[ext] def planeComponent(p: Int, i: Column): Column =
     (call_function("shiftrightunsigned", xxhash64(lit(p), i), lit(11)).cast("double")
       / (1L << 53).toDouble) * 2.0 - 1.0
 
-  /** Sign-bit LSH cell id over `nPlanes` hash-derived hyperplanes — HOF
-    * formulation (interpreted; nPlanes aggregate passes per row). Kept
-    * as the differential-testing twin of the native codegen'd
-    * `SignBitLsh` expression below, which is what the hot paths use. */
-  def lshCell(v: Column, dim: Int, nPlanes: Int): Column =
-    (0 until nPlanes).map { p =>
-      val proj = aggregate(
-        zip_with(v, sequence(lit(0), lit(dim - 1)), (x, i) => x * planeComponent(p, i)),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj >= 0, lit(1 << p)).otherwise(lit(0))
-    }.reduce(_ + _)
-
-  /** Native codegen'd quantizer — bit-identical to `lshCell` (same hash
-    * chain and accumulation order; `SignBitLshSpec`), with the constant
-    * hyperplane matrix precomputed once instead of re-hashed per row. */
-  def lshCellNative(v: Column, dim: Int, nPlanes: Int): Column =
-    graft.functions.SignBitLsh.sign_bit_lsh(v, dim, nPlanes)
-
-  /** PORTABLE hyperplane matrix: component (p, i) is the first 13 hex
-    * chars of md5("p:i") — a 52-bit integer mapped to [-1, 1). Both
-    * steps of the mapping (÷2⁵² then ×2−1) are exact in doubles, and
-    * md5 is identical in every engine, so the matrix — unlike the
-    * xxhash64-derived one behind `SignBitLsh` — can be re-derived in
-    * ANSI SQL: `('0x'||substr(md5(p||':'||i),1,13))::BIGINT / 2^52 * 2
-    * − 1`. Same trick as the md5 MinHash family in `Dedup`: the
-    * portable family carries the oracle, the murmur3/xxhash64 family
-    * carries the throughput. */
-  def md5Planes(nPlanes: Int, dim: Int): Seq[Seq[Double]] =
-    graft.functions.SignBitLsh.md5PlaneMatrix(dim, nPlanes).toSeq.map(_.toSeq)
-
-  /** Sign-bit cell id over an explicit (constant) hyperplane matrix —
-    * HOF formulation, kept as the differential twin of the codegen'd
-    * `sign_bit_lsh_md5` (bit-equal on clean AND dirty inputs,
-    * SignBitLshSpec). Callers must bind `v` to a materialized column
-    * (not an inline transform) — each plane's aggregate re-evaluates
-    * the subtree. */
-  def lshCellFromPlanes(v: Column, planes: Seq[Seq[Double]]): Column =
-    planes.zipWithIndex.map { case (plane, p) =>
-      val proj = aggregate(zip_with(v, typedlit(plane), (x, c) => x * c),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj >= 0, lit(1 << p)).otherwise(lit(0))
-    }.reduce(_ + _)
-
-  /** IVF/LSH-bucketed ANN: probe only the query's cell. `signatures`
-    * shuffle once on cell id; at scale the cells are written bucketed so
-    * repeated queries prune partitions instead of scanning. */
-  def lshTopK(spark: SparkSession, dir: String, qId: Long, k: Int,
-      nPlanes: Int = 4): DataFrame = {
-    val e0 = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    // derive dim from the data (memoized per corpus — corpusDimOf):
-    // a hardcoded width would trip SignBitLsh's length≠dim ⇒ cell-0
-    // contract on a reshaped fixture and silently degrade the probe to
-    // brute force; the memo keeps it one job per corpus, not per call
-    val dim = corpusDimOf(spark, dir)
-    val e = e0.withColumn("cell", lshCellNative(col("v"), dim, nPlanes))
-    val q = e.filter(col("vec_id") === qId)
-      .select(col("v").as("q"), col("cell").as("qcell"))
-    e.filter(col("vec_id") =!= qId)
-      .join(broadcast(q), col("cell") === col("qcell"))
-      .withColumn("cos", cosine(col("v"), col("q")))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
-      .select(col("vec_id").as("neighbor_id"), col("cos"))
-  }
-
-  /** The declared `simsearch_lsh` surface: same cell-probe plan as
-    * `lshTopK`, but over the md5-derived portable hyperplanes and
-    * rank-only output — so quantization, cell membership and in-cell
-    * ranking all sit behind the DuckDB hash gate. The xxhash64 native
-    * quantizer (`lshTopK`/`SignBitLsh`) stays the throughput path,
-    * differential-pinned in SimilaritySpec/SignBitLshSpec. */
+  /** The declared `simsearch_lsh` surface: IVF/LSH-bucketed ANN that
+    * probes only the query's cell, over the md5-derived portable
+    * hyperplanes with rank-only output — so quantization, cell
+    * membership and in-cell ranking all sit behind the DuckDB hash
+    * gate. */
   def lshTopKPortable(spark: SparkSession, dir: String, qId: Long, k: Int,
       nPlanes: Int = 4): DataFrame = {
     val e0 = Tables.embeddings(spark, dir)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    // dim from the data (memoized — see lshTopK): the oracle's
-    // range(0, 64) plane derivation then fails VISIBLY on a reshaped
-    // fixture instead of this side silently collapsing into cell 0
+    // dim from the data (memoized per corpus — corpusDimOf): the
+    // oracle's range(0, 64) plane derivation then fails VISIBLY on a
+    // reshaped fixture instead of this side silently collapsing into
+    // cell 0
     val dim = corpusDimOf(spark, dir)
     val e = e0.withColumn("cell",
       graft.functions.SignBitLsh.sign_bit_lsh_md5(col("v"), dim, nPlanes))
@@ -489,33 +413,6 @@ object Similarity {
   def ivfAssign(emb: DataFrame): DataFrame =
     assignToCentroids(emb, collectCentroids(emb))
 
-  /** IVF search with a trained coarse quantizer: assign every vector to
-    * its nearest centroid cell, then probe only the query's `nprobe`
-    * nearest cells. Centroids are tiny (cells × dim) → broadcast; cell
-    * assignment is one narrow map over the corpus. This is the ad-hoc
-    * (single-query) formulation; the at-scale path precomputes the
-    * assignment ONCE via `buildIvfIndex` and probes with `ivfProbe`,
-    * which bucket-prunes the scan instead of re-assigning the corpus. */
-  def ivfTopK(spark: SparkSession, dir: String, qId: Long, k: Int,
-      nprobe: Int = 2): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val cents = labelCentroids(emb)
-      .select(col("label").as("cell"), col("centroid"))
-    val assigned = ivfAssign(emb)
-    val qCells = assigned.filter(col("vec_id") === qId)
-      .crossJoin(broadcast(cents.select(col("cell").as("probe_cell"), col("centroid"))))
-      .withColumn("cdist", -cosine(col("v"), col("centroid")))
-      .orderBy(col("cdist").asc, col("probe_cell"))
-      .limit(nprobe)
-      .select(col("probe_cell"), col("v").as("q"))
-    assigned.filter(col("vec_id") =!= qId)
-      .join(broadcast(qCells), col("cell") === col("probe_cell"))
-      .withColumn("cos", cosine(col("v"), col("q")))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
-      .select(col("vec_id").as("neighbor_id"), col("cos"), col("cell"))
-  }
-
   /** Build the persistent IVF index: the corpus-wide cell assignment is
     * computed ONCE and written as parquet DIRECTORY-PARTITIONED by
     * `cell` under `path/index`, centroids beside it at `path/centroids`.
@@ -538,18 +435,10 @@ object Similarity {
   }
 
   /** Bumped whenever the index build algorithm changes shape or values. */
-  private val IndexAlgoVersion = "v2-exact-centroids"
+  private[ext] val IndexAlgoVersion = "v2-exact-centroids"
 
-  /** Deterministic on-disk location for the IVF index of one data dir:
-    * the standing-state store's path for the embeddings snapshot, so a
-    * regenerated fixture at the same path — or a bumped
-    * IndexAlgoVersion — gets a FRESH index instead of a stale one. */
-  def ivfIndexPath(dir: String): String =
-    graft.core.ParquetMemo.cachePath(s"$dir/embeddings.parquet", "ivf",
-      IndexAlgoVersion)
-
-  /** Build-once IVF index at [[ivfIndexPath]], through the standing-state
-    * store (`ParquetMemo.ensureWith`: `_SUCCESS` receipt, staged build,
+  /** Build-once IVF index, through the standing-state store
+    * (`ParquetMemo.ensureWith`: `_SUCCESS` receipt, staged build,
     * publish by rename, stale fingerprints swept). The declared
     * `simsearch_ivf` query calls this, making the index build the
     * offline "add to index" step — exactly once per corpus — while
@@ -576,7 +465,7 @@ object Similarity {
     }
     val cents = spark.read.parquet(s"$path/centroids").collect()
       .map(r => r.getInt(0) -> r.getSeq[Double](1))
-    // same ordering contract as ivfTopK's qCells: (-cosine) asc, cell asc
+    // centroid order: (-cosine) asc, cell asc
     val probeCells = cents.map { case (c, ctr) =>
       c -> -(dotD(qv, ctr) / (math.sqrt(dotD(qv, qv)) * math.sqrt(dotD(ctr, ctr))))
     }.sortBy { case (c, d) => (d, c) }.take(nprobe).map(_._1).toSeq
@@ -1174,11 +1063,11 @@ object Similarity {
     * full build (qSide = nSide = corpus) and the incremental insert
     * (qSide = batch, nSide = standing; never standing×standing). */
   private def bandedKnnEdges(qSide: DataFrame, nSide: DataFrame,
-      graphK: Int, bits: Int, nQ: Long = 0L, nN: Long = 0L,
-      dim: Int = 0): DataFrame = {
+      graphK: Int, bits: Int, nQ: Long, nN: Long,
+      dim: Int): DataFrame = {
     // Candidate-volume-sized shuffle width for the BUILD's wide stages
-    // (the full build passes its corpus count; serving-sized callers
-    // leave nQ = 0 and keep the session width): the candidate stream is
+    // (the full build passes its corpus count, the incremental insert
+    // its batch and corpus counts): the candidate stream is
     // ~3·nQ·250 narrow rows, and at the session's fixed width (cpus) a
     // 30× corpus put ~1.6M of them in every distinct/top-k-sort task —
     // starving per-task execution memory into multi-pass spill merges
@@ -1974,8 +1863,7 @@ object Similarity {
     "simsearch_mips_indexed" -> QueryDef(
       (s: SparkSession, d: String) => mipsIndexedTopK(s, d, 0L, 10),
       Some(mipsIndexedTopKSql(0L, 10))),
-    // portable md5-plane quantizer ⇒ full oracle; the xxhash64 native
-    // quantizer path (`lshTopK`) is the throughput twin, spec-pinned
+    // portable md5-plane quantizer ⇒ full oracle
     "simsearch_lsh" -> QueryDef(
       (s: SparkSession, d: String) => lshTopKPortable(s, d, 0L, 10),
       Some(lshTopKSql)),
@@ -1983,8 +1871,8 @@ object Similarity {
     // (train → assign → probe) ANSI-reproducible. The DECLARED path is
     // still the deployable one — build-once directory-partitioned index
     // + pruned probe; equality with the ad-hoc per-query assignment
-    // (`ivfTopK`), recall vs brute force, and the PartitionFilters
-    // pruning are pinned in SimilaritySpec on this same path
+    // (`SimilarityTwins.ivfTopK`), recall vs brute force, and the
+    // PartitionFilters pruning are pinned in SimilaritySpec on this path
     "simsearch_ivf" -> QueryDef(
       (s: SparkSession, d: String) => ivfProbeRanked(s, d, 0L, 10, nprobe = 2),
       Some(ivfProbeSql)),

@@ -233,7 +233,6 @@ object Sketches {
     * at ANY corpus size) → word/bit split → per-word bit-OR; empty
     * words backfill 0 so the artifact is always exactly m/64 rows. */
   def portableBloom(docs: DataFrame, mBits: Int = 16384): DataFrame = {
-    import docs.sparkSession.implicits._
     val grams = docs.select(
       explode(graft.ext.Dedup.shingles(col("text"), 3)).as("gram"))
     val pos = (0 until 2).map(i =>

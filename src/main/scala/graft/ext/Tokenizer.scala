@@ -246,13 +246,12 @@ object Tokenizer {
     * partial-aggregated pair count over the VOCABULARY-sized symbol
     * relation plus a narrow rewrite map; the argmax row is bounded
     * driver metadata (the kmeans-centroid precedent), and the corpus
-    * itself is scanned exactly once by `wordCounts`. */
-  def bpeTrain(docs: DataFrame, rounds: Int): DataFrame =
-    bpeTrainFromCounts(wordCounts(docs), rounds)
-
-  /** [[bpeTrain]] over an explicitly supplied (word, n_occ) relation —
-    * the standing-table seam: the one corpus scan BPE training needs is
-    * the word-count reduction, which [[wordTokenTable]] already holds. */
+    * itself is scanned exactly once by `wordCounts`.
+    *
+    * Training reads an explicitly supplied (word, n_occ) relation
+    * (`wordCounts` of a corpus) — the standing-table seam: the one
+    * corpus scan BPE training needs is the word-count reduction, which
+    * [[wordTokenTable]] already holds. */
   def bpeTrainFromCounts(wc: DataFrame, rounds: Int): DataFrame = {
     import wc.sparkSession.implicits._
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")

@@ -250,7 +250,7 @@ object Streams {
     * timeout drops a bucket once no doc has landed in it for
     * `stateHorizon` past the watermark — dedup-within-horizon, the only
     * sound contract for an unbounded feed. Streaming-only (the batch
-    * twin is `Dedup.minhashPairs`); emitted per (doc, band) in Update
+    * twin is `Dedup.minhashPairsUnordered`); emitted per (doc, band) in Update
     * mode, B rows per doc.
     */
   def nearDupFlags(

@@ -10,7 +10,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** Native Catalyst expression: sign-bit LSH cell id of a DOUBLE array
   * over `nPlanes` deterministic hyperplanes — the coarse quantizer
-  * behind `Similarity.lshCell` compiled to a primitive loop.
+  * (`Similarity.planeComponent`'s xxhash64 hyperplanes) compiled to a
+  * primitive loop.
   *
   * The HOF formulation pays nPlanes interpreted `aggregate(zip_with(…))`
   * passes per row, re-materializing `sequence(0, dim-1)` and re-hashing
@@ -130,8 +131,7 @@ object SignBitLsh {
 
   val Families: Set[String] = Set("xxhash64", "md5")
 
-  /** The PORTABLE hyperplane matrix (`Similarity.md5Planes` is the
-    * canonical description): first 13 md5 hex chars of "p:i" -> 52-bit
+  /** The PORTABLE hyperplane matrix: first 13 md5 hex chars of "p:i" -> 52-bit
     * int -> [-1, 1), every step exact in doubles and replayable as
     * ANSI SQL. */
   def md5PlaneMatrix(dim: Int, nPlanes: Int): Array[Array[Double]] = {
@@ -147,8 +147,8 @@ object SignBitLsh {
     ColumnBridge.column(SignBitLsh(ColumnBridge.expression(v), dim, nPlanes))
 
   /** md5-family variant: same codegen'd loop over the portable matrix
-    * — the hot-path form of `Similarity.lshCellFromPlanes`, bit-equal
-    * to it on clean AND dirty inputs (SignBitLshSpec). */
+    * — bit-equal to the interpreted per-plane `aggregate(zip_with(…))`
+    * formulation on clean AND dirty inputs (SignBitLshSpec). */
   def sign_bit_lsh_md5(v: Column, dim: Int, nPlanes: Int): Column =
     ColumnBridge.column(SignBitLsh(ColumnBridge.expression(v), dim, nPlanes, "md5"))
 }

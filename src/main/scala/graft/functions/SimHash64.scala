@@ -13,8 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native 64-bit SimHash over a token array: two murmur3 hashes per
   * token form the 64 bit-votes; fingerprint bit b is the sign of the
   * vote sum. One codegen'd pass — the HOF formulation walks the token
-  * array 64 times through interpreted lambdas (ext.Dedup.simhashFromHashes,
-  * kept as the structural twin). */
+  * array 64 times through interpreted lambdas (a structural twin over
+  * xxhash64 token hashes lives test-side, in `DedupTwins`). */
 case class SimHash64(child: Expression) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {

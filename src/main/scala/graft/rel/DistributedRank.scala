@@ -336,19 +336,15 @@ object DistributedRank {
 
   /** Frontier scan over any (group STRING, value DOUBLE, score DOUBLE)
     * projection holding one row per (group, value): emit rows whose
-    * score strictly exceeds every lower-value row's score. */
-  def skylineOver(input: DataFrame, parts: Int): DataFrame = {
-    val Seq(grp, value) = input.columns.take(2).toSeq.map(col)
-    skylineFrontier(input, parts).orderBy(grp, value)
-  }
-
-  /** `skylineOver` without the final total order — for callers that
-    * join or re-aggregate the frontier (the composed declared query),
-    * where an internal sort is a wasted exchange. The first three
-    * columns are (group STRING, value DOUBLE, score DOUBLE); any
-    * FURTHER columns are payload and ride through the scan untouched
-    * (the multiplicity column of the declared scalable query), so a
-    * caller never needs a rejoin to recover per-row attributes. */
+    * score strictly exceeds every lower-value row's score. No final
+    * total order — callers that need one add it (the declared queries
+    * order by (group, value)); callers that join or re-aggregate the
+    * frontier (the composed declared query) skip a wasted sort
+    * exchange. The first three columns are (group STRING, value
+    * DOUBLE, score DOUBLE); any FURTHER columns are payload and ride
+    * through the scan untouched (the multiplicity column of the
+    * declared scalable query), so a caller never needs a rejoin to
+    * recover per-row attributes. */
   def skylineFrontier(input: DataFrame, parts: Int): DataFrame = {
     val spark = input.sparkSession
     val Seq(grp, value) = input.columns.take(2).toSeq.map(col)

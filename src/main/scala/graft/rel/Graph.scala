@@ -56,31 +56,7 @@ object Graph {
   private val DampNum = 85L
   private val DampDen = 100L
 
-  /** Distinct directed co-purchase edges: (src part → dst part) iff the
-    * two parts appear in the same order. Symmetric by construction (both
-    * directions emitted), so every vertex has outdeg ≥ 1 and the graph
-    * has no dangling-mass term. */
-  def coPurchaseEdges(lineitem: DataFrame): DataFrame = {
-    val a = lineitem.select(col("l_orderkey").as("ok"), col("l_partkey").as("src"))
-    val b = lineitem.select(col("l_orderkey").as("ok"), col("l_partkey").as("dst"))
-    // dedup HALF the pairs (src < dst) and mirror after: the distinct is
-    // the build's one big shuffle, and the mirrored direction is fully
-    // determined by the first — shuffling it too would double the wire
-    // bytes for zero information
-    val half = a.join(b, Seq("ok"))
-      .filter(col("src") < col("dst"))
-      .select(col("src"), col("dst"))
-      .distinct()
-    half.unionByName(
-      half.select(col("dst").as("src"), col("src").as("dst")))
-  }
-
-  /** `iters` rounds of fixed-point PageRank over `edges(src, dst)`,
-    * treated as a SET (duplicate edge rows collapse — callers may feed
-    * raw pair streams and skip their own distinct). Output: (node,
-    * rank) for every vertex, rank in Scale units.
-    *
-    * State layout: ADJACENCY LISTS, not an edge relation. One
+  /** PageRank state layout: ADJACENCY LISTS, not an edge relation. One
     * `collect_set` aggregation replaces the pair-level distinct + the
     * degree aggregate + the degree join (three exchanges → one), the
     * cached relation shrinks from O(|E|) rows to O(|V|), and each
@@ -90,11 +66,12 @@ object Graph {
     * row holds a vertex's whole out-list, so max degree bounds row
     * size; for web-scale hub graphs, split hubs across salted rows (the
     * co-purchase graph's degree is bounded by order size, far below any
-    * row limit). */
-  /** Adjacency-list relation from a raw (possibly duplicated) edge
+    * row limit).
+    *
+    * Adjacency-list relation from a raw (possibly duplicated) edge
     * stream: one collect_set aggregation dedups and packs each vertex's
     * out-list. */
-  private def adjacencyOf(edges: DataFrame): DataFrame =
+  private[rel] def adjacencyOf(edges: DataFrame): DataFrame =
     edges
       .groupBy(col("src"))
       .agg(collect_set(col("dst")).as("dsts"))
@@ -139,26 +116,6 @@ object Graph {
         .agg((sum(col("contrib")) + base).as("rank"))
         .select(col("dst").as("node"), col("rank"))
     }
-  }
-
-  def pageRank(edges: DataFrame, iters: Int): DataFrame = {
-    val spark = edges.sparkSession
-    val p = spark.sessionState.conf.numShufflePartitions
-    // eager partitioned checkpoint, not persist(): (a) the stamped
-    // LogicalRDD REPORTS its hash(src) partitioning to
-    // EnsureRequirements — an InMemoryRelation under AQE does not, and
-    // a PLAIN localCheckpoint does not either (AdaptiveSparkPlanExec
-    // never overrides outputPartitioning, so Dataset.localCheckpoint
-    // stamps UnknownPartitioning; see PlanBridge) — so this deletes the
-    // per-iteration adjacency exchange; (b) checkpoint blocks are
-    // reclaimed by the ContextCleaner when the frame becomes
-    // unreachable, so repeated calls in one session don't accumulate
-    // dead cache the way a never-unpersisted relation does. Width =
-    // the session SHUFFLE width so it matches every iteration
-    // aggregate's exit partitioning.
-    val adj = PlanBridge.checkpointHashPartitioned(
-      adjacencyOf(edges), Seq("src"), p)
-    pageRankFromAdjacency(adj, iters)
   }
 
   /** Co-purchase pair volume estimate from the lineitem footer count:
@@ -225,10 +182,10 @@ object Graph {
       .limit(k)
   }
 
-  /** Raw mirrored co-purchase pairs, duplicates kept: `pageRank`'s
+  /** Raw mirrored co-purchase pairs, duplicates kept: `adjacencyOf`'s
     * collect_set dedups them inside the aggregation it already pays, so
     * a separate pair-level distinct exchange would be pure waste. */
-  private def coPurchasePairs(lineitem: DataFrame): DataFrame = {
+  private[rel] def coPurchasePairs(lineitem: DataFrame): DataFrame = {
     val a = lineitem.select(col("l_orderkey").as("ok"), col("l_partkey").as("src"))
     val b = lineitem.select(col("l_orderkey").as("ok"), col("l_partkey").as("dst"))
     val half = a.join(b, Seq("ok"))
@@ -237,14 +194,6 @@ object Graph {
     half.unionByName(
       half.select(col("dst").as("src"), col("src").as("dst")))
   }
-
-  /** Declared surface: 5 iterations over the co-purchase graph, top 100
-    * parts by rank (rank desc, part asc — total order). */
-  def partPageRank(lineitem: DataFrame, iters: Int = 5, k: Int = 100): DataFrame =
-    pageRank(coPurchasePairs(lineitem), iters)
-      .select(col("node").as("part"), col("rank"))
-      .orderBy(col("rank").desc, col("part"))
-      .limit(k)
 
   /** Unrolled-CTE oracle: r0..r{iters} chained, one CTE per iteration —
     * the fixed iteration count IS the query, so the oracle spells it
@@ -408,7 +357,7 @@ object Graph {
     *
     * Scale shape per iteration: the label vector exits its aggregate
     * hash-partitioned on node, so the adjacency join moves nothing
-    * (same checkpointed-adjacency discipline as `pageRank`); the
+    * (same checkpointed-adjacency discipline as PageRank); the
     * neighbor-label stream exists only inside the narrow explode and
     * collapses through TWO partially-aggregated shuffles — (node,
     * label) counts, then the per-node argmax as a map-side-combining
@@ -437,20 +386,10 @@ object Graph {
     }
   }
 
-  /** Declared surface: communities of the support-≥2 co-purchase
-    * backbone after 3 synchronous rounds — (community, n_members),
-    * largest first. The backbone (not the raw graph) for the same
-    * reason as triangles: LPA on a near-clique collapses to one giant
-    * label in one round; communities live in the REAL structure. */
-  def partCommunities(lineitem: DataFrame, iters: Int = 3,
-      k: Int = 50): DataFrame = {
-    val half = backboneEdges(lineitem, 2L)
-    communitiesFromEdges(half.unionByName(
-      half.select(col("dst").as("src"), col("src").as("dst"))), iters, k)
-  }
-
-  /** As `partCommunities`, over a prebuilt MIRRORED edge relation (the
-    * bucketed backbone table in the declared query). */
+  /** Communities after `iters` synchronous label-propagation rounds
+    * over a prebuilt MIRRORED edge relation (the bucketed support-≥2
+    * backbone table in the declared query) — (community, n_members),
+    * largest first. */
   def communitiesFromEdges(edges: DataFrame, iters: Int = 3,
       k: Int = 50): DataFrame =
     labelPropagation(edges, iters)
@@ -1461,16 +1400,6 @@ object Graph {
       .orderBy(col("role"), col("score").desc, col("node"))
   }
 
-  def hits(edges: DataFrame, iters: Int): DataFrame = {
-    val p = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val e = edges.select(col("c"), col("s")).distinct()
-    val adjC = PlanBridge.checkpointHashPartitioned(
-      e.groupBy(col("c")).agg(collect_set(col("s")).as("ss")), Seq("c"), p)
-    val adjS = PlanBridge.checkpointHashPartitioned(
-      e.groupBy(col("s")).agg(collect_set(col("c")).as("cs")), Seq("s"), p)
-    hitsFromAdjacency(adjC, adjS, iters)
-  }
-
   /** Build-once bucketed bipartite adjacency for the HITS corpus — the
     * customer→supplier purchase graph as standing state, both
     * orientations bucketed on their own key so every iteration join is
@@ -1495,17 +1424,6 @@ object Graph {
      Bucketing.ensure(spark, stem + "_s", "s")(
       e.groupBy(col("s")).agg(collect_set(col("c")).as("cs"))))
   }
-
-  /** Declared surface: 4 rounds over the customer→supplier graph, top
-    * 25 authorities + top 25 hubs. */
-  def custSupplierHits(orders: DataFrame, lineitem: DataFrame,
-      iters: Int = 4): DataFrame =
-    hits(
-      orders.select(col("o_orderkey").as("ok"), col("o_custkey").as("c"))
-        .join(lineitem.select(col("l_orderkey").as("ok"),
-          col("l_suppkey").as("s")), Seq("ok"))
-        .select(col("c"), col("s")),
-      iters)
 
   /** Declared-query path: the standing-state form. The expensive part
     * of the build (orders⋈lineitem, distinct, both collect_set
@@ -1567,7 +1485,7 @@ object Graph {
   /** Personalized PageRank (the random walk that teleports back to a
     * SEED set instead of everywhere — the "similar nodes" primitive
     * behind related-item recommendation and local community scoring).
-    * Same integer fixed-point discipline as `pageRank`, with one
+    * Same integer fixed-point discipline as PageRank, with one
     * structural difference that matters at scale: the rank vector is
     * SPARSE. Only seeds hold mass at round 0, and a node enters the
     * relation only when the walk actually reaches it — the iteration
@@ -1594,15 +1512,6 @@ object Graph {
         .groupBy(col("node"))
         .agg(sum(col("val")).as("rank"))
     }
-  }
-
-  def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
-      iters: Int): DataFrame = {
-    val p = edges.sparkSession.sparkContext.defaultParallelism
-    val adj = adjacencyOf(edges)
-      .repartition(p, col("src"))
-      .localCheckpoint(eager = true)
-    pprFromAdjacency(adj, seeds, iters)
   }
 
   /** Declared surface: PPR over the BUCKETED co-purchase adjacency
@@ -1663,7 +1572,7 @@ object Graph {
     * (order, part) distinct runs first so per-order line-item
     * duplication can't inflate weights; the count shuffle is the
     * build's one exchange and its fanout is quadratic only in order
-    * size (bounded by construction, the coPurchaseEdges argument). */
+    * size (bounded by construction, the `coPurchasePairs` argument). */
   def weightedCoPurchaseEdges(lineitem: DataFrame): DataFrame = {
     val op = lineitem
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
@@ -1674,26 +1583,6 @@ object Graph {
       .agg(count(lit(1)).as("w"))
     half.unionByName(half.select(col("dst").as("src"),
       col("src").as("dst"), col("w")))
-  }
-
-  /** Weighted fixed-point PageRank: each neighbor receives mass in
-    * proportion to its edge weight — `(rank·85·w) div (100·wsum)` —
-    * instead of the uniform 1/outdeg split. The per-edge product runs
-    * in DECIMAL(38,0) (the HITS overflow discipline: rank mass can
-    * reach |V|·Scale ≈ 2·10¹⁷ at sf1000, and ×85×w would overflow
-    * BIGINT silently) and truncates back to BIGINT — order-independent,
-    * bit-identical at any parallelism. Same iteration shape as the
-    * unweighted op: weighted adjacency lists checkpointed
-    * hash-partitioned on src, one dst-aggregate exchange per round. */
-  def pageRankWeighted(edges: DataFrame, iters: Int): DataFrame = {
-    val spark = edges.sparkSession
-    val p = spark.sessionState.conf.numShufflePartitions
-    val adj = PlanBridge.checkpointHashPartitioned(
-      edges.groupBy(col("src"))
-        .agg(collect_list(struct(col("dst"), col("w"))).as("nbrs"),
-          sum(col("w")).as("wsum")),
-      Seq("src"), p)
-    pageRankWeightedFromAdjacency(adj, iters)
   }
 
   /** The weighted iteration fold over a prebuilt (src, nbrs, wsum)
@@ -1760,15 +1649,6 @@ object Graph {
       .limit(k)
   }
 
-  /** Ad-hoc surface over raw lineitem (spec path; the declared query
-    * uses the bucketed standing state). */
-  def partPageRankWeighted(lineitem: DataFrame, iters: Int = 5,
-      k: Int = 100): DataFrame =
-    pageRankWeighted(weightedCoPurchaseEdges(lineitem), iters)
-      .select(col("node").as("part"), col("rank"))
-      .orderBy(col("rank").desc, col("part"))
-      .limit(k)
-
   def partPageRankWeightedSql(iters: Int = 5, k: Int = 100): String = {
     val base = Scale * (DampDen - DampNum) / DampDen
     val iterCtes = (1 to iters).map { i =>
@@ -1827,17 +1707,6 @@ object Graph {
           col("best").getField("label").as("label"))
     }
   }
-
-  /** Declared surface: weighted LPA over the support-≥2 weighted
-    * backbone, community sizes, top k. */
-  def partCommunitiesWeighted(lineitem: DataFrame, iters: Int = 3,
-      k: Int = 50): DataFrame =
-    labelPropagationWeighted(
-      weightedCoPurchaseEdges(lineitem).filter(col("w") >= 2), iters)
-      .groupBy(col("label").as("community"))
-      .agg(count(lit(1)).as("n_members"))
-      .orderBy(col("n_members").desc, col("community"))
-      .limit(k)
 
   /** Declared-query path: the weighted backbone derives from the
     * standing bucketed adjacency by a NARROW explode + w ≥ 2 filter —
@@ -2207,168 +2076,6 @@ object Graph {
        |SELECT walk_id, step, node FROM (
        |  $unions)
        |ORDER BY walk_id, step""".stripMargin
-  }
-
-  /** Distributed Borůvka MAXIMUM spanning forest over a weighted
-    * half-edge relation (u < v, weight w) — the affinity backbone of
-    * the co-purchase graph (max forest keeps the STRONGEST tree
-    * connecting each component; min-MST is the same loop with the
-    * comparator flipped). Not SQL-expressible, so spec-gated: GraphSpec
-    * pins a hand forest and a driver-side Kruskal differential.
-    *
-    * Scale shape (the textbook distributed-MST algorithm): each round,
-    * every component picks its best incident cross edge via ONE
-    * partial-agg groupBy over the (still-cross) edge relation — struct
-    * max with the total order (w, −u, −v), so ties break to the
-    * smallest (u, v) and the forest is unique without requiring unique
-    * weights. Picked edges contract via the shared connected-components
-    * machinery (`ext.Corpus.connectedComponents`: size-guarded driver
-    * union-find with distributed hash-min fallback — pick-pair count is
-    * ≤ #components, shrinking geometrically). Component count at least
-    * halves per round → ≤ log₂|V| rounds; the edge relation SHRINKS
-    * in-place each round (intra-component edges leave the join), and
-    * every round's state is eagerly localCheckpoint'ed (the BFS/PageRank
-    * lineage discipline). No driver collect anywhere: the driver holds
-    * only the loop counter and the empty-check. */
-  def maxSpanningForest(halfEdges: DataFrame, maxRounds: Int = 16): DataFrame = {
-    val spark = halfEdges.sparkSession
-    var edges = halfEdges.select(col("u"), col("v"), col("w"))
-      .localCheckpoint(true)
-    // vertex → component map; starts as the identity over the vertex set
-    var comp = edges
-      .select(explode(array(col("u"), col("v"))).as("id")).distinct()
-      .withColumn("comp", col("id"))
-      .localCheckpoint(true)
-    var forest: DataFrame = null
-    var round = 0
-    var done = false
-    while (round < maxRounds && !done) {
-      round += 1
-      val cu = comp.select(col("id").as("u"), col("comp").as("cu"))
-      val cv = comp.select(col("id").as("v"), col("comp").as("cv"))
-      val cross = edges.join(cu, Seq("u")).join(cv, Seq("v"))
-        .filter(col("cu") =!= col("cv"))
-        .localCheckpoint(true)
-      if (cross.isEmpty) done = true
-      else {
-        // per-component best incident edge: lexicographic struct max on
-        // (w, −u, −v) — deterministic under weight ties
-        val cand = struct(col("w"), (-col("u")).as("nu"), (-col("v")).as("nv"),
-          col("u"), col("v"), col("cu"), col("cv")).as("cand")
-        val inc = cross.select(col("cu").as("c"), cand)
-          .unionByName(cross.select(col("cv").as("c"), cand))
-        val best = inc.groupBy(col("c")).agg(max(col("cand")).as("m"))
-          .select(col("m.u").as("u"), col("m.v").as("v"),
-            col("m.w").as("w"), col("m.cu").as("cu"), col("m.cv").as("cv"))
-          .distinct() // both endpoints picking the same edge collapse
-          .withColumn("round", lit(round.toLong))
-          .localCheckpoint(true)
-        forest =
-          if (forest == null) best.select(col("u"), col("v"), col("w"), col("round"))
-          else forest.unionByName(
-            best.select(col("u"), col("v"), col("w"), col("round")))
-            .localCheckpoint(true)
-        // contract: CC over the picked component pairs relabels merged
-        // components to their minimum id; untouched components keep theirs
-        val merged = graft.ext.Corpus.connectedComponents(
-          best.select(col("cu").as("doc_a"), col("cv").as("doc_b")))
-          .select(col("id").as("comp"), col("component").as("newc"))
-        comp = comp.join(merged, Seq("comp"), "left")
-          .select(col("id"), coalesce(col("newc"), col("comp")).as("comp"))
-          .localCheckpoint(true)
-        // shrink: drop now-intra-component edges for every later round
-        edges = cross.select(col("u"), col("v"), col("w"))
-      }
-    }
-    if (forest == null)
-      spark.emptyDataFrame
-        .select(lit(0L).as("u"), lit(0L).as("v"), lit(0L).as("w"),
-          lit(0L).as("round")).limit(0)
-    else forest.orderBy(col("u"), col("v"))
-  }
-
-  /** The declared co-purchase backbone: maximum spanning forest over
-    * the (u < v, shared-order count) weighted pair relation. */
-  def coPurchaseBackbone(lineitem: DataFrame): DataFrame = {
-    val a = lineitem.select(col("l_orderkey").as("ok"), col("l_partkey").as("u"))
-    val b = lineitem.select(col("l_orderkey").as("ok"), col("l_partkey").as("v"))
-    val weighted = a.join(b, Seq("ok"))
-      .filter(col("u") < col("v"))
-      .groupBy(col("u"), col("v"))
-      .agg(count(lit(1)).as("w"))
-    maxSpanningForest(weighted)
-  }
-
-  /** Full core decomposition: every node's core NUMBER (the largest k
-    * whose k-core still contains it) — G13's fixed-k peel promoted to
-    * the full hierarchy, the standard "how deep in the dense part"
-    * coordinate under community seeding and influence ranking. Runs
-    * the G13 peel at k = 1, 2, … until the graph empties: nodes that
-    * vanish during the k-peel carry core number k−1. Each level is the
-    * proven semi-join peel loop (degree filter + two semi-joins per
-    * round, checkpointed); levels are bounded by the max core (tiny on
-    * sparse graphs), rounds within a level by the peel depth. Not
-    * SQL-expressible (nested loops) — spec-gated against a driver
-    * reference peeling on the sf0.001 backbone plus a planted
-    * clique-with-tail. */
-  def coreDecomposition(edges: DataFrame, maxK: Int = 64): DataFrame = {
-    val spark = edges.sparkSession
-    var e = edges.select(col("src"), col("dst")).localCheckpoint(true)
-    var result: DataFrame = null
-    var k = 1L
-    var done = e.isEmpty
-    while (!done && k <= maxK) {
-      // peel to the k-core
-      var stable = false
-      while (!stable) {
-        val keep = e.groupBy(col("src").as("node"))
-          .agg(count(lit(1)).as("d"))
-          .filter(col("d") >= k)
-          .select(col("node"))
-        val ne = e
-          .join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
-          .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
-          .select(col("src"), col("dst"))
-          .localCheckpoint(true)
-        stable = ne.count() == e.count()
-        e = ne
-      }
-      val survivors = e.select(col("src").as("node")).distinct()
-        .withColumn("core", lit(k))
-        .localCheckpoint(true)
-      // survivors of the k-peel have core ≥ k; overwrite each level
-      result =
-        if (result == null) survivors
-        else result.join(survivors.select(col("node")), Seq("node"),
-            "left_anti")
-          .unionByName(survivors)
-          .localCheckpoint(true)
-      done = e.isEmpty
-      k += 1
-    }
-    if (result == null)
-      spark.emptyDataFrame
-        .select(lit(0L).as("node"), lit(0L).as("core")).limit(0)
-    else result.orderBy(col("node"))
-  }
-
-  /** Rich-club coefficient ladder: among nodes of degree > k, what
-    * fraction of possible edges exists — φ(k) = 2·E_k/(N_k·(N_k−1)) in
-    * exact ppm, for k ∈ {1, 2, 4, 8}. The "do the hubs talk to each
-    * other" readout (assortativity's G8 sibling reads the correlation;
-    * this reads the subgraph density). One degree reduce, then per
-    * level two broadcast-friendly semi-joins of the half-edge relation
-    * against the >k node set — never a node×node product; N_k < 2
-    * surfaces NULL. */
-  def richClub(lineitem: DataFrame, ks: Seq[Long] = Seq(1L, 2L, 4L, 8L)): DataFrame = {
-    val half = backboneEdges(lineitem, 2L)
-      .select(col("src").as("u"), col("dst").as("v"))
-      .localCheckpoint(true)
-    val deg = half.select(col("u").as("id"))
-      .unionByName(half.select(col("v").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
-    richClubLadder(half, deg, ks)
   }
 
   /** The declared surface's form: the same ladder fed from the
@@ -2776,73 +2483,4 @@ object Graph {
       .filter(col("n") >= minSupport)
       .select(col("src"), col("dst"))
 
-  /** Deterministic Luby-style maximal independent set over a HALF-edge
-    * relation (src < dst): the conflict-free scheduling primitive
-    * (which vertices can run/update/serve simultaneously). Not
-    * SQL-expressible (the round recurrence), so spec-gated on its two
-    * defining properties — independence and maximality — plus
-    * partitioning-invariance.
-    *
-    * Luby's algorithm with the RANDOM priorities replaced by
-    * md5(node) — uniform, engine-reproducible, zero RNG state (the
-    * corpus_split derivation): each round, an undecided vertex enters
-    * the MIS iff its (priority, id) is strictly smaller than every
-    * undecided neighbor's; winners' neighbors become covered; both
-    * leave the frontier, the edge relation shrinks to
-    * undecided×undecided, and the expected frontier halves per round
-    * (Luby's bound holds for any uniform priority draw). Each round is
-    * one groupBy over the live edge relation + two broadcast-friendly
-    * semi/anti joins; state is eagerly localCheckpoint'ed (the BFS
-    * discipline); no driver collects. */
-  def maximalIndependentSet(halfEdges: DataFrame, maxRounds: Int = 24): DataFrame = {
-    val prio = (n: org.apache.spark.sql.Column) =>
-      substring(md5(concat(lit("mis:"), n.cast("string"))), 1, 16)
-    var edges = halfEdges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst"))
-      .localCheckpoint(true)
-    var verts = edges.select(explode(array(col("src"), col("dst"))).as("id"))
-      .distinct()
-      .select(col("id"), prio(col("id")).as("p"))
-      .localCheckpoint(true)
-    var mis: DataFrame = null
-    var round = 0
-    while (round < maxRounds && !verts.isEmpty) {
-      round += 1
-      // neighbor minimum (priority, id) per live vertex, both directions
-      val ep = edges
-        .join(verts.select(col("id").as("src"), col("p").as("ps")), Seq("src"))
-        .join(verts.select(col("id").as("dst"), col("p").as("pd")), Seq("dst"))
-      val nbrMin = ep.select(col("src").as("id"),
-          struct(col("pd").as("p"), col("dst").as("n")).as("np"))
-        .unionByName(ep.select(col("dst").as("id"),
-          struct(col("ps").as("p"), col("src").as("n")).as("np")))
-        .groupBy(col("id")).agg(min(col("np")).as("nmin"))
-      // isolated live vertices have no live neighbor → always win
-      val winners = verts.join(nbrMin, Seq("id"), "left")
-        .filter(col("nmin").isNull ||
-          struct(col("p").as("p"), col("id").as("n")) < col("nmin"))
-        .select(col("id"), lit(round.toLong).as("round"))
-        .localCheckpoint(true)
-      mis = if (mis == null) winners
-        else mis.unionByName(winners).localCheckpoint(true)
-      // covered = winners ∪ their neighbors; both leave the frontier
-      val covered = winners.select(col("id"))
-        .unionByName(edges.join(winners.select(col("id").as("src")), Seq("src"))
-          .select(col("dst").as("id")))
-        .unionByName(edges.join(winners.select(col("id").as("dst")), Seq("dst"))
-          .select(col("src").as("id")))
-        .distinct()
-      verts = verts.join(covered, Seq("id"), "left_anti")
-        .localCheckpoint(true)
-      edges = edges
-        .join(verts.select(col("id").as("src")), Seq("src"), "left_semi")
-        .join(verts.select(col("id").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))
-        .localCheckpoint(true)
-    }
-    if (mis == null)
-      halfEdges.sparkSession.emptyDataFrame
-        .select(lit(0L).as("id"), lit(0L).as("round")).limit(0)
-    else mis.orderBy(col("id"))
-  }
 }

@@ -1,6 +1,5 @@
 package graft.rel
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Exact, QueryDef, Tables}

@@ -1114,56 +1114,6 @@ object TimeSeries {
       |  cents * n_w < s - 2 * sig_n AS break_down
       |FROM f ORDER BY event_type, day""".stripMargin
 
-  /** Pairwise Dynamic Time Warping distances between the per-type
-    * daily-revenue series — the alignment-tolerant series similarity
-    * under clustering/motif search (two series with the same shape
-    * shifted a day apart score near 0 where Euclidean explodes). Not
-    * SQL-expressible (the DP recurrence), so spec-gated.
-    *
-    * Scale shape: series collapse to one ordered exact-cents array per
-    * type (calendar-bounded — the array is ≤ |days|, never events); the
-    * pair relation is |types|² half-pairs; each pair runs one O(n²)
-    * integer DP inside a typed map (bounded imperative work per row —
-    * the Multimodal codec rationale, not a driver loop). Costs are
-    * |Δcents| sums: exact, engine- and partitioning-independent. */
-  def dtwPairs(events: DataFrame): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val daily = events
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(sum((Exact.money(col("value")) * 100).cast("long")).as("cents"))
-    val series = daily.groupBy(col("event_type"))
-      .agg(expr("transform(sort_array(collect_list(struct(day, cents))), x -> x.cents)")
-        .as("s"))
-    val a = series.select(col("event_type").as("type_a"), col("s").as("sa"))
-    val b = series.select(col("event_type").as("type_b"), col("s").as("sb"))
-    a.join(b, col("type_a") < col("type_b"))
-      .as[(String, Seq[Long], String, Seq[Long])]
-      .map { case (ka, va, kb, vb) =>
-        val n = va.length; val m = vb.length
-        val xs = va.toArray; val ys = vb.toArray
-        val INF = Long.MaxValue / 4
-        // rolling 1-row DP of the classic full-window recurrence
-        var prev = Array.fill(m + 1)(INF); prev(0) = 0L
-        var cur = new Array[Long](m + 1)
-        var i = 1
-        while (i <= n) {
-          cur(0) = INF
-          var j = 1
-          while (j <= m) {
-            val c = math.abs(xs(i - 1) - ys(j - 1))
-            cur(j) = c + math.min(math.min(prev(j), cur(j - 1)), prev(j - 1))
-            j += 1
-          }
-          val t = prev; prev = cur; cur = t
-          i += 1
-        }
-        (ka, kb, n.toLong, m.toLong, prev(m))
-      }
-      .toDF("type_a", "type_b", "n_a", "n_b", "dtw_cents")
-      .orderBy(col("type_a"), col("type_b"))
-  }
-
   /** Record-breaking days: each day that sets a new all-time high for
     * its type's daily revenue, with the record it broke and the days it
     * stood. Strict compare (ties do NOT break a record), the first day

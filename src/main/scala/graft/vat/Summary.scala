@@ -104,7 +104,7 @@ object Summary {
     * any scale); the Expand touches 4 tiny rows per period instead. */
   private def finishSummary(agg: DataFrame, spark: SparkSession,
       boxes: Seq[BoxSpec], round2: Boolean,
-      moneyType: String = "double",
+      moneyType: String,
       centsSurface: Boolean = false): DataFrame = {
     val r: Column => Column = if (round2) round(_, 2) else identity
     val period = concat_ws(" ",

@@ -29,8 +29,8 @@ class AdjudicateBenchSpec extends AnyFunSuite {
       extra: Seq[String] = Seq.empty): Int = run2(candidate, baseline,
     minN, extra)._1
 
-  private def run2(candidate: Path, baseline: Path, minN: Int = 3,
-      extra: Seq[String] = Seq.empty): (Int, String) = {
+  private def run2(candidate: Path, baseline: Path, minN: Int,
+      extra: Seq[String]): (Int, String) = {
     // default the drift artifact next to the candidate fixture — a bare
     // run would otherwise drop DRIFT_VERDICT.json into the repo root
     val drift =

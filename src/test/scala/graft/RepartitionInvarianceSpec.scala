@@ -16,6 +16,8 @@ class RepartitionInvarianceSpec extends SparkSuite {
     "vat_summary",          // DECIMAL conditional agg + unpivot
     "agg_corr_exact",       // decimal second moments + IEEE finish
     "graph_pagerank",       // integer fixed-point iteration
+    "graph_hits",           // integer max-normalized bipartite rounds
+    "graph_ppr",            // sparse-frontier fixed-point iteration
     "embedding_kmeans",     // integer fixed-point clustering
     "dedup_minhash_md5",    // portable hash family
     "agg_median_disc",      // discrete percentile

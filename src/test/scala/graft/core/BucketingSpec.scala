@@ -14,8 +14,8 @@ class BucketingSpec extends SparkSuite {
         "orders_b", "o_orderkey", 8, sortCols = Seq("o_orderkey"))
       Bucketing.writeBucketed(Tables.lineitem(spark, sfDir),
         "lineitem_b", "l_orderkey", 8, sortCols = Seq("l_orderkey"))
-      val joined = Bucketing.cocatedJoin(spark, "lineitem_b", "orders_b",
-        "l_orderkey", "o_orderkey")
+      val joined = spark.table("lineitem_b")
+        .join(spark.table("orders_b"), col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n"))
       joined.collect()
       val p = joined.queryExecution.executedPlan.toString

@@ -54,7 +54,13 @@ class ZOrderSpec extends SparkSuite {
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
       .select("l_partkey", "l_suppkey", "l_quantity")
     val tmp = Files.createTempDirectory("zorder").toString
-    ZOrder.writeZOrdered(li, "l_partkey", "l_suppkey", s"$tmp/z", nFiles = 16)
+    // z-ordered write: range-partition by the Morton code so file
+    // boundaries are z-curve intervals, sorted within each file
+    li.withColumn("__z", ZOrder.zValue(col("l_partkey"), col("l_suppkey")))
+      .repartitionByRange(16, col("__z"))
+      .sortWithinPartitions(col("__z"))
+      .drop("__z")
+      .write.parquet(s"$tmp/z")
     li.repartitionByRange(16, col("l_suppkey"))
       .sortWithinPartitions(col("l_suppkey"))
       .write.parquet(s"$tmp/linear")

@@ -57,11 +57,11 @@ class CorpusSpec extends SparkSuite {
       (3L, base + " extra"), // near dup of 1/2
       (4L, "completely different words describing cooking recipes with garlic onion butter salt"))
       .toDF("doc_id", "text")
-    val clusters = Corpus.nearDupClusters(docs, 0.5).collect()
+    val clusters = Corpus.nearDupClustersMd5(docs, 0.5).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(clusters.get(1L).contains(1L) && clusters.get(2L).contains(1L))
     assert(!clusters.contains(4L), "unique doc is in no cluster")
-    val kept = Corpus.canonicalCorpus(docs, 0.5).select("doc_id")
+    val kept = Corpus.canonicalCorpusMd5Docs(docs).select("doc_id")
       .collect().map(_.getLong(0)).toSet
     assert(kept.contains(1L) && kept.contains(4L) && !kept.contains(2L))
   }

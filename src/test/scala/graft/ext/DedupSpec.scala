@@ -61,8 +61,8 @@ class DedupSpec extends SparkSuite {
   }
 
   test("minhash signatures: identical docs identical, near-dups mostly equal") {
-    import spark.implicits._
-    val sigs = Dedup.signatures(docs).orderBy("doc_id").collect()
+    val sigs = Dedup.signaturesFromShingles(Dedup.withShingles(docs))
+      .orderBy("doc_id").collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(sigs(1L) == sigs(5L), "equal text ⇒ equal signature")
     val overlap12 = sigs(1L).zip(sigs(2L)).count { case (a, b) => a == b }
@@ -73,7 +73,8 @@ class DedupSpec extends SparkSuite {
   }
 
   test("minhash LSH: exact duplicate always pairs; unrelated never do") {
-    val pairs = Dedup.minhashPairs(docs, 0.5).collect()
+    val pairs = Dedup.minhashPairsUnordered(Dedup.withShingles(docs), 0.5)
+      .collect()
     val ids = pairs.map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(ids.contains((1L, 5L)), s"exact dup must collide in every band, got $ids")
     assert(!ids.contains((3L, 4L)), "unrelated docs must not pair")
@@ -82,7 +83,7 @@ class DedupSpec extends SparkSuite {
   }
 
   test("exact jaccard verification agrees with hand-computed overlap") {
-    val out = Dedup.jaccardVerify(docs, 0.5).collect()
+    val out = Dedup.jaccardVerifyMd5(docs, 0.5).collect()
       .map(r => (r.getLong(1), r.getLong(0)) -> r.getDouble(2)).toMap
       .map { case ((a, b), j) => (math.min(a, b), math.max(a, b)) -> j }
     assert(out.get((1L, 5L)).contains(1.0))
@@ -97,7 +98,8 @@ class DedupSpec extends SparkSuite {
     val long = short + " " + (1 to 10).map(i => s"u$i").mkString(" ")
     val d = Seq((1L, short), (2L, long), (3L, "entirely different words here now"))
       .toDF("doc_id", "text")
-    val out = Dedup.containmentVerifyMd5(d, 0.6).collect()
+    val out = Dedup.containmentFromShingles(Dedup.withShingles(d), 0.6)
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
     val hit = out.find(p => Set(p._1, p._2) == Set(1L, 2L))
     assert(hit.isDefined, s"planted containment pair missed: ${out.toSeq}")
@@ -126,7 +128,8 @@ class DedupSpec extends SparkSuite {
       s"test premise broken: banding caught the extreme-ratio pair ($banded)")
     // the anchor arm guarantees candidacy: every anchor shingle of the
     // contained doc is in the container's set by definition
-    val out = Dedup.containmentVerifyMd5(d, 0.6).collect()
+    val out = Dedup.containmentFromShingles(Dedup.withShingles(d), 0.6)
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
     val hit = out.find(p => (p._1, p._2) == (1L, 2L))
     assert(hit.isDefined, s"anchor arm failed to recall the pair: ${out.toSeq}")
@@ -148,7 +151,7 @@ class DedupSpec extends SparkSuite {
       .select((col("doc_id") + 10000000L).as("doc_id"),
         concat(col("text"), lit(" plantedtail")).as("text"))
     val sample = corpus.unionByName(planted)
-    val fast = Dedup.allPairsJaccard(sample).collect()
+    val fast = DedupTwins.allPairsJaccard(sample).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val sh = Dedup.withShingles(sample).filter(size(col("sh")) > 0)
     val brute = sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))
@@ -165,8 +168,7 @@ class DedupSpec extends SparkSuite {
   }
 
   test("all-pairs: hand corpus — exact dup, near dup above threshold, clean docs") {
-    import spark.implicits._
-    val out = Dedup.allPairsJaccard(docs).collect()
+    val out = DedupTwins.allPairsJaccard(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5))).toMap
     assert(out.keySet === Set((1L, 2L), (1L, 5L), (2L, 5L)),
@@ -181,7 +183,7 @@ class DedupSpec extends SparkSuite {
     import spark.implicits._
     val fp = Seq((1L, "alpha beta gamma delta"), (2L, "alpha beta gamma delta"))
       .toDF("doc_id", "text")
-      .select(Dedup.simhashFingerprint(col("text")).as("fp")).collect()
+      .select(DedupTwins.simhashFingerprint(col("text")).as("fp")).collect()
     assert(fp(0).getLong(0) == fp(1).getLong(0))
 
     val pairs = Dedup.simhashPairs(docs, 16).collect()
@@ -271,7 +273,7 @@ class DedupSpec extends SparkSuite {
       if ia < ib && cos(va, vb) >= minCos
     } yield (ia, ib)).toSet
     assert(truth.nonEmpty, "fixture must contain similar pairs")
-    val got = Dedup.embeddingPairsQuantized(emb, minCos,
+    val got = Dedup.embeddingPairsPortable(emb, minCos,
       Dedup.planesForCorpus(vecs.length.toLong, 8)).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // exact-cosine verification inside the pipeline ⇒ no false positives
@@ -299,7 +301,7 @@ class DedupSpec extends SparkSuite {
     }
     val emb = (base ++ planted).toSeq.toDF("vec_id", "embedding")
     val nPlanes = Dedup.planesForCorpus(base.length * 2L, 8)
-    val got = Dedup.embeddingPairsQuantized(emb, 0.999, nPlanes).collect()
+    val got = Dedup.embeddingPairsPortable(emb, 0.999, nPlanes).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // every (original, nudged-twin) pair must surface: at cos ≥ 0.999 a
     // missed pair needs ≥3 sign flips across near-identical vectors

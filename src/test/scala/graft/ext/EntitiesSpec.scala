@@ -52,16 +52,4 @@ class EntitiesSpec extends SparkSuite {
     assert(strict.length == 1, "edits=2 pairs drop at maxEdits=1")
   }
 
-  test("JW arm: planted dupes recalled at 900000 micro, blocking holds") {
-    import spark.implicits._
-    val recs = Seq(
-      (1L, "Customer#000001", 7L),
-      (2L, "Cstomer#000001", 7L),   // deletion dupe of 1 (same block)
-      (3L, "Customer#000001", 9L),  // same name, other nation → other block
-      (4L, "Zebra#000001", 7L))     // same block suffix, far name
-      .toDF("rec_id", "name", "nation")
-    val out = Entities.entityMatchesJw(recs, 900000L).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    assert(out.toSeq === Seq((1L, 2L)))
-  }
 }

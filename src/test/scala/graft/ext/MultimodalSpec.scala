@@ -1,9 +1,18 @@
 package graft.ext
 
+import org.apache.spark.sql.{DataFrame, Dataset}
+
 import graft.SparkSuite
 
 /** Multimodal plumbing: schema, determinism, partition-wise extraction. */
 class MultimodalSpec extends SparkSuite {
+
+  /** Decode-included twin of `dedup_audio_fp`: fingerprints decoded in
+    * the same execution instead of read from the standing table. */
+  private def audioFpPairs(media: Dataset[Multimodal.MediaRow],
+      maxDist: Int): DataFrame =
+    Multimodal.bandedHammingPairs(Multimodal.audioFingerprints(media),
+      bands = 9, bits = 7, maxDist)
 
   test("media table: binary payload + typed metadata, stable schema") {
     val m = Multimodal.mediaTable(spark, sfDir)
@@ -374,7 +383,7 @@ class MultimodalSpec extends SparkSuite {
     val aMemo = Multimodal.bandedHammingPairs(
       Multimodal.audioFpTable(spark, sfDir), bands = 9, bits = 7, maxDist = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-    val aDecode = Multimodal.audioFpPairs(
+    val aDecode = audioFpPairs(
       Multimodal.syntheticAudioPairs(spark, sfDir), maxDist = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
     assert(aMemo === aDecode)
@@ -390,7 +399,8 @@ class MultimodalSpec extends SparkSuite {
     val iMemo = Multimodal.imageAHashTable(spark, sfDir)
       .orderBy(org.apache.spark.sql.functions.col("doc_id"))
       .collect().map(_.toSeq).toSeq
-    val iDecode = Multimodal.imageAHashQuery(spark, sfDir)
+    val iDecode = Multimodal.imageAHashes(spark, sfDir)
+      .orderBy(org.apache.spark.sql.functions.col("doc_id"))
       .collect().map(_.toSeq).toSeq
     assert(iMemo === iDecode)
     // and the standing-table query plan decodes NOTHING: it is a scan
@@ -425,7 +435,7 @@ class MultimodalSpec extends SparkSuite {
       assert(fp === closedForm(id), s"decode drift for clip $id")
     }
     // planted recall through the declared banded-join surface
-    val pairs = Multimodal.audioFpPairs(
+    val pairs = audioFpPairs(
       Multimodal.syntheticAudioPairs(spark, sfDir), maxDist = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     val planted = viaWav.keys.filter { id =>

@@ -20,7 +20,8 @@ class PipelineSpec extends SparkSuite {
       (1L, "s", "e f g"),          // 3 tokens, cum 7  → seq 0..0
       (2L, "s", "h i j k l m"),    // 6 tokens, cum 13 → starts in 0, ends in 1
       (3L, "s", "n o")))           // 2 tokens, cum 15 → seq 1..1
-    val out = Pipeline.packSequences(d, seqLen = 8, nShards = 1)
+    val out = Pipeline.packSequencesWith(d, Tokenizer.docTokenCounts(d),
+      seqLen = 8, nShards = 1)
       .select("doc_id", "first_seq", "last_seq", "straddles").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
     assert(out.toSeq == Seq(
@@ -30,7 +31,8 @@ class PipelineSpec extends SparkSuite {
 
   test("packSequences: token conservation and contiguity per shard") {
     val d = graft.core.Tables.documents(spark, sfDir)
-    val packed = Pipeline.packSequences(d, seqLen = 64, nShards = 4).cache()
+    val packed = Pipeline.packSequencesWith(d, Tokenizer.docTokenCounts(d),
+      seqLen = 64, nShards = 4).cache()
     try {
       // every shard starts at sequence 0 (no leading hole)
       val starts = packed.groupBy("source", "shard")
@@ -53,7 +55,8 @@ class PipelineSpec extends SparkSuite {
   test("packSequences: empty documents are excluded, never bin-shifted") {
     val d = docs(Seq((0L, "s", "a b"), (1L, "s", ""), (2L, "s", "   "),
       (3L, "s", "c d e")))
-    val out = Pipeline.packSequences(d, seqLen = 4, nShards = 1).collect()
+    val out = Pipeline.packSequencesWith(d, Tokenizer.docTokenCounts(d),
+      seqLen = 4, nShards = 1).collect()
     assert(out.map(_.getLong(0)).toSeq == Seq(0L, 3L),
       "zero-token docs contribute nothing to any sequence")
     // doc 3 starts right after doc 0's two tokens: cum 2 → first_seq 0
@@ -63,14 +66,17 @@ class PipelineSpec extends SparkSuite {
 
   test("packSequences: invariant under input partitioning (the 100 TB property)") {
     val d = graft.core.Tables.documents(spark, sfDir)
-    val a = Pipeline.packSequences(d, 32, 4).collect().toSeq
-    val b = Pipeline.packSequences(d.repartition(13), 32, 4).collect().toSeq
+    val a = Pipeline.packSequencesWith(d, Tokenizer.docTokenCounts(d),
+      32, 4).collect().toSeq
+    val b = Pipeline.packSequencesWith(d.repartition(13),
+      Tokenizer.docTokenCounts(d.repartition(13)), 32, 4).collect().toSeq
     assert(a == b)
   }
 
   test("mixtureWeights: weights normalize, order by sqrt of token mass") {
     val d = graft.core.Tables.documents(spark, sfDir)
-    val m = Pipeline.mixtureWeights(d, budget = 1000L).collect()
+    val m = Pipeline.mixtureWeightsWith(d, Tokenizer.docTokenCounts(d),
+      budget = 1000L).collect()
     val wsum = m.map(_.getAs[Double]("weight")).sum
     assert(math.abs(wsum - 1.0) < 1e-9, s"weights must sum to 1, got $wsum")
     // temperature scaling preserves the token-mass ORDER but compresses it:
@@ -167,15 +173,6 @@ class PipelineSpec extends SparkSuite {
     assert(got == run(), "pure function of the corpus — no RNG state")
   }
 
-  test("interleaveScalable: prefix-sum path is bit-equal to the declared windows") {
-    val d = spark.read.parquet(s"$sfDir/documents.parquet")
-    val declared = Pipeline.interleave(d).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
-    val scalable = Pipeline.interleaveScalable(d, parts = 8).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
-    assert(scalable == declared)
-  }
-
   /** Driver-side md5 emulation of the epoch-shuffle manifest: the
     * engine's per-(epoch, shard) counts and residue checksums must
     * equal a plain-Java recompute, and at least one document must land
@@ -207,7 +204,7 @@ class PipelineSpec extends SparkSuite {
   test("fertility: per-lang sums re-derive from the tokenizer relation; " +
       "milli ratio is the floor division") {
     val docs = graft.core.Tables.documents(spark, sfDir)
-    val got = Pipeline.fertility(docs).collect()
+    val got = Pipeline.fertilityWith(docs, Tokenizer.docTokenCounts(docs)).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toMap
     // independent re-derivation: words by split, subtokens by the same

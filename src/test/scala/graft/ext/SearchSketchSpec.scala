@@ -335,8 +335,8 @@ class SearchSketchSpec extends SparkSuite {
     // from 'hellx' — frequency must pick 'hello'
     val docs = Seq((1L, "hello hello hello hella world"))
       .toDF("doc_id", "text")
-    val got = Search.spellSuggest(docs,
-      Seq("helo", "hellx", "wrold", "world", "hella"))
+    val got = Search.spellSuggestFromCounts(spark,
+      Tokenizer.wordCounts(docs), Seq("helo", "hellx", "wrold", "world", "hella"))
       .collect().map(r => r.getString(0) ->
         (Option(r.getString(1)), Option(r.get(2)))).toMap
     assert(got("helo")._1 === Some("hello"), "single deletion corrected")

@@ -42,15 +42,16 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("LSH cell probe: results are a subset of the query's cell, ranked by cosine") {
-    val lsh = Similarity.lshTopK(spark, sfDir, 0L, 10).collect()
+    val lsh = Similarity.lshTopKPortable(spark, sfDir, 0L, 10).collect()
     assert(lsh.nonEmpty && lsh.length <= 10)
-    val cosines = lsh.map(_.getDouble(1)).toSeq
-    assert(cosines == cosines.sortBy(-_), "descending cosine order")
-    // recall vs brute force: every LSH hit must be a real vector with the
-    // cosine the brute-force scorer assigns it (same scoring path)
+    assert(lsh.map(_.getInt(1)).toSeq == (1 to lsh.length), "contiguous ranks")
+    // every LSH hit must be a real vector, in the relative order the
+    // brute-force scorer gives it (same cosine, same tie-break)
     val brute = Similarity.bruteForceTopK(spark, sfDir, 0L, 500)
-      .collect().map(_.getLong(0)).toSet
-    assert(lsh.map(_.getLong(0)).forall(brute.contains))
+      .collect().map(_.getLong(0)).toSeq
+    val ids = lsh.map(_.getLong(0)).toSeq
+    assert(ids.forall(brute.contains))
+    assert(ids == ids.sortBy(brute.indexOf(_)), "descending cosine order")
   }
 
   test("knn_join: batch result agrees with the single-query probe, " +
@@ -79,7 +80,7 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("IVF probe: results come from the probed cells, ranked, with good recall") {
-    val ivf = Similarity.ivfTopK(spark, sfDir, 0L, 10, nprobe = 3).collect()
+    val ivf = SimilarityTwins.ivfTopK(spark, sfDir, 0L, 10, nprobe = 3).collect()
     assert(ivf.nonEmpty && ivf.length <= 10)
     val cosines = ivf.map(_.getDouble(1)).toSeq
     assert(cosines == cosines.sortBy(-_))
@@ -97,7 +98,7 @@ class SimilaritySpec extends SparkSuite {
     val rows = probe.collect()
     // the precomputed path must return exactly what the ad-hoc
     // assignment-per-query path returns (same policy, same tie-breaks)
-    val adhoc = Similarity.ivfTopK(spark, sfDir, 0L, 10, nprobe = 3).collect()
+    val adhoc = SimilarityTwins.ivfTopK(spark, sfDir, 0L, 10, nprobe = 3).collect()
     assert(rows.map(_.getLong(0)).toSeq == adhoc.map(_.getLong(0)).toSeq)
     val p = probe.queryExecution.executedPlan.toString
     // cell IN (...) must land in PartitionFilters (directory pruning:
@@ -106,7 +107,7 @@ class SimilaritySpec extends SparkSuite {
       .findFirstIn(p).isDefined, s"cell predicate not a PartitionFilter:\n$p")
     assert(!p.contains("Exchange hashpartitioning"), s"probe must not shuffle:\n$p")
     // and the probe physically reads fewer cells than the index holds
-    val path = Similarity.ivfIndexPath(sfDir)
+    val path = Similarity.ensureIvfIndex(spark, sfDir)
     val nCells = spark.read.parquet(s"$path/index")
       .select("cell").distinct().count()
     assert(probe.select("cell").distinct().count() <= 3 && nCells == 10)
@@ -164,11 +165,14 @@ class SimilaritySpec extends SparkSuite {
     val dst = new java.io.File(tmp, "embeddings.parquet")
     java.nio.file.Files.copy(
       new java.io.File(s"$sfDir/embeddings.parquet").toPath, dst.toPath)
-    val p1 = Similarity.ivfIndexPath(tmp.getAbsolutePath)
-    assert(p1 == Similarity.ivfIndexPath(tmp.getAbsolutePath), "stable")
+    def indexPath = graft.core.ParquetMemo.cachePath(
+      s"${tmp.getAbsolutePath}/embeddings.parquet", "ivf",
+      Similarity.IndexAlgoVersion)
+    val p1 = indexPath
+    assert(p1 == indexPath, "stable")
     // same path, new mtime (a regenerated fixture) → different index dir
     assert(dst.setLastModified(dst.lastModified() + 60000))
-    assert(Similarity.ivfIndexPath(tmp.getAbsolutePath) != p1,
+    assert(indexPath != p1,
       "regenerated source must not reuse the old index")
   }
 
@@ -202,7 +206,6 @@ class SimilaritySpec extends SparkSuite {
 
   test("matryoshka: rerank stage IS the brute-force order restricted to " +
       "the prefix candidates; full-prefix funnel degenerates to brute force") {
-    import org.apache.spark.sql.functions._
     val got = Similarity.matryoshkaTopK(spark, sfDir, 0L, 10, dp = 16, c = 50)
       .collect().map(r => (r.getLong(0), r.getInt(1)))
     assert(got.map(_._2).toSeq === (1 to 10), "ranks must be dense 1..k")
@@ -467,7 +470,7 @@ class SimilaritySpec extends SparkSuite {
       .select(expr("concat(v, array(0d))").as("qa"))
     val reduced = aug.filter(col("vec_id") =!= 0L)
       .crossJoin(q)
-      .withColumn("c", Similarity.cosineHof(col("va"), col("qa")))
+      .withColumn("c", SimilarityTwins.cosineHof(col("va"), col("qa")))
       .orderBy(col("c").desc, col("vec_id"))
       .limit(3).collect().map(_.getLong(0)).toSeq
     assert(reduced === mips)

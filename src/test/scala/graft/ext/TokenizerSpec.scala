@@ -52,7 +52,8 @@ class TokenizerSpec extends SparkSuite {
 
   test("pack sequences budget exactly on the subword counts") {
     val docs = graft.core.Tables.documents(spark, sfDir)
-    val packed = Pipeline.packSequences(docs, seqLen = 256, nShards = 4)
+    val packed = Pipeline.packSequencesWith(docs, Tokenizer.docTokenCounts(docs),
+      seqLen = 256, nShards = 4)
     val viaTok = Tokenizer.docTokenCounts(docs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     packed.select("doc_id", "n_tokens").collect().foreach { r =>
@@ -78,7 +79,7 @@ class TokenizerSpec extends SparkSuite {
     // round 2 symbols: a,ab ×3 / ab ×1 → pairs: (a,ab)=3 → rank 2
     val docs = Seq((1L, "aab aab ab"), (2L, "aab"))
       .toDF("doc_id", "text")
-    val got = Tokenizer.bpeTrain(docs, 2)
+    val got = Tokenizer.bpeTrainFromCounts(Tokenizer.wordCounts(docs), 2)
       .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2),
         r.getLong(3)))
     assert(got.toSeq === Seq((1, "a", "b", 4L), (2, "a", "ab", 3L)))
@@ -87,7 +88,8 @@ class TokenizerSpec extends SparkSuite {
   test("bpe training is bit-identical across partitionings") {
     val docs = graft.core.Tables.documents(spark, sfDir)
     def run(parts: Int) =
-      Tokenizer.bpeTrain(docs.repartition(parts), 3)
+      Tokenizer.bpeTrainFromCounts(
+        Tokenizer.wordCounts(docs.repartition(parts)), 3)
         .collect().map(_.toSeq).toSeq
     assert(run(2) === run(8))
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
 import graft.SparkSuite
-import graft.ext.Similarity
+import graft.ext.{Similarity, SimilarityTwins}
 
 /** Native CosineSimilarity expression: bit-parity with the HOF twin,
   * codegen path actually taken, SQL registration via GraftExtensions'
@@ -17,7 +17,7 @@ class CosineSimilaritySpec extends SparkSuite {
     val vecs = Seq.fill(300)((g.sample.get.toArray, g.sample.get.toArray))
     val df = vecs.toDF("a", "b").select(
       Similarity.cosine(col("a"), col("b")).as("native"),
-      Similarity.cosineHof(col("a"), col("b")).as("hof"))
+      SimilarityTwins.cosineHof(col("a"), col("b")).as("hof"))
     val rows = df.collect()
     rows.foreach(r => assert(r.getDouble(0) == r.getDouble(1),
       s"native ${r.getDouble(0)} != hof ${r.getDouble(1)}"))
@@ -30,7 +30,7 @@ class CosineSimilaritySpec extends SparkSuite {
     val vecs = Seq.fill(300)((g.sample.get.toArray, g.sample.get.toArray))
     val rows = vecs.toDF("a", "b").select(
       Similarity.dotNative(col("a"), col("b")).as("native"),
-      Similarity.dot(col("a"), col("b")).as("hof")).collect()
+      SimilarityTwins.dot(col("a"), col("b")).as("hof")).collect()
     rows.foreach(r => assert(r.getDouble(0) == r.getDouble(1),
       s"native ${r.getDouble(0)} != hof ${r.getDouble(1)}"))
     // whole-stage codegen on a parquet-backed scan (the MIPS shape)

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
-import graft.ext.Dedup
+import graft.ext.{Dedup, DedupTwins}
 
 /** The native md5-family signature must be bit-identical to the
   * interpreted conv(substring(md5(...))) chain the DuckDB oracle
@@ -16,7 +16,7 @@ class Md5MinHashSigSpec extends SparkSuite {
     val k = 4
     val compare = sh.select(Seq(col("doc_id")) ++ (0 until k).map(i =>
       (element_at(Md5MinHashSig.md5_minhash_sig(col("sh"), k), i + 1) <=>
-        Dedup.md5SlotHof(col("sh"), i)).as(s"eq$i")): _*)
+        DedupTwins.md5SlotHof(col("sh"), i)).as(s"eq$i")): _*)
     val bad = compare.filter((0 until k).map(i => !col(s"eq$i")).reduce(_ || _))
     assert(bad.count() == 0, "native and HOF md5 slots diverge")
   }
@@ -29,8 +29,8 @@ class Md5MinHashSigSpec extends SparkSuite {
       (3L, Seq[String](null, "a b c"))).toDF("id", "sh")
     val out = df.select(col("id"),
       Md5MinHashSig.md5_minhash_sig(col("sh"), 2).as("sig"),
-      Dedup.md5SlotHof(col("sh"), 0).as("hof0"),
-      Dedup.md5SlotHof(col("sh"), 1).as("hof1"))
+      DedupTwins.md5SlotHof(col("sh"), 0).as("hof0"),
+      DedupTwins.md5SlotHof(col("sh"), 1).as("hof1"))
       .orderBy(col("id")).collect()
     // clean row: slots equal the HOF chain
     assert(out(0).getSeq[Long](1) ==

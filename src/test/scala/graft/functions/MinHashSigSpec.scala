@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
-import graft.ext.Dedup
+import graft.ext.{Dedup, DedupTwins}
 
 /** Native MinHashSig expression: structural parity with the HOF twin
   * (signature properties, not values — different hash family), codegen
@@ -16,7 +16,7 @@ class MinHashSigSpec extends SparkSuite {
       .toDF("doc_id", "text")
       .select(col("doc_id"), Dedup.shingles(col("text"), 3).as("sh"))
     val s = if (native) Dedup.minhashSignature(col("sh"))
-            else Dedup.minhashSignatureHof(col("sh"))
+            else DedupTwins.minhashSignatureHof(col("sh"))
     df.select(s.as("sig")).orderBy(col("doc_id"))
       .collect().map(_.getSeq[Long](0)).toSeq
   }

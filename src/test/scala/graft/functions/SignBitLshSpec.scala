@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
-import graft.ext.Similarity
+import graft.ext.SimilarityTwins
 
 /** The native quantizer must be bit-identical to the interpreted HOF
   * formulation it replaces — same hash chain, same component math, same
@@ -30,7 +30,7 @@ class SignBitLshSpec extends SparkSuite {
         transform(col("embedding"), x => x.cast("double")).as("v"))
     for (nPlanes <- Seq(2, 4, 7, 13)) {
       val diff = emb.select(
-        Similarity.lshCell(col("v"), 64, nPlanes).as("hof"),
+        SimilarityTwins.lshCell(col("v"), 64, nPlanes).as("hof"),
         SignBitLsh.sign_bit_lsh(col("v"), 64, nPlanes).as("native"))
         .filter(col("hof") =!= col("native")).count()
       assert(diff == 0, s"nPlanes=$nPlanes: $diff rows differ")
@@ -47,7 +47,7 @@ class SignBitLshSpec extends SparkSuite {
       Seq[java.lang.Double](1.0, 2.0, 3.0, 4.0))     // long
       .toDF("v")
     val out = rows.select(
-      Similarity.lshCell(col("v"), 3, 4).as("hof"),
+      SimilarityTwins.lshCell(col("v"), 3, 4).as("hof"),
       SignBitLsh.sign_bit_lsh(col("v"), 3, 4).as("native")).collect()
     // clean, null-element and short rows: native ≡ HOF
     out.take(3).zipWithIndex.foreach { case (r, i) =>
@@ -68,9 +68,9 @@ class SignBitLshSpec extends SparkSuite {
     val emb = graft.core.Tables.embeddings(spark, sfDir)
       .select(transform(col("embedding"), x => x.cast("double")).as("v"))
     for (nPlanes <- Seq(2, 4, 7)) {
-      val planes = Similarity.md5Planes(nPlanes, 64)
+      val planes = SimilarityTwins.md5Planes(nPlanes, 64)
       val diff = emb.select(
-        Similarity.lshCellFromPlanes(col("v"), planes).as("hof"),
+        SimilarityTwins.lshCellFromPlanes(col("v"), planes).as("hof"),
         SignBitLsh.sign_bit_lsh_md5(col("v"), 64, nPlanes).as("native"))
         .filter(col("hof") =!= col("native")).count()
       assert(diff == 0, s"nPlanes=$nPlanes: $diff rows differ")
@@ -84,9 +84,9 @@ class SignBitLshSpec extends SparkSuite {
       Seq[java.lang.Double](1.0, null, 3.0),
       Seq[java.lang.Double](1.0, 2.0),
       Seq[java.lang.Double](1.0, 2.0, 3.0, 4.0)).toDF("v")
-    val planes3 = Similarity.md5Planes(4, 3)
+    val planes3 = SimilarityTwins.md5Planes(4, 3)
     val out = rows.select(
-      Similarity.lshCellFromPlanes(col("v"), planes3).as("hof"),
+      SimilarityTwins.lshCellFromPlanes(col("v"), planes3).as("hof"),
       SignBitLsh.sign_bit_lsh_md5(col("v"), 3, 4).as("native")).collect()
     out.zipWithIndex.foreach { case (r, i) =>
       assert(r.getInt(0) == r.getInt(1), s"row $i: hof=${r.get(0)} native=${r.get(1)}")
@@ -98,7 +98,7 @@ class SignBitLshSpec extends SparkSuite {
     val hex = md.digest("2:5".getBytes("UTF-8")).map(b => f"$b%02x").mkString
     val expect = java.lang.Long.parseLong(hex.substring(0, 13), 16).toDouble /
       4503599627370496.0 * 2.0 - 1.0
-    assert(Similarity.md5Planes(4, 8)(2)(5) == expect)
+    assert(SimilarityTwins.md5Planes(4, 8)(2)(5) == expect)
   }
 
   test("SQL registration through GraftExtensions function injection") {

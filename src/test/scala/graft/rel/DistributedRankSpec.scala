@@ -157,7 +157,8 @@ class DistributedRankSpec extends SparkSuite {
         .collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
         .toSeq
       for (parts <- Seq(1, 4, 16)) {
-        val got = DistributedRank.skylineOver(mx, parts)
+        val got = DistributedRank.skylineFrontier(mx, parts)
+          .orderBy(col("grp"), col("v"))
           .collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
           .toSeq
         assert(got == expected, s"trial=$trial parts=$parts")

@@ -20,7 +20,7 @@ class GraphSpec extends SparkSuite {
     * equality, not tolerance). */
   test("path graph: middle vertex outranks tied endpoints") {
     val e = edges(1L -> 2L, 2L -> 1L, 2L -> 3L, 3L -> 2L)
-    val r = Graph.pageRank(e, iters = 5)
+    val r = GraphTwins.pageRank(e, iters = 5)
       .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(r(1) === r(3), "symmetric endpoints must tie bit-exactly")
     assert(r(2) > r(1), "middle vertex must concentrate rank")
@@ -32,7 +32,7 @@ class GraphSpec extends SparkSuite {
   test("rank mass is conserved within the floor-rounding budget") {
     val e = edges(1L -> 2L, 2L -> 1L, 2L -> 3L, 3L -> 2L, 1L -> 3L, 3L -> 1L)
     val iters = 4
-    val total = Graph.pageRank(e, iters)
+    val total = GraphTwins.pageRank(e, iters)
       .agg(sum(col("rank"))).head().getLong(0)
     val exact = 3L * Graph.Scale
     assert(total <= exact, s"mass grew: $total > $exact")
@@ -46,7 +46,7 @@ class GraphSpec extends SparkSuite {
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
       .select("l_orderkey", "l_partkey")
     def run(parts: Int) =
-      Graph.partPageRank(li.repartition(parts), iters = 3, k = 50)
+      GraphTwins.partPageRank(li.repartition(parts), iters = 3, k = 50)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(run(1) === run(8))
   }
@@ -101,9 +101,11 @@ class GraphSpec extends SparkSuite {
   test("co-purchase edges are distinct, symmetric, self-loop-free") {
     val li = Seq((1L, 10L), (1L, 11L), (1L, 10L), (2L, 10L), (2L, 12L), (3L, 13L))
       .toDF("l_orderkey", "l_partkey")
-    val got = Graph.coPurchaseEdges(li)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got === Set((10L, 11L), (11L, 10L), (10L, 12L), (12L, 10L)))
+    val got = Graph.weightedCoPurchaseEdges(li)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    // the duplicated (order 1, part 10) line must not inflate w
+    assert(got === Set((10L, 11L, 1L), (11L, 10L, 1L), (10L, 12L, 1L),
+      (12L, 10L, 1L)))
   }
 
   /** Components over a mirrored edge set: min-id labels, exact sizes,
@@ -238,7 +240,7 @@ class GraphSpec extends SparkSuite {
     * persist() is not — observed re-exchange per iteration). */
   test("iteration joins reuse the checkpointed adjacency partitioning") {
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-    val p = Graph.partPageRank(li, iters = 2, k = 10)
+    val p = GraphTwins.partPageRank(li, iters = 2, k = 10)
       .queryExecution.executedPlan.toString
     assert(p.contains("Scan ExistingRDD"), s"adjacency not checkpointed:\n$p")
   }
@@ -401,7 +403,7 @@ class GraphSpec extends SparkSuite {
   test("hits: hand bipartite graph ranks authorities and hubs") {
     // hubs 1..3, authorities 10..11; supplier 10 has 3 buyers, 11 has 1
     val e = Seq((1L, 10L), (2L, 10L), (3L, 10L), (1L, 11L)).toDF("c", "s")
-    val out = Graph.hits(e, iters = 4)
+    val out = GraphTwins.hits(e, iters = 4)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     val auth = out.filter(_._1 == "authority").map(x => x._2 -> x._3).toMap
     val hubs = out.filter(_._1 == "hub").map(x => x._2 -> x._3).toMap
@@ -417,9 +419,9 @@ class GraphSpec extends SparkSuite {
   test("hits: bit-identical across partitionings") {
     val o = spark.read.parquet(s"$sfDir/orders.parquet")
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-    val base = Graph.custSupplierHits(o, li, iters = 3)
+    val base = GraphTwins.custSupplierHits(o, li, iters = 3)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    val repart = Graph.custSupplierHits(o.repartition(7), li.repartition(13), iters = 3)
+    val repart = GraphTwins.custSupplierHits(o.repartition(7), li.repartition(13), iters = 3)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     assert(base === repart)
   }
@@ -428,7 +430,7 @@ class GraphSpec extends SparkSuite {
   test("hits: bucketed and generic paths agree bit-exactly") {
     val o = spark.read.parquet(s"$sfDir/orders.parquet")
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-    val generic = Graph.custSupplierHits(o, li, iters = 4)
+    val generic = GraphTwins.custSupplierHits(o, li, iters = 4)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     val bucketed = Graph.custSupplierHitsBucketed(spark, sfDir, iters = 4)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
@@ -445,7 +447,7 @@ class GraphSpec extends SparkSuite {
       Seq(a -> b, b -> a, b -> c, c -> b, a -> c, c -> a)
     val e = (tri(1L, 2L, 3L) ++ tri(10L, 11L, 12L)).toDF("src", "dst")
     val seeds = Seq(Tuple1(1L)).toDF("node")
-    val r = Graph.personalizedPageRank(e, seeds, iters = 4)
+    val r = GraphTwins.personalizedPageRank(e, seeds, iters = 4)
       .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(r.keySet === Set(1L, 2L, 3L),
       s"sparse frontier leaked outside the seed component: ${r.keySet}")
@@ -463,7 +465,7 @@ class GraphSpec extends SparkSuite {
       half.select(col("dst").as("src"), col("src").as("dst")))
     val seeds = edges.select(col("src").as("node")).distinct()
       .filter(col("node") % 97 === 0)
-    val generic = Graph.personalizedPageRank(edges.repartition(11), seeds, iters = 4)
+    val generic = GraphTwins.personalizedPageRank(edges.repartition(11), seeds, iters = 4)
       .orderBy(col("rank").desc, col("node")).limit(50)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val bucketed = Graph.partPprBucketed(spark, sfDir, iters = 4, k = 50)
@@ -475,7 +477,7 @@ class GraphSpec extends SparkSuite {
     * the physical strategy must not move the answer. */
   test("bucketed and generic pagerank agree bit-exactly") {
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-    val a = Graph.partPageRank(li, iters = 5, k = 100)
+    val a = GraphTwins.partPageRank(li, iters = 5, k = 100)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val b = Graph.partPageRankBucketed(spark, sfDir, iters = 5, k = 100)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -489,9 +491,9 @@ class GraphSpec extends SparkSuite {
     val half = Seq((1L, 2L), (1L, 3L), (2L, 3L), (1L, 4L))
     val edges = (half ++ half.map(_.swap)).toDF("src", "dst")
     val uni = edges.withColumn("w", lit(1L))
-    val a = Graph.pageRank(edges, iters = 4)
+    val a = GraphTwins.pageRank(edges, iters = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val b = Graph.pageRankWeighted(uni, iters = 4)
+    val b = GraphTwins.pageRankWeighted(uni, iters = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(a === b, "w = 1 everywhere must equal the uniform split exactly")
     // star: center 1 sends to 2 with weight 9, to 3 with weight 1 —
@@ -499,7 +501,7 @@ class GraphSpec extends SparkSuite {
     val skewHalf = Seq((1L, 2L, 9L), (1L, 3L, 1L))
     val skew = (skewHalf ++ skewHalf.map { case (s, d, w) => (d, s, w) })
       .toDF("src", "dst", "w")
-    val got = Graph.pageRankWeighted(skew, iters = 1)
+    val got = GraphTwins.pageRankWeighted(skew, iters = 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val base = Graph.Scale * 15L / 100L
     val recv2 = got(2L) - base
@@ -666,93 +668,6 @@ class GraphSpec extends SparkSuite {
     assert(run(2) === run(16))
   }
 
-  test("max spanning forest: hand case with a weight tie and two components") {
-    // triangle 1-2 (w3), 2-3 (w2), 1-3 (w2): forest keeps 1-2 and the
-    // TIE between the two w=2 edges breaks to the smaller (u,v) = (1,3);
-    // disjoint pair 10-11 forms its own tree
-    val half = Seq((1L, 2L, 3L), (2L, 3L, 2L), (1L, 3L, 2L), (10L, 11L, 5L))
-      .toDF("u", "v", "w")
-    val got = Graph.maxSpanningForest(half)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(got.toSet === Set((1L, 2L, 3L), (1L, 3L, 2L), (10L, 11L, 5L)))
-  }
-
-  test("max spanning forest: chained merges need a deep contraction") {
-    // path 1-2-3-4-5 with rising weights: round 1 picks 1-2? no —
-    // every component picks its best incident edge; the pick graph
-    // chains (1→2, 2→3, 3→4, 4→5 by weight), so contraction must
-    // collapse a 5-long chain in one round (the CC reuse, not a
-    // single-hop merge)
-    val half = Seq((1L, 2L, 1L), (2L, 3L, 2L), (3L, 4L, 3L), (4L, 5L, 4L))
-      .toDF("u", "v", "w")
-    val out = Graph.maxSpanningForest(half)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    // a 5-vertex path: the spanning tree is the path itself
-    assert(out.toSet === Set((1L, 2L, 1L), (2L, 3L, 2L), (3L, 4L, 3L),
-      (4L, 5L, 4L)))
-  }
-
-  test("max spanning forest: equals driver Kruskal on the sf0.001 backbone") {
-    val li = graft.core.Tables.lineitem(spark, sfDir)
-    val a = li.select(col("l_orderkey").as("ok"), col("l_partkey").as("u"))
-    val b = li.select(col("l_orderkey").as("ok"), col("l_partkey").as("v"))
-    val weighted = a.join(b, Seq("ok")).filter(col("u") < col("v"))
-      .groupBy(col("u"), col("v"))
-      .agg(count(org.apache.spark.sql.functions.lit(1)).as("w"))
-    val half = weighted.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    // Kruskal under the SAME total order (w desc, u asc, v asc) — the
-    // strict order makes the forest unique, so the edge SETS must match
-    val parent = scala.collection.mutable.Map[Long, Long]()
-    def find(x: Long): Long = {
-      parent.getOrElseUpdate(x, x)
-      var r = x
-      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
-      r
-    }
-    val kruskal = scala.collection.mutable.Set[(Long, Long, Long)]()
-    half.sortBy { case (u, v, w) => (-w, u, v) }.foreach { case (u, v, w) =>
-      val (ru, rv) = (find(u), find(v))
-      if (ru != rv) { parent(math.max(ru, rv)) = math.min(ru, rv)
-        kruskal += ((u, v, w)) }
-    }
-    val got = Graph.maxSpanningForest(weighted)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got === kruskal.toSet)
-    assert(got.nonEmpty)
-  }
-
-  test("MIS: independent, maximal, partitioning-invariant") {
-    val li = graft.core.Tables.lineitem(spark, sfDir)
-    val half = Graph.backboneEdges(li, 2L)
-      .select(col("src"), col("dst"))
-    val mis = Graph.maximalIndependentSet(half)
-      .collect().map(_.getLong(0)).toSet
-    val edges = half.collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(mis.nonEmpty)
-    // independence: no surviving edge inside the set
-    assert(!edges.exists { case (a, b) => mis(a) && mis(b) })
-    // maximality: every vertex outside the set touches a member
-    val verts = edges.flatMap(e => Seq(e._1, e._2)).toSet
-    val uncovered = (verts -- mis).filterNot { v =>
-      edges.exists { case (a, b) =>
-        (a == v && mis(b)) || (b == v && mis(a)) }
-    }
-    assert(uncovered.isEmpty, s"non-members with no MIS neighbor: $uncovered")
-    // determinism under repartitioning
-    val again = Graph.maximalIndependentSet(half.repartition(7))
-      .collect().map(_.getLong(0)).toSet
-    assert(again === mis)
-  }
-
-  test("MIS: star graph resolves to the center or all leaves") {
-    val half = Seq((0L, 1L), (0L, 2L), (0L, 3L), (0L, 4L), (0L, 5L))
-      .toDF("src", "dst")
-    val mis = Graph.maximalIndependentSet(half)
-      .collect().map(_.getLong(0)).toSet
-    assert(mis === Set(0L) || mis === Set(1L, 2L, 3L, 4L, 5L))
-  }
-
   test("rich club: hand ladder on a hub triangle with pendants") {
     import spark.implicits._
     // orders plant a triangle 1-2-3 (each pair co-bought twice) plus
@@ -765,7 +680,13 @@ class GraphSpec extends SparkSuite {
     val li = orders.zipWithIndex.flatMap { case (ps, ok) =>
       ps.map(p => (ok.toLong, p)) }
       .toDF("l_orderkey", "l_partkey")
-    val got = Graph.richClub(li).collect()
+    // the declared surface's form over the mirrored support-2
+    // backbone: half = src<dst filter, degree = the src-side reduce
+    // (each undirected edge appears once per direction)
+    val half = Graph.backboneEdges(li, 2L)
+    val mirrored = half.unionByName(
+      half.select(col("dst").as("src"), col("src").as("dst")))
+    val got = Graph.richClubFromMirrored(mirrored).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         Option(r.get(3)).map(_.asInstanceOf[Long]))).toSeq
     // k=1: nodes {1,2,3} (deg>1), edges among them = 3 → phi = 10^6
@@ -775,52 +696,6 @@ class GraphSpec extends SparkSuite {
       (2L, 1L, 0L, None),
       (4L, 0L, 0L, None),
       (8L, 0L, 0L, None)))
-    // the declared surface's standing-backbone form is row-identical:
-    // half = src<dst filter of the mirrored relation, degree = the
-    // src-side reduce (each undirected edge appears once per direction)
-    val half = Graph.backboneEdges(li, 2L)
-    val mirrored = half.unionByName(
-      half.select(org.apache.spark.sql.functions.col("dst").as("src"),
-        org.apache.spark.sql.functions.col("src").as("dst")))
-    val got2 = Graph.richClubFromMirrored(mirrored).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        Option(r.get(3)).map(_.asInstanceOf[Long]))).toSeq
-    assert(got2 === got)
-  }
-
-  test("core decomposition: clique-with-tail hand cores; driver reference") {
-    import spark.implicits._
-    // triangle 1-2-3 (core 2) with tail 3-4-5 (core 1)
-    val half = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L))
-    val e = (half ++ half.map(p => (p._2, p._1))).toDF("src", "dst")
-    val got = Graph.coreDecomposition(e)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === Map(1L -> 2L, 2L -> 2L, 3L -> 2L, 4L -> 1L, 5L -> 1L))
-    // driver reference peeling on the sf0.001 backbone
-    val li = graft.core.Tables.lineitem(spark, sfDir)
-    val bb = Graph.backboneEdges(li, 2L)
-    val sym = bb.unionByName(
-      bb.select(col("dst").as("src"), col("src").as("dst")))
-    val dist = Graph.coreDecomposition(sym)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // reference: repeated peeling in plain Scala
-    var adj = sym.collect().map(r => (r.getLong(0), r.getLong(1)))
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val ref = scala.collection.mutable.Map[Long, Long]()
-    var k = 1L
-    while (adj.nonEmpty) {
-      var changed = true
-      while (changed) {
-        val drop = adj.filter(_._2.size < k).keySet
-        changed = drop.nonEmpty
-        if (changed)
-          adj = (adj -- drop).view
-            .mapValues(_ -- drop).filter(_._2.nonEmpty).toMap
-      }
-      adj.keys.foreach(n => ref(n) = k)
-      k += 1
-    }
-    assert(dist === ref.toMap)
   }
 
   // ------------------------------------------------------- directed SCC

@@ -1,7 +1,5 @@
 package graft.rel
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -375,27 +373,6 @@ class TimeSeriesSpec extends SparkSuite {
     assert(r.getLong(4) === 100000L)
     assert(r.getLong(5) === 100000L)
     assert(r.getBoolean(6) && !r.getBoolean(7))
-  }
-
-  test("ts_dtw: alignment absorbs a stretched step; anti-phase pays") {
-    import java.sql.Timestamp
-    import spark.implicits._
-    def day(t: String, i: Int) = Timestamp.valueOf(f"2024-01-$i%02d 12:00:00")
-    // w=[1,2,3], z=[1,2,2,3] cents: DTW 0 (the doubled 2 aligns free);
-    // x=[0,5], y=[5,0]: every warp path pays 10
-    val rows =
-      Seq(("w", 1, 0.01), ("w", 2, 0.02), ("w", 3, 0.03),
-        ("z", 1, 0.01), ("z", 2, 0.02), ("z", 3, 0.02), ("z", 4, 0.03),
-        ("x", 1, 0.00), ("x", 2, 0.05),
-        ("y", 1, 0.05), ("y", 2, 0.00))
-    val e = rows.zipWithIndex.map { case ((t, d, v), i) =>
-      (i.toLong, t, day(t, d), v) }
-      .toDF("event_id", "event_type", "ts", "value")
-    val m = TimeSeries.dtwPairs(e).collect()
-      .map(r => ((r.getString(0), r.getString(1)), r.getLong(4))).toMap
-    assert(m(("w", "z")) === 0L)
-    assert(m(("x", "y")) === 10L)
-    assert(m.size === 6) // 4 types → 6 half pairs
   }
 
   test("ts_records: strict records only, ties do not break, stood days") {
