@@ -1,36 +1,20 @@
 package graft
-import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+
+import graft.core.SparkEvents
 
 object Bench {
 
-  /** Cumulative shuffle-write + spill bytes across all completed stages —
-    * snapshotted around each query so the bench reports not just seconds
-    * but the shuffle volume behind them (the quantity that actually
-    * scales with data size). Stage-completion events are async, so
-    * per-query attribution is approximate at the margin; totals are
-    * exact. */
-  private final class MetricsListener extends SparkListener {
-    val shuffleWrite = new AtomicLong
-    val spilled = new AtomicLong
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        spilled.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-      }
-    }
-  }
-
+  /** Spark's events are recorded from before the warm-up: the spill
+    * total covers the whole run, and a query's shuffle is what two drained
+    * readings around it differ by. */
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", Harness.defaultSfDir)
     val spark = Harness.session()
-    val metrics = new MetricsListener
-    spark.sparkContext.addSparkListener(metrics)
+    val events = SparkEvents.attach(spark.sparkContext)
     warmStandingState(spark, sfDir)
-    val failed = runSweeps(spark, sfDir, metrics)
+    val failed = runSweeps(spark, sfDir, events)
     if (failed.nonEmpty) {
       System.err.println(s"${failed.size} queries failed: ${failed.mkString(", ")}")
       sys.exit(1)
@@ -39,8 +23,8 @@ object Bench {
 
   /** Pre-sweep warm-up: JVM/codegen/parquet-footer init plus every
     * standing build, paid once and not billed to whichever query the
-    * Map happens to iterate first. Shared with [[ScopedProbe]] and
-    * [[PlanDump]] so a per-execution adjudication run is index-warm
+    * Map happens to iterate first. Shared with [[Probe]]'s `walls` and
+    * `plans` modes so a per-execution adjudication run is index-warm
     * exactly like a bench sweep. A build that throws fails the run,
     * naming the build: a silently missing index would otherwise be
     * rebuilt inside (and billed to) the first timed query. */
@@ -66,8 +50,8 @@ object Bench {
 
   /** Every standing relation a corpus snapshot carries, in build order:
     * built once per corpus outside query timing, so declared queries time
-    * what a deployment serves. Shared with [[WarmupRehearsal]], which
-    * times each entry. */
+    * what a deployment serves. Shared with [[Probe]]'s `rehearse` mode,
+    * which times each entry. */
   private[graft] def standingBuilds(spark: SparkSession,
       sfDir: String): Seq[(String, () => Unit)] = Seq(
     // offline IVF "add to index" step: simsearch_ivf times the
@@ -129,12 +113,23 @@ object Bench {
     * parallelism, a pure function of machine load. Shared by the
     * warm-up (so the probe's generated class compiles during the
     * standing builds) and the measured batches. */
-  private[graft] def floorProbeOnce(spark: SparkSession,
-      sfDir: String): Double = {
+  private def floorProbeOnce(spark: SparkSession, sfDir: String): Double = {
     val t0 = System.nanoTime()
     spark.read.parquet(s"$sfDir/region.parquet")
       .groupBy("r_name").count().count()
     (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Median of `n` floor-probe executions, each raw one handed to
+    * `seen`. Also [[Probe]]'s `walls` floor. */
+  private[graft] def floorMedian(spark: SparkSession, sfDir: String,
+      n: Int)(seen: Double => Unit): Double = {
+    val ts = (1 to n).map { _ =>
+      val t = floorProbeOnce(spark, sfDir)
+      seen(t)
+      t
+    }.sorted
+    ts(ts.length / 2)
   }
 
   /** One timed query execution: its seconds, or None — with `name`
@@ -154,7 +149,7 @@ object Bench {
 
   /** Runs and prints the sweeps; returns the queries that threw. */
   private def runSweeps(spark: SparkSession, sfDir: String,
-      metrics: MetricsListener): Seq[String] = {
+      events: SparkEvents): Seq[String] = {
     // optional subset for local iteration: SPARK_GRAFT_ONLY=q1,q2
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
@@ -188,19 +183,13 @@ object Bench {
     // sustained elevation anywhere): a flagged median can be adjudicated
     // from the artifact alone instead of re-running the machine.
     val floorCurve = scala.collection.mutable.ArrayBuffer.empty[Double]
-    def measureFloor(n: Int): Double = {
-      val ts = (1 to n).map { _ =>
-        val t = floorProbeOnce(spark, sfDir)
-        floorCurve += t
-        t
-      }.sorted
-      ts(ts.length / 2)
-    }
+    def measureFloor(n: Int): Double =
+      floorMedian(spark, sfDir, n)(floorCurve += _)
 
     def runSweep(): Map[String, Double] = {
       val out = scala.collection.mutable.Map.empty[String, Double]
       names.zipWithIndex.foreach { case (name, qi) =>
-        val sw0 = metrics.shuffleWrite.get
+        val before = events.reading()
         val dt = timeQuery(name, failed)(picked(name)(spark, sfDir).count(): Unit)
         // drop intermediates persisted inside a query so later queries
         // (and the next sweep) aren't timed under leftover memory
@@ -221,7 +210,8 @@ object Bench {
         // shuffle volume is deterministic — attribute it from the first
         // attempt that ran the query, re-runs included
         if (!shuffle.contains(name))
-          shuffle(name) = (metrics.shuffleWrite.get - sw0) / 1048576.0
+          shuffle(name) =
+            events.reading().since(before).shuffleWriteBytes / 1048576.0
       }
       System.gc()
       out.toMap
@@ -342,7 +332,7 @@ object Bench {
     val wcJson = results.map { case (k, _) =>
       s"\"" + k + "\":\"" + wallClass(k) + "\"" }.mkString("{", ",", "}")
     val total = results.map(_._2._1).sum
-    val totalSpillMb = metrics.spilled.get / 1048576.0
+    val totalSpillMb = events.reading().spillBytes / 1048576.0
     // plan cost net of harness physics: round-over-round comparisons
     // should track this, not the local[n] fixed per-query overhead
     val totalMinusFloor = math.max(0.0, total - floor * results.size)

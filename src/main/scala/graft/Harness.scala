@@ -9,6 +9,9 @@ import org.apache.spark.sql.SparkSession
   * probe reproduces the bench's parallelism. */
 private[graft] object Harness {
 
+  /** The corpus every main reads when not given one. */
+  val defaultSfDir = "/root/testdata/sf0.1"
+
   def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)

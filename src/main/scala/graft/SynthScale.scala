@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
 object SynthScale {
 
   def main(args: Array[String]): Unit = {
-    val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
+    val src = if (args.length > 0) args(0) else Harness.defaultSfDir
     val dst = if (args.length > 1) args(1) else "/tmp/graft_sf1_synth"
     val reps = if (args.length > 2) args(2).toInt else 10
     val spark = Harness.session()

@@ -1,5 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -15,17 +18,31 @@ object Verify {
       case Some(names) => SparkEntry.queries.filter(q => names(q._1))
       case None        => SparkEntry.queries
     }
-    picked.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      finally spark.catalog.clearCache()
-    }
+    val failed = writeResults(spark, sfDir, outDir, picked.toSeq)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(only))
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[verify] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
+
+  /** Writes each query's result to `<outDir>/<name>`; returns the names
+    * of those that threw. A query's earlier output is deleted first: a
+    * query that throws while it is built never starts its write, and an
+    * earlier run's bytes would otherwise pass the oracle. */
+  private[graft] def writeResults(spark: SparkSession, sfDir: String,
+      outDir: String, queries: Seq[(String, (SparkSession, String) => DataFrame)])
+      : Seq[String] =
+    queries.filterNot { case (name, fn) =>
+      core.ParquetMemo.deleteRecursively(new java.io.File(outDir, name))
+      try { fn(spark, sfDir).coalesce(1).write.parquet(s"$outDir/$name"); true }
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}"); false
+      }
+      finally spark.catalog.clearCache()
+    }.map(_._1)
 
   /** The oracle_sql.json payload (shared with OracleLintSpec, which
     * feeds the full declared set through tools/lint_oracle_dtypes.py).

@@ -125,7 +125,7 @@ object ParquetMemo {
       version: String)(build: => DataFrame): DataFrame =
     spark.read.parquet(ensure(srcFile, tag, version)(build))
 
-  private def deleteRecursively(f: java.io.File): Unit = {
+  private[graft] def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory)
       Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
     f.delete(): Unit

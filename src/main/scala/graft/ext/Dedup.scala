@@ -282,7 +282,7 @@ object Dedup {
     // the anchor window ranks the FULL (doc_id, g, gdf) inventory —
     // ~1 M rows that compress below AQE's byte advisory, so the window
     // exchange coalesced to ONE partition and the rank sort ran 1.5 s
-    // on a single core (ScopedProbe stages). Width.byKeys pins the
+    // on a single core (Probe stages). Width.byKeys pins the
     // window's width by source volume.
     val anchors = Width.byKeys(invG, col("doc_id"))
       .withColumn("rn", row_number().over(

@@ -1024,7 +1024,7 @@ object Similarity {
     * scales are unchanged. The DuckDB oracle derives the same b from
     * count(*) via the power-of-two CASE ladder in the shared `geo`
     * CTE (`graphGreedySearchSql`). */
-  private[ext] def knnBandBits(n: Long, target: Long = 250L): Int = {
+  private[graft] def knnBandBits(n: Long, target: Long = 250L): Int = {
     val m = math.max(1L, (n + target - 1) / target)
     val b =
       if (m <= 1L) 1
@@ -1177,7 +1177,7 @@ object Similarity {
     * keep the entry near the query at any N. At b=2 (every corpus ≤
     * ~1000 vectors, incl. the committed oracle scales) 3·b = 6, so this
     * constant reproduces the historical entry bit-exactly. */
-  private[ext] val EntryPlanes = 6
+  private[graft] val EntryPlanes = 6
 
   def ensureKnnGraph(spark: SparkSession, dir: String,
       graphK: Int = 8): String =
@@ -1227,7 +1227,7 @@ object Similarity {
     * withCell/bandKeys chain the build runs — (N, b, candidate ordered
     * pairs Σc·(c−1), mean occupancy, max occupancy). The adaptive-width
     * contract says candidates ≈ 3·N·target and occupancy ≈ target. */
-  private[ext] def knnBuildGeometry(spark: SparkSession,
+  private[graft] def knnBuildGeometry(spark: SparkSession,
       dir: String): (Long, Int, Long, Double, Long) = {
     val e0 = Tables.embeddings(spark, dir)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))

@@ -1,4 +1,4 @@
-package org.apache.spark.graftbridge
+package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.SparkContext
 

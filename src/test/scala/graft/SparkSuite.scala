@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.graftbridge.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,24 +12,13 @@ trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.session
   val sfDir = "/root/testdata/sf0.001"
 
-  /** Spark jobs started while `body` runs, with the listener bus drained
-    * on both sides so no event is missed or carried over. For specs that
-    * pin a job budget: where the work is driver round-trips, not data,
-    * the job count is the latency. */
+  /** Spark jobs started while `body` runs, read from `core.SparkEvents`
+    * with the listener bus drained on both sides so no event is missed or
+    * carried over. For specs that pin a job budget: where the work is
+    * driver round-trips, not data, the job count is the latency. */
   def jobsOf[T](body: => T): (T, Int) = {
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    ListenerDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = body
-      ListenerDrain(spark.sparkContext)
-      (out, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (out, seen) = core.SparkEvents.during(spark.sparkContext)(body)
+    (out, seen.jobs)
   }
 }
 

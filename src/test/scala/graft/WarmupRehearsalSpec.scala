@@ -17,19 +17,17 @@ class WarmupRehearsalSpec extends AnyFunSuite {
     val warehouse = root.resolve("warehouse").toString
     sys.props("graft.memo.root") = root.toString
     try {
-      assert(WarmupRehearsal.stateBytes(sfDir, warehouse) == 0L)
+      assert(Probe.stateBytes(sfDir, warehouse) == 0L)
       core.ParquetMemo.ensureWith(s"$sfDir/documents.parquet", "planted",
           "v1") { staging =>
         Files.createDirectories(Paths.get(staging))
         Files.write(Paths.get(staging, "part-0.parquet"), new Array[Byte](4096))
       }
-      assert(WarmupRehearsal.stateBytes(sfDir, warehouse) >= 4096L,
+      assert(Probe.stateBytes(sfDir, warehouse) >= 4096L,
         "a planted memo build must count toward the corpus's state")
     } finally {
       sys.props.remove("graft.memo.root"): Unit
-      import scala.jdk.CollectionConverters._
-      Files.walk(root).iterator().asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p): Unit)
+      core.ParquetMemo.deleteRecursively(root.toFile)
     }
   }
 }

@@ -107,28 +107,18 @@ class ClusteringSpec extends SparkSuite {
     // seed lookup plus one argmax job per remaining pick — never a
     // job-per-center re-fold (the O(N·k²) shape this replaced)
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val k = 8
+    val k = 8
+    val (res, n) = jobsOf {
       val res = Clustering.kcenterOn(emb, k)
       res.count(): Unit
-      // listener events are async; drain the bus so the count is whole
-      org.apache.spark.graftbridge.ListenerDrain(spark.sparkContext)
-      // seed + (k-1) argmax rounds + the final toDF/count on driver
-      // rows; a small slack absorbs Spark-internal bookkeeping jobs
-      val n = jobs.get()
-      assert(n <= k + 3, s"expected ≤ ${k + 3} jobs for k=$k, saw $n")
-      // and the per-round plan folds ONE center, not the whole prefix:
-      // distance work per round is a single least(mind, d2(v, newest))
-      assert(res.collect().length == k)
-    } finally spark.sparkContext.removeSparkListener(listener)
+      res
+    }
+    // seed + (k-1) argmax rounds + the final toDF/count on driver
+    // rows; a small slack absorbs Spark-internal bookkeeping jobs
+    assert(n <= k + 3, s"expected ≤ ${k + 3} jobs for k=$k, saw $n")
+    // and the per-round plan folds ONE center, not the whole prefix:
+    // distance work per round is a single least(mind, d2(v, newest))
+    assert(res.collect().length == k)
   }
 
   test("dimension stats: exact grid moments per dim, dead dim flagged") {

@@ -399,7 +399,7 @@ class SimilaritySpec extends SparkSuite {
     assume(new java.io.File(s"$dir10/_SYNTH_OK").exists(),
       s"10× SynthScale corpus absent — `runMain graft.SynthScale " +
         s"/root/testdata/sf0.1 $dir10 10` to enable this pin")
-    val rs = KnnRecallProbe.measure(spark, dir10, nQ = 5, verbose = false)
+    val rs = graft.Probe.measureRecall(spark, dir10, nQ = 5, verbose = false)
     val beamMean = rs.map(_.beam).sum / 10.0 / rs.length
     val greedyMean = rs.map(_.greedy).sum / 10.0 / rs.length
     info(f"10× recall@10: beam mean=$beamMean%.2f greedy mean=" +

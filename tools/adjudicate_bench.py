@@ -31,7 +31,7 @@ r13 driver commit holds a contaminated map ABOVE the clean one, so
 
 Probe mode (--probe): any comparable query (steady OR iterative,
 shuffle-identical) whose wall ratio exceeds --probe-threshold is
-auto-adjudicated with graft.ScopedProbe — N back-to-back executions in
+auto-adjudicated with `graft.Probe walls` — N back-to-back executions in
 one JVM — and the cold/steady/GC curve lands in --probe-out as a typed
 verdict ("environment_or_jit" when steady state is within 10% of the
 baseline wall, "code_regression" otherwise). This is the r14
@@ -157,7 +157,7 @@ PROBE_FLOOR_RE = re.compile(r"probe floor:\s+([0-9.]+)\s+s")
 
 
 def run_probe(q, args, sf_dir):
-    """Run graft.ScopedProbe for q and parse per-execution walls/GC."""
+    """Run `graft.Probe walls` for q and parse per-execution walls/GC."""
     if args.probe_cmd:
         cmd = ["bash", "-c", args.probe_cmd.format(
             query=q, n=args.probe_n, sf=sf_dir)]
@@ -173,7 +173,8 @@ def run_probe(q, args, sf_dir):
                "--add-opens", "java.base/java.lang.invoke=ALL-UNNAMED",
                "--add-opens", "java.base/jdk.internal.misc=ALL-UNNAMED",
                "--add-opens", "java.base/sun.security.action=ALL-UNNAMED",
-               "-cp", cp, "graft.ScopedProbe", q, str(args.probe_n), sf_dir]
+               "-cp", cp, "graft.Probe", "walls", q, str(args.probe_n),
+               sf_dir]
     proc = subprocess.run(cmd, capture_output=True, text=True)
     runs = [(float(w), int(g))
             for _, w, g in PROBE_RUN_RE.findall(proc.stdout)]
@@ -201,7 +202,8 @@ def main():
                     help="minimum comparison-set size to judge on")
     ap.add_argument("--min-wall", type=float, default=DEFAULT_MIN_WALL)
     ap.add_argument("--probe", action="store_true",
-                    help="ScopedProbe-adjudicate flagged wall increases")
+                    help="probe-adjudicate flagged wall increases "
+                         "(graft.Probe walls)")
     ap.add_argument("--probe-n", type=int, default=6)
     ap.add_argument("--probe-threshold", type=float, default=1.25)
     ap.add_argument("--probe-out", default="PROBE_ADJUDICATION.json")
