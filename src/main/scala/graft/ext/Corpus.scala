@@ -19,9 +19,9 @@ import graft.core.{QueryDef, Tables, Width}
   *    persist for the returned query's lifetime; a caller issuing many
   *    corpus-scale invocations in one session should
   *    `spark.catalog.clearCache()` between them (the bench harness does).
-  *  - clustering is hash-min label propagation over the candidate-pair
-  *    edge list (edges come from MinHash LSH, already banded), with a
-  *    bounded iteration count — each step is one join + one aggregate.
+  *  - clustering is union-find with min labels over the candidate-pair
+  *    edge list (edges come from MinHash LSH, already banded), collected
+  *    in one job and finished on the driver on a `rel.LocalGraph`.
   *  - sampling/redaction are pure narrow maps: deterministic hashes,
   *    no RNG state, no shuffle.
   */
@@ -354,120 +354,23 @@ object Corpus {
 
   /** Connected components over an undirected edge list (columns doc_a,
     * doc_b): every node's component = the minimum doc_id reachable from
-    * it.
+    * it, as a local (id, component) relation in id order.
     *
     * The edge list is a CANDIDATE-PAIR set (LSH output), orders of
-    * magnitude smaller than the corpus by construction — so the default
-    * path collects it and runs exact union-find on the driver: O(E α(E))
-    * with zero shuffles, and no job-per-iteration overhead. Even at
-    * 10⁹ documents a 1% dup rate is ~10⁷ edges ≈ 160 MB — driver-sized.
-    * Only beyond `driverEdgeLimit` does it fall back to distributed
-    * hash-min label propagation (O(diameter) iterations of join + min,
-    * localCheckpoint-truncated so iterative lineage can't blow up the
-    * plan, superseded checkpoint blocks explicitly freed). */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
-      driverEdgeLimit: Long = 5_000_000L): DataFrame = {
+    * magnitude smaller than the corpus by construction — so it is
+    * collected in one job and finished on the driver by union-find
+    * with min labels on a `rel.LocalGraph` (primitive arrays, no
+    * shuffle and no job per iteration). Even at 10⁹ documents a 1% dup
+    * rate is ~10⁷ edges, ~1 GB of graph at ~110 bytes per edge. */
+  def connectedComponents(pairs: DataFrame): DataFrame = {
     val spark = pairs.sparkSession
-    val edgesRaw = pairs.select(col("doc_a"), col("doc_b")).persist()
-    val nEdges = edgesRaw.count()
-    val out =
-      if (nEdges <= driverEdgeLimit) driverUnionFind(spark, edgesRaw)
-      else distributedHashMin(edgesRaw, maxIter)
-    edgesRaw.unpersist()
-    out.orderBy(col("id"))
-  }
-
-  private def driverUnionFind(spark: org.apache.spark.sql.SparkSession,
-      edges: DataFrame): DataFrame = {
     import spark.implicits._
-    val parent = scala.collection.mutable.Map[Long, Long]()
-    def find(x: Long): Long = {
-      var r = x
-      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
-      r
-    }
-    edges.collect().foreach { row =>
-      val (a, b) = (row.getLong(0), row.getLong(1))
-      parent.getOrElseUpdate(a, a)
-      parent.getOrElseUpdate(b, b)
-      val (ra, rb) = (find(a), find(b))
-      // min-root union keeps the "component = min reachable id" contract
-      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
-    }
-    parent.keys.toSeq.sorted.map(x => (x, find(x)))
+    val edges = pairs.select(col("doc_a"), col("doc_b")).collect()
+    val g = graft.rel.LocalGraph(edges.map(_.getLong(0)), edges.map(_.getLong(1)))
+    val label = g.componentMinLabels()
+    Seq.tabulate(g.n)(v => (g.id(v), g.id(label(v))))
       .toDF("id", "component")
-  }
-
-  private def distributedHashMin(edgesRaw: DataFrame, maxIter: Int): DataFrame = {
-    val sc = edgesRaw.sparkSession.sparkContext
-    val edges = edgesRaw.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(edgesRaw.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .persist()
-    // track the checkpoint blocks we create so superseded label sets are
-    // freed eagerly — clearCache() does NOT release localCheckpoint RDDs,
-    // and leaking one per iteration builds memory pressure for the rest
-    // of the application
-    def pids: Set[Int] = sc.getPersistentRDDs.keySet.toSet
-    def freeIds(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    var before = pids
-    var labels = edges.select(col("src").as("id"))
-      .distinct()
-      .withColumn("component", col("id"))
-      .localCheckpoint()
-    var ownIds = pids -- before
-    // labels only ever decrease, so Σcomponent is strictly monotone while
-    // anything changes: convergence = unchanged sum
-    def labelSum(df: DataFrame): Long =
-      df.agg(sum(col("component"))).collect()(0).getLong(0)
-    var iter = 0
-    var prevSum = labelSum(labels)
-    var changed = true
-    while (changed && iter < maxIter) {
-      before = pids
-      val viaEdges = edges
-        .join(labels.withColumnRenamed("id", "src"), Seq("src"))
-        .select(col("dst").as("id"), col("component"))
-      // checkpoint BEFORE the jump: truncating here both keeps iterative
-      // lineage bounded (as before) and gives the self-join below two
-      // clean scans of one materialized RDD instead of re-deriving the
-      // union+agg per side
-      val relaxed = labels.select(col("id"), col("component"))
-        .union(viaEdges)
-        .groupBy(col("id")).agg(min(col("component")).as("component"))
-        .localCheckpoint()
-      // pointer jumping (path halving): component ← component's own
-      // component. Every label is itself a node id present in `relaxed`
-      // (labels are mins over seen ids), so one more small self-join per
-      // iteration makes label paths collapse geometrically — convergence
-      // in O(log diameter) rounds instead of O(diameter), which is what
-      // rescues the one pathological shape (long chains) hash-min alone
-      // cannot finish within any fixed bound. comp(y) ≤ y always, so
-      // labels stay monotone and the Σcomponent convergence test holds.
-      val next = relaxed
-        .join(relaxed.select(col("id").as("cid"), col("component").as("ccomp")),
-          col("component") === col("cid"), "left")
-        .select(col("id"),
-          coalesce(col("ccomp"), col("component")).as("component"))
-      val newIds = pids -- before
-      val s = labelSum(next)
-      changed = s != prevSum
-      prevSum = s
-      freeIds(ownIds)
-      ownIds = newIds
-      labels = next
-      iter += 1
-    }
-    edges.unpersist()
-    // loud beats silently wrong: an unconverged labeling would split one
-    // real cluster into several "canonical" documents. With pointer
-    // jumping the bound is logarithmic in the component diameter
-    // (CorpusSpec pins a 64-node chain under maxIter = 10), so hitting
-    // it signals something structural, not a long chain.
-    if (changed) throw new IllegalStateException(
-      s"connected components did not converge within $maxIter iterations — " +
-        "pathological component structure; raise maxIter")
-    labels
+      .orderBy(col("id"))
   }
 
   /** Near-duplicate clusters: MinHash LSH candidate pairs → connected

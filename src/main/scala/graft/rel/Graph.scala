@@ -1,10 +1,11 @@
 package graft.rel
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField,
+  StructType}
 
 import graft.core.{Bucketing, QueryDef, Tables, Width}
 
@@ -430,89 +431,63 @@ object Graph {
        |ORDER BY n_members DESC, community LIMIT $k""".stripMargin
   }
 
-  /** Bounded-depth single-source BFS distances: `maxDepth` rounds of
-    * frontier expansion from the smallest node id in the edge set (a
-    * deterministic source — no parameter to disagree on). Classic
-    * distributed BFS: each round joins ONLY the newest frontier to the
-    * adjacency (never the whole visited set), anti-joins out already-
-    * visited nodes, and checkpoints the visited relation to cut the
-    * iteration's lineage (the PageRank/LPA discipline). Frontier and
-    * visited state are O(|V|); each round is one frontier join + one
-    * anti join, both partially shuffled on node. First visit = minimum
-    * distance, the BFS invariant both engines agree on. */
+  /** Bounded-depth single-source BFS distances: `maxDepth` levels from
+    * the smallest `src` id in the edge set (a deterministic source — no
+    * parameter to disagree on), as (node, dist) rows in node order;
+    * first visit = minimum distance, the BFS invariant both engines
+    * agree on. The BFS runs in one task on a [[LocalGraph]], the
+    * landmark family's kernel from one landmark. No edges, no rows. */
   def bfsDistances(edges: DataFrame, maxDepth: Int): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
-    // materialize the edge set ONCE: every round joins against it, and
-    // an unmaterialized lineage (here: the backbone's lineitem
-    // self-join) would otherwise recompute per round — measured 5.6 s
-    // → 2.6 s at sf0.1 for 4 rounds
-    val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
-    val src0 = e.agg(min(col("src"))).head().getLong(0)
-    var visited = e.sparkSession.range(1)
-      .select(lit(src0).as("node"), lit(0).as("dist"))
-      .localCheckpoint(true)
-    var frontier = visited
-    var depth = 0
-    while (depth < maxDepth && !frontier.isEmpty) {
-      depth += 1
-      val next = frontier.join(e, col("node") === col("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(visited.select(col("node")), Seq("node"), "left_anti")
-        .withColumn("dist", lit(depth))
-        .localCheckpoint(true)
-      visited = visited.unionByName(next).localCheckpoint(true)
-      frontier = next
+    LocalGraph.inTask(edges, nodeRows(notNull("dist", IntegerType))) { g =>
+      g.sources(1).iterator.flatMap { s =>
+        val b = g.bfs(s, maxDepth, countPaths = false)
+        Iterator.range(0, g.n).filter(b.dist(_) >= 0)
+          .map(v => Row(g.id(v), b.dist(v)))
+      }
     }
-    visited.orderBy(col("node"))
   }
 
-  /** Multi-source landmark BFS shared by the landmark-centrality
-    * family (closeness / eccentricity): |L| concurrent frontiers over
-    * the same edge relation, returning the visited (lm, node, dist)
-    * relation. One place owns the BFS discipline (edge checkpoint,
-    * partial-distinct frontier, visited anti-join, depth cap). */
-  private def landmarkBfs(edges: DataFrame, nLandmarks: Int,
-      maxDepth: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
-    val lms = e.select(col("src")).distinct()
-      .orderBy(col("src")).limit(nLandmarks).select(col("src").as("lm"))
-    var visited = lms
-      .select(col("lm"), col("lm").as("node"), lit(0).as("dist"))
-      .localCheckpoint(true)
-    var frontier = visited
-    var depth = 0
-    while (depth < maxDepth && !frontier.isEmpty) {
-      depth += 1
-      val next = frontier.join(e, col("node") === col("src"))
-        .select(col("lm"), col("dst").as("node")).distinct()
-        .join(visited.select(col("lm"), col("node")), Seq("lm", "node"),
-          "left_anti")
-        .withColumn("dist", lit(depth))
-        .localCheckpoint(true)
-      visited = visited.unionByName(next).localCheckpoint(true)
-      frontier = next
+  /** Schema of an in-task graph op's (node, …) rows: `node` is
+    * nullable, as the standing backbone's id columns are, and each
+    * metric keeps the nullability of the aggregate that states it in
+    * SQL (a count or literal is never null, a sum or max may be). */
+  private def nodeRows(metrics: StructField*): StructType =
+    StructType(StructField("node", LongType) +: metrics)
+
+  private def notNull(name: String, t: DataType) =
+    StructField(name, t, nullable = false)
+
+  /** `visit(v, dist)` for every vertex v a landmark reaches at distance
+    * 1 … `maxDepth`, per landmark: the `nLandmarks` smallest `src` ids,
+    * each its own BFS over the one in-task graph. */
+  private def landmarkHits(g: LocalGraph, nLandmarks: Int, maxDepth: Int)(
+      visit: (Int, Int) => Unit): Unit =
+    g.sources(nLandmarks).foreach { s =>
+      val b = g.bfs(s, maxDepth, countPaths = false)
+      b.order.iterator.drop(1).foreach(v => visit(v, b.dist(v)))
     }
-    visited
-  }
 
   /** Landmark (harmonic) closeness — the all-pairs-centrality shape cut
-    * to what scales: multi-source BFS from the `nLandmarks` smallest
-    * node ids (a deterministic landmark set), per-node harmonic sum
-    * Σ 12 div dist over reached landmarks (12 = lcm(1..4), so every
-    * addend is an exact integer — no float on the comparison surface).
-    * True all-pairs closeness is O(V·E); landmark closeness is the
-    * standard estimator and is |L| concurrent frontiers over the SAME
-    * bucketed adjacency — state ≤ |L|·V pairs, one src-keyed join per
-    * round, the bfsDistances loop with (lm, node) keys. */
+    * to what scales: BFS from the `nLandmarks` smallest node ids (a
+    * deterministic landmark set), per-node harmonic sum Σ 12 div dist
+    * over reached landmarks (12 = lcm(1..4), so every addend is an
+    * exact integer — no float on the comparison surface). True
+    * all-pairs closeness is O(V·E); landmark closeness is the standard
+    * estimator, |L| BFS passes over one in-task [[LocalGraph]]. */
   def landmarkCloseness(edges: DataFrame, nLandmarks: Int,
       maxDepth: Int): DataFrame = {
     require(maxDepth >= 1 && maxDepth <= 4, "12 = lcm(1..4) covers depth <= 4")
-    landmarkBfs(edges, nLandmarks, maxDepth)
-      .filter(col("dist") > 0)
-      .groupBy(col("node"))
-      .agg(count(lit(1)).as("n_reached"),
-        sum(expr("12 div dist")).as("closeness12"))
-      .orderBy(col("node"))
+    LocalGraph.inTask(edges,
+        nodeRows(notNull("n_reached", LongType),
+          StructField("closeness12", LongType))) { g =>
+      val reached = new Array[Long](g.n)
+      val c12 = new Array[Long](g.n)
+      landmarkHits(g, nLandmarks, maxDepth) { (v, d) =>
+        reached(v) += 1; c12(v) += 12 / d }
+      Iterator.range(0, g.n).filter(reached(_) > 0)
+        .map(v => Row(g.id(v), reached(v), c12(v)))
+    }
   }
 
   /** Landmark eccentricity + diameter lower bound — the third member
@@ -522,18 +497,21 @@ object Graph {
     * inequality max_L d(v, L) ≤ ecc(v), and the global max over
     * surfaced rows is the standard lower bound on the graph diameter —
     * what "how wide is this graph" dashboards actually run at scale
-    * (exact diameter is all-pairs). Same loop, same bucketed adjacency,
-    * same |L| concurrent frontiers as `landmarkCloseness`; depth-capped
-    * like every landmark op, so unreached (lm, node) pairs simply don't
-    * bound that node. */
+    * (exact diameter is all-pairs). Same landmarks and BFS as
+    * `landmarkCloseness`; depth-capped like every landmark op, so
+    * unreached (lm, node) pairs simply don't bound that node. */
   def landmarkEccentricity(edges: DataFrame, nLandmarks: Int,
       maxDepth: Int): DataFrame =
-    landmarkBfs(edges, nLandmarks, maxDepth)
-      .filter(col("dist") > 0)
-      .groupBy(col("node"))
-      .agg(max(col("dist")).cast("long").as("ecc_lb"),
-        count(lit(1)).as("n_landmarks_reached"))
-      .orderBy(col("node"))
+    LocalGraph.inTask(edges,
+        nodeRows(StructField("ecc_lb", LongType),
+          notNull("n_landmarks_reached", LongType))) { g =>
+      val ecc = new Array[Long](g.n)
+      val reached = new Array[Long](g.n)
+      landmarkHits(g, nLandmarks, maxDepth) { (v, d) =>
+        ecc(v) = math.max(ecc(v), d.toLong); reached(v) += 1 }
+      Iterator.range(0, g.n).filter(reached(_) > 0)
+        .map(v => Row(g.id(v), ecc(v), reached(v)))
+    }
 
   def landmarkEccentricitySql(nLandmarks: Int, maxDepth: Int): String =
     s"""WITH RECURSIVE eh AS (
@@ -569,91 +547,33 @@ object Graph {
     * betweenness is off the table at corpus scale; landmark sampling
     * is the standard estimator, deterministic here).
     *
-    * Forward phase: the multi-source BFS loop with PATH COUNTS — σ of
-    * a newly reached node is the SUM of frontier-predecessor σ's
-    * (partial-agg per (lm, dst) before the visited anti-join), so each
-    * round stays one src-keyed join + one shuffle, state ≤ |L|·V rows.
+    * Forward phase: the landmark BFS with PATH COUNTS — σ of a newly
+    * reached node is the SUM of its predecessors' σ, one per edge row.
     * Backward phase: Brandes' recurrence δ(v) = Σ_{succ w} σv·(1 +
-    * δw)/σw runs one depth layer at a time (depth−1 … 1), each layer
-    * one edge join + partial agg — and in FIXED-POINT integers: the
-    * unit dependency is 10^9, each edge term `σv·(SCALE + δw) div σw`
-    * truncates on non-negative BIGINTs (order-independent, `div` ≡
-    * `//`), so the whole two-phase algorithm sits behind the hash gate
-    * where float Brandes never could. The oracle re-derives σ from
-    * scratch: walks of length = BFS distance are exactly the shortest
-    * paths, so σ = COUNT of minimal-length walks (UNION ALL recursion),
-    * and the backward layers unroll as CTEs.
+    * δw)/σw, deepest level first, in FIXED-POINT integers: the unit
+    * dependency is 10^9, each edge term `σv·(SCALE + δw) div σw`
+    * truncates on non-negative longs (order-independent, `div` ≡ `//`),
+    * so the whole two-phase algorithm sits behind the hash gate where
+    * float Brandes never could. Both phases run in one task on a
+    * [[LocalGraph]]. The oracle re-derives σ from scratch: walks of
+    * length = BFS distance are exactly the shortest paths, so σ = COUNT
+    * of minimal-length walks (UNION ALL recursion), and the backward
+    * layers unroll as CTEs.
     *
     * Surfaced: Σ over landmarks of δ(lm, v), nodes with positive
     * accumulated dependency — the bridge-vertex ranking. */
   def landmarkBetweenness(edges: DataFrame, nLandmarks: Int,
-      maxDepth: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
-    val lms = e.select(col("src")).distinct()
-      .orderBy(col("src")).limit(nLandmarks).select(col("src").as("lm"))
-    var visited = lms
-      .select(col("lm"), col("lm").as("node"), lit(0).as("dist"),
-        lit(1L).as("sigma"))
-      .localCheckpoint(true)
-    val layers = scala.collection.mutable.ArrayBuffer(visited)
-    var frontier = visited
-    var depth = 0
-    while (depth < maxDepth && !frontier.isEmpty) {
-      depth += 1
-      val next = frontier.join(e, col("node") === col("src"))
-        // σ(w) = Σ σ(pred): aggregate BEFORE the anti-join so only one
-        // row per (lm, w) carries the full path count
-        .groupBy(col("lm"), col("dst"))
-        .agg(sum(col("sigma")).as("sigma"))
-        .select(col("lm"), col("dst").as("node"), col("sigma"))
-        .join(visited.select(col("lm"), col("node")), Seq("lm", "node"),
-          "left_anti")
-        .withColumn("dist", lit(depth))
-        .select(col("lm"), col("node"), col("dist"), col("sigma"))
-        .localCheckpoint(true)
-      visited = visited.unionByName(next).localCheckpoint(true)
-      layers += next
-      frontier = next
+      maxDepth: Int): DataFrame =
+    LocalGraph.inTask(edges, nodeRows(StructField("bc_fp", LongType))) { g =>
+      val bc = new Array[Long](g.n)
+      g.sources(nLandmarks).foreach { s =>
+        val b = g.bfs(s, maxDepth, countPaths = true)
+        val delta = g.dependencies(b, BetweennessScale)
+        b.order.iterator.drop(1)
+          .foreach(v => bc(v) = Math.addExact(bc(v), delta(v)))
+      }
+      Iterator.range(0, g.n).filter(bc(_) > 0).map(v => Row(g.id(v), bc(v)))
     }
-    // the loop appends `next` before testing it: if it exited on an
-    // empty frontier the trailing layer is empty — drop it so the
-    // backward pass seeds from the true deepest layer instead of
-    // running a redundant join round against an empty frame
-    if (layers.length > 1 && layers.last.isEmpty)
-      layers.remove(layers.length - 1): Unit
-    val reached = layers.length - 1 // deepest non-empty layer index
-    // backward: deepest layer has δ = 0; walk layers d = reached−1 … 1
-    var deltaNext = layers(reached)
-      .select(col("lm"), col("node"), col("sigma"), lit(0L).as("delta"))
-      .localCheckpoint(true)
-    val deltaLayers = scala.collection.mutable.ArrayBuffer(deltaNext)
-    var d = reached - 1
-    while (d >= 1) {
-      val succs = deltaNext.select(col("lm").as("wlm"),
-        col("node").as("wnode"), col("sigma").as("wsigma"),
-        col("delta").as("wdelta"))
-      val contrib = layers(d).join(e, col("node") === col("src"))
-        .join(succs,
-          col("lm") === col("wlm") && col("dst") === col("wnode"))
-        .withColumn("term",
-          expr(s"sigma * ($BetweennessScale + wdelta) div wsigma"))
-        .groupBy(col("lm"), col("node"))
-        .agg(sum(col("term")).as("delta"))
-      deltaNext = layers(d)
-        .join(contrib, Seq("lm", "node"), "left")
-        .select(col("lm"), col("node"), col("sigma"),
-          coalesce(col("delta"), lit(0L)).as("delta"))
-        .localCheckpoint(true)
-      deltaLayers += deltaNext
-      d -= 1
-    }
-    deltaLayers.map(_.select(col("lm"), col("node"), col("delta")))
-      .reduce(_ unionByName _)
-      .groupBy(col("node"))
-      .agg(sum(col("delta")).as("bc_fp"))
-      .filter(col("bc_fp") > 0)
-      .orderBy(col("node"))
-  }
 
   /** Oracle for `maxDepth` = 3: σ via minimal-length walk counting
     * (a walk of length = BFS distance is necessarily a shortest path),
@@ -777,12 +697,11 @@ object Graph {
   /** Connected components of the backbone graph: node → min reachable
     * id (the same component contract every clustering op in the engine
     * uses) plus component size. The CC stage is `ext.Corpus
-    * .connectedComponents` verbatim — size-guarded driver union-find
-    * with the distributed hash-min + pointer-jumping fallback — so the
-    * graph family and the dedup family share ONE component
-    * implementation (and its convergence guarantees). Input is the
-    * bucketed mirrored backbone; the src<dst cut recovers unique half
-    * edges without a distinct. */
+    * .connectedComponents` verbatim — the edges collected in one job,
+    * then union-find with min labels on a [[LocalGraph]] — so the graph
+    * family and the dedup family share ONE component implementation.
+    * Input is the bucketed mirrored backbone; the src<dst cut recovers
+    * unique half edges without a distinct. */
   def componentSizes(edges: DataFrame): DataFrame = {
     val comp = graft.ext.Corpus.connectedComponents(
       edges.filter(col("src") < col("dst"))
@@ -796,7 +715,7 @@ object Graph {
   }
 
   /** Oracle: reachability as a recursive CTE (UNION-deduped frontier),
-    * MIN over reachable ids per node ≡ hash-min fixpoint. */
+    * MIN over reachable ids per node ≡ the min-label union-find. */
   def componentSizesSql(): String =
     s"""WITH RECURSIVE eh AS (
        |  SELECT u, v FROM (
@@ -849,23 +768,20 @@ object Graph {
 
   /** Strongly connected components of the directed `src` → `dst` graph
     * (non-null integral vertex ids). Output: one row per SCC —
-    * (scc_id = min member, scc_size, v_min, v_max). The edges are
-    * checkpointed at full width, then an iterative Tarjan labels every
-    * vertex with its SCC's minimum member inside ONE executor task
-    * ([[tarjanMinLabels]]), so the query is a fixed handful of jobs
-    * whatever the graph's depth — the serial finish of the "Multistep"
-    * scheme (Slota, Rajamanickam and Madduri, IPDPS 2014). A
-    * distributed forward/backward min-label refinement pays one job
-    * per superstep instead: ~50 jobs on the ~500-vertex sf0.01
-    * succession graph, where the wall is almost all driver
-    * coordination. The limit is one task's heap (see
-    * [[tarjanMinLabels]]); the largest benchmark input, sf0.1, has 183k
-    * edges. */
+    * (scc_id = min member, scc_size, v_min, v_max). An iterative Tarjan
+    * labels every vertex with its SCC's minimum member inside ONE
+    * executor task ([[LocalGraph.sccMinLabels]]), so the query is a
+    * fixed handful of jobs whatever the graph's depth. A distributed
+    * forward/backward min-label refinement pays one job per superstep
+    * instead: ~50 jobs on the ~500-vertex sf0.01 succession graph, where
+    * the wall is almost all driver coordination. The limit is one
+    * task's heap (see [[LocalGraph]]); the largest benchmark input,
+    * sf0.1, has 183k edges. */
   def stronglyConnectedComponents(edges: DataFrame): DataFrame =
-    edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .localCheckpoint(true)
-      .coalesce(1)
-      .mapPartitions(tarjanMinLabels)(Encoders.row(SccLabels))
+    LocalGraph.inTask(edges, SccLabels) { g =>
+      val label = g.sccMinLabels()
+      Iterator.range(0, g.n).map(v => Row(g.id(v), g.id(label(v))))
+    }
       .groupBy(col("scc_id"))
       .agg(count(lit(1)).as("scc_size"), min(col("v")).as("v_min"),
         max(col("v")).as("v_max"))
@@ -874,98 +790,6 @@ object Graph {
   /** (v, scc_id) vertex labels of [[stronglyConnectedComponents]]. */
   private val SccLabels = StructType(Seq(
     StructField("v", LongType), StructField("scc_id", LongType)))
-
-  /** Tarjan's SCC algorithm over one partition of (src, dst) rows,
-    * recursion-free (explicit DFS frame arrays, so path depth is bounded
-    * by the heap, not the thread stack) and on primitive arrays only:
-    * sorted distinct ids (a vertex IS its index, found by binary
-    * search), a CSR adjacency, and int/boolean DFS state. A component
-    * pops off the Tarjan stack whole, so its minimum member is the
-    * minimum index popped — ids are sorted. Heap: 40 bytes per edge
-    * (endpoints, id sort, CSR) and 33 per vertex (offsets, DFS state),
-    * at most ~110 bytes per edge when every endpoint is distinct: ~20 MB
-    * for sf0.1's 183k edges, ~110 MB per million edges.
-    * Emits (v, min member of SCC(v)) per vertex. */
-  private def tarjanMinLabels(rows: Iterator[Row]): Iterator[Row] = {
-    val srcB = new scala.collection.mutable.ArrayBuilder.ofLong
-    val dstB = new scala.collection.mutable.ArrayBuilder.ofLong
-    rows.foreach { r => srcB += r.getLong(0); dstB += r.getLong(1) }
-    val src = srcB.result()
-    val dst = dstB.result()
-    val m = src.length
-    // sorted distinct vertex ids in ids(0 until n)
-    val ids = java.util.Arrays.copyOf(src, 2 * m)
-    System.arraycopy(dst, 0, ids, m, m)
-    java.util.Arrays.sort(ids)
-    var n = 0
-    var i = 0
-    while (i < ids.length) {
-      if (n == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 }
-      i += 1
-    }
-    def vertex(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, id)
-    // CSR adjacency: out-edges of v are adj(off(v) until off(v + 1))
-    val from = new Array[Int](m)
-    val off = new Array[Int](n + 1)
-    i = 0
-    while (i < m) { from(i) = vertex(src(i)); off(from(i) + 1) += 1; i += 1 }
-    i = 0
-    while (i < n) { off(i + 1) += off(i); i += 1 }
-    val fill = java.util.Arrays.copyOf(off, n)
-    val adj = new Array[Int](m)
-    i = 0
-    while (i < m) {
-      adj(fill(from(i))) = vertex(dst(i)); fill(from(i)) += 1; i += 1
-    }
-    // Tarjan state; `order` = discovery index (-1 unvisited), the DFS
-    // frames are (callV, callE = next out-edge to scan)
-    val order = Array.fill(n)(-1)
-    val low = new Array[Int](n)
-    val onStack = new Array[Boolean](n)
-    val stack = new Array[Int](n)
-    val callV = new Array[Int](n)
-    val callE = new Array[Int](n)
-    val label = new Array[Int](n)
-    var sp = 0
-    var cp = 0
-    var next = 0
-    def visit(v: Int): Unit = {
-      order(v) = next; low(v) = next; next += 1
-      stack(sp) = v; sp += 1; onStack(v) = true
-      callV(cp) = v; callE(cp) = off(v); cp += 1
-    }
-    var root = 0
-    while (root < n) {
-      if (order(root) < 0) visit(root)
-      while (cp > 0) {
-        val v = callV(cp - 1)
-        val k = callE(cp - 1)
-        if (k < off(v + 1)) {
-          callE(cp - 1) = k + 1
-          val w = adj(k)
-          if (order(w) < 0) visit(w)
-          else if (onStack(w)) low(v) = math.min(low(v), order(w))
-        } else {
-          cp -= 1
-          if (low(v) == order(v)) {
-            var top = sp
-            var least = Int.MaxValue
-            while ({ top -= 1; least = math.min(least, stack(top))
-              stack(top) != v }) ()
-            while (sp > top) {
-              sp -= 1; label(stack(sp)) = least; onStack(stack(sp)) = false
-            }
-          }
-          if (cp > 0) {
-            val u = callV(cp - 1)
-            low(u) = math.min(low(u), low(v))
-          }
-        }
-      }
-      root += 1
-    }
-    Iterator.range(0, n).map(v => Row(ids(v), ids(label(v))))
-  }
 
   /** Oracle: exact transitive closure as a recursive CTE; v ∈ SCC(m)
     * iff m→*v and v→*m, m = the minimum such mutual-reach partner
@@ -1232,45 +1056,19 @@ object Graph {
        |FROM deg GROUP BY 1
        |ORDER BY bin""".stripMargin
 
-  /** k-core membership: iteratively peel nodes of in-subgraph degree
-    * < k until the fixpoint; survivors with their final core degree.
-    * The classic graph-densification cut (stronger than the one-shot
-    * support floor: a node's SUPPORT can be high while everything it
-    * touches is peripheral). Each round is one partially-aggregated
-    * degree count + two semi-joins, lineage cut per round
-    * (localCheckpoint — the BFS/CC discipline); rounds are bounded by
-    * the peel depth, O(log-ish) on real graphs, and a convergence
-    * guard throws rather than return a half-peeled subgraph. */
-  def kCore(edges: DataFrame, k: Long = 2L, maxIter: Int = 30): DataFrame = {
-    // LAZY checkpoint + count: the convergence count is the round's
-    // only driver decision, so it doubles as the checkpoint's
-    // materializing action — one job per peel round instead of two
-    // (eager checkpoint, then count over the same blocks)
-    var e = edges.select(col("src"), col("dst"))
-      .localCheckpoint(eager = false)
-    var n = e.count()
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val keep = e.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("d"))
-        .filter(col("d") >= k)
-        .select(col("node"))
-      val ne = e
-        .join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
-        .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))
-        .localCheckpoint(eager = false)
-      val nn = ne.count()
-      converged = nn == n
-      e = ne; n = nn; iter += 1
+  /** k-core membership: peel nodes of in-subgraph out-degree < k until
+    * the fixpoint; survivors with their final core degree, in node
+    * order. The classic graph-densification cut (stronger than the
+    * one-shot support floor: a node's SUPPORT can be high while
+    * everything it touches is peripheral). One queue-based peel in one
+    * task on a [[LocalGraph]] reaches the fixpoint of the synchronous
+    * peel rounds the oracle unrolls, however deep the peel runs. */
+  def kCore(edges: DataFrame, k: Long = 2L): DataFrame =
+    LocalGraph.inTask(edges, nodeRows(notNull("core_degree", LongType))) { g =>
+      val deg = g.coreDegrees(k)
+      Iterator.range(0, g.n).filter(deg(_) > 0)
+        .map(v => Row(g.id(v), deg(v).toLong))
     }
-    if (!converged) throw new IllegalStateException(
-      s"k-core peel did not converge within $maxIter rounds")
-    e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("core_degree"))
-      .orderBy(col("node"))
-  }
 
   /** Oracle: the peel unrolled to `unroll` stages — stages past the
     * fixpoint are no-ops, so any unroll ≥ the true peel depth states
@@ -1767,8 +1565,8 @@ object Graph {
     *
     * Scale shape: the frontier relation joins the standing bucketed
     * adjacency on src (co-located), one min-groupBy exchange per
-    * round, lineage cut by per-round checkpoint — the `bfsDistances`
-    * loop with min-cost in place of first-visit. */
+    * round, lineage cut by per-round checkpoint: a frontier loop with
+    * min-cost in place of first-visit. */
   def ssspWeighted(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val c = edges

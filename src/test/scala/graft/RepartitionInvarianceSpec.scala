@@ -69,7 +69,12 @@ class RepartitionInvarianceSpec extends SparkSuite {
     "agg_gini",             // distinct-value rank telescoping, integer bp
     "events_survival",      // micro-bucketed K-M descending cumulative
     "graph_link_predict",   // per-wedge integer RA terms, order-free sum
-    "ts_paa")               // integer segment grid + exact cent means
+    "ts_paa",               // integer segment grid + exact cent means
+    "graph_bfs",            // one-task BFS from the min id
+    "graph_landmark_closeness", // one-task landmark BFS, integer harmonic sum
+    "graph_eccentricity",   // one-task landmark BFS, max distance
+    "graph_cc",             // driver union-find over the collected backbone
+    "dedup_clusters_md5")   // LSH pairs → driver union-find components
 
   test("representative queries are bit-identical at 2 vs 16 shuffle partitions") {
     val conf = spark.conf

@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * existence check). A hand-rolled copy of either protocol drifts — the
   * copies this replaced had each grown their own sweep bug — so a new one
   * anywhere else under src/main/scala fails here. So does a second
-  * Spark-event listener, bus drain or probe main anywhere under src/. */
+  * Spark-event listener, bus drain or probe main anywhere under src/,
+  * and a second CSR graph builder or one-task graph entry point. */
 class StandingStateLintSpec extends AnyFunSuite {
 
   private val mainRoot = Paths.get("src/main/scala/graft")
@@ -52,6 +53,13 @@ class StandingStateLintSpec extends AnyFunSuite {
   test("one listener-bus drain under src/: ListenerDrain") {
     assert(files(srcRoot)(_.contains("listenerBus")) ===
       Seq("main/scala/org/apache/spark/sql/graftbridge/ListenerDrain.scala"))
+  }
+
+  test("one CSR builder and one in-task entry: rel/LocalGraph.scala") {
+    val oneTask = raw"\.coalesce\(1\)\s*\.mapPartitions".r
+    assert(filesUsing("binarySearch") === Seq("rel/LocalGraph.scala"))
+    assert(files(mainRoot)(oneTask.findFirstIn(_).nonEmpty) ===
+      Seq("rel/LocalGraph.scala"))
   }
 
   test("four mains under src/: Bench, Probe, SynthScale and Verify") {

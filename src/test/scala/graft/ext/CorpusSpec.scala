@@ -22,30 +22,33 @@ class CorpusSpec extends SparkSuite {
     assert(comp.size == 7, "only nodes that appear in edges get labels")
   }
 
-  test("connected components: long path converges on BOTH paths (driver + distributed)") {
+  test("connected components: a long path gets the min label") {
     import spark.implicits._
     val path = (1L to 12L).sliding(2).map(w => (w.head, w.last)).toSeq
       .toDF("doc_a", "doc_b")
-    val driver = Corpus.connectedComponents(path).collect()
-    assert(driver.forall(_.getLong(1) == 1L), "all path nodes reach min label")
-    // driverEdgeLimit = 0 forces the distributed hash-min fallback; the
-    // two implementations must agree exactly
-    val dist = Corpus.connectedComponents(path, driverEdgeLimit = 0).collect()
-    assert(dist.map(r => (r.getLong(0), r.getLong(1))).toSeq ==
-      driver.map(r => (r.getLong(0), r.getLong(1))).toSeq)
+    val comp = Corpus.connectedComponents(path).collect()
+    assert(comp.map(_.getLong(0)).toSeq == (1L to 12L))
+    assert(comp.forall(_.getLong(1) == 1L), "all path nodes reach min label")
   }
 
-  test("connected components: pointer jumping makes a 64-node chain " +
-      "converge within a logarithmic iteration budget") {
+  test("connected components: a 64-node chain gets one label") {
     import spark.implicits._
     val chain = (0L until 64L).sliding(2).map(w => (w.head, w.last)).toSeq
       .toDF("doc_a", "doc_b")
-    // hash-min alone needs ~64 iterations here; with path halving the
-    // label paths collapse geometrically — maxIter 10 ≈ log₂(64) + slack
-    val comp = Corpus.connectedComponents(chain, maxIter = 10,
-      driverEdgeLimit = 0).collect()
+    val comp = Corpus.connectedComponents(chain).collect()
     assert(comp.length == 64 && comp.forall(_.getLong(1) == 0L),
-      "every chain node must reach the min label within the log budget")
+      "every chain node must get the chain's min label")
+  }
+
+  /** The candidate pairs are collected in ONE job and the components
+    * finish on the driver into a local relation: no sizing count ahead
+    * of the collect. */
+  test("connected components: one job for the pairs") {
+    val pairs = spark.range(64).select(col("id").as("doc_a"),
+      (col("id") + 1).as("doc_b"))
+    val (comp, jobs) = jobsOf(Corpus.connectedComponents(pairs))
+    assert(jobs == 1, s"connectedComponents took $jobs jobs")
+    assert(comp.collect().map(_.getLong(1)).toSeq == Seq.fill(65)(0L))
   }
 
   test("near-dup clusters + canonical corpus: dups collapse, rest passes") {

@@ -805,4 +805,138 @@ class GraphSpec extends SparkSuite {
       col("scc_id") =!= col("v_min") || col("v_min") =!= col("v_max"))
       .isEmpty, "a path's SCCs are its singletons")
   }
+
+  // ------------------------------------------ in-task LocalGraph kernels
+
+  /** An empty edge set: no landmark, no vertex — every op returns no
+    * rows and its usual columns (a min over no `src` is null, which the
+    * per-round BFS loop read as a source id and threw on). */
+  test("in-task graph ops: an empty edge set yields no rows") {
+    val e = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val ops = Seq(
+      Graph.bfsDistances(e, 4) -> Seq("node", "dist"),
+      Graph.landmarkCloseness(e, 8, 4) ->
+        Seq("node", "n_reached", "closeness12"),
+      Graph.landmarkEccentricity(e, 8, 4) ->
+        Seq("node", "ecc_lb", "n_landmarks_reached"),
+      Graph.landmarkBetweenness(e, 4, 3) -> Seq("node", "bc_fp"),
+      Graph.kCore(e) -> Seq("node", "core_degree"),
+      Graph.componentSizes(e) -> Seq("node", "component", "n_nodes"))
+    ops.foreach { case (out, cols) =>
+      assert(out.columns.toSeq === cols)
+      assert(out.isEmpty, s"${cols.mkString(",")} is not empty")
+    }
+  }
+
+  /** Job budgets of the declared in-task graph queries on the fixture:
+    * the edge checkpoint and the one-task kernel — a fixed handful of
+    * jobs, not a checkpoint and an emptiness or count job per round. The
+    * standing backbone is built before counting. */
+  Seq("graph_bfs", "graph_landmark_closeness", "graph_eccentricity",
+      "graph_betweenness", "graph_kcore").foreach { name =>
+    test(s"$name submits at most 5 jobs on the fixture") {
+      Graph.ensureBackbone(spark, sfDir)
+      val q = Graph.queries.toMap.apply(name)
+      val (rows, jobs) = jobsOf(q.fn(spark, sfDir).collect())
+      assert(rows.nonEmpty)
+      assert(jobs <= 5, s"$name took $jobs jobs")
+    }
+  }
+
+  /** The kernels at depth: a 200k-vertex one-way path with duplicate
+    * edges (every 7th) and self-loops (every 1000th). BFS walks it
+    * whole; the 1-core peels the tail beyond the last self-loop, one
+    * vertex per synchronous round (so ~1000 rounds for a round loop),
+    * in one queue pass; union-find gives the path one label. */
+  test("in-task kernels on a 200k-vertex path with duplicates and self-loops") {
+    val n = 200000L
+    val base = spark.range(n - 1).select(col("id").as("src"),
+      (col("id") + 1).as("dst"))
+    val e = base
+      .unionByName(base.filter(col("src") % 7 === 0))
+      .unionByName(spark.range(0, n, 1000)
+        .select(col("id").as("src"), col("id").as("dst")))
+    val bfs = Graph.bfsDistances(e, Int.MaxValue)
+    assert(bfs.count() === n)
+    assert(bfs.filter(col("dist") =!= col("node")).isEmpty,
+      "every path vertex is at distance = its id from vertex 0")
+    val last = n - 1000 // the last self-loop: the tail beyond it peels
+    val core = Graph.kCore(e, k = 1L).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    assert(core === (0L to last).map { v =>
+      v -> ((if (v < last) 1L else 0L) + (if (v < last && v % 7 == 0) 1L else 0L) +
+        (if (v % 1000 == 0) 1L else 0L))
+    })
+    val cc = graft.ext.Corpus.connectedComponents(
+      e.select(col("src").as("doc_a"), col("dst").as("doc_b")))
+    assert(cc.count() === n)
+    assert(cc.filter(col("component") =!= 0L).isEmpty,
+      "the whole path is one component labeled 0")
+  }
+
+  /** Driver-side references for the kernels with no DataFrame twin: the
+    * transitive closure of a small digraph, its SCC minimum labels and
+    * its undirected component minimum labels. */
+  private def closure(es: Seq[(Long, Long)]): Set[(Long, Long)] = {
+    var reach = es.toSet
+    var grown = true
+    while (grown) {
+      val next = reach ++ (for ((a, b) <- reach; (c, d) <- reach if b == c)
+        yield (a, d))
+      grown = next.size > reach.size
+      reach = next
+    }
+    reach
+  }
+
+  /** Every in-task kernel against its reference on seeded random
+    * digraphs: one-way edges, duplicate edge rows and self-loops, and
+    * nullable id columns like the standing backbone's. The BFS family,
+    * betweenness and k-core must match their per-round DataFrame twins
+    * (`GraphTwins`) row for row and schema for schema. */
+  test("property: in-task kernels match their twins on random digraphs") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val rnd = new scala.util.Random(20261020L)
+    val schema = StructType(Seq(StructField("src", LongType),
+      StructField("dst", LongType)))
+    for (trial <- 1 to 4) {
+      val vs = Seq.fill(3 + rnd.nextInt(8))(rnd.nextInt(40).toLong).distinct
+      def pick() = vs(rnd.nextInt(vs.size))
+      val drawn = Seq.fill(4 + rnd.nextInt(20))(pick() -> pick())
+      val es = drawn :+ drawn.head :+ { val v = pick(); v -> v }
+      val e = spark.createDataFrame(
+        es.map { case (a, b) => Row(a, b) }.asJava, schema)
+      def same(op: String, got: DataFrame, want: DataFrame): Unit = {
+        assert(got.schema === want.schema, s"trial $trial $op schema")
+        assert(got.collect().toSeq === want.collect().toSeq,
+          s"trial $trial $op on $es")
+      }
+      same("bfs", Graph.bfsDistances(e, 3), GraphTwins.bfsDistances(e, 3))
+      same("closeness", Graph.landmarkCloseness(e, 3, 4),
+        GraphTwins.landmarkCloseness(e, 3, 4))
+      same("eccentricity", Graph.landmarkEccentricity(e, 3, 4),
+        GraphTwins.landmarkEccentricity(e, 3, 4))
+      same("betweenness", Graph.landmarkBetweenness(e, 4, 3),
+        GraphTwins.landmarkBetweenness(e, 4, 3))
+      same("kcore", Graph.kCore(e, 2L), GraphTwins.kCore(e, 2L))
+      same("1-core", Graph.kCore(e, 1L), GraphTwins.kCore(e, 1L))
+      val nodes = es.flatMap { case (a, b) => Seq(a, b) }.distinct.sorted
+      val reach = closure(es)
+      val undirected = closure(es ++ es.map(_.swap))
+      def minLabel(linked: (Long, Long) => Boolean) =
+        nodes.map(v => v -> nodes.filter(u => u == v || linked(u, v)).min)
+      val scc = Graph.stronglyConnectedComponents(e).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toSeq
+      val sccWant = minLabel((u, v) => reach((u, v)) && reach((v, u)))
+        .groupBy(_._2).map { case (id, vs) => id -> vs.size.toLong }
+        .toSeq.sorted
+      assert(scc === sccWant, s"trial $trial scc on $es")
+      val cc = graft.ext.Corpus.connectedComponents(
+        e.select(col("src").as("doc_a"), col("dst").as("doc_b")))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+      assert(cc === minLabel((u, v) => undirected((u, v))),
+        s"trial $trial components on $es")
+    }
+  }
 }
