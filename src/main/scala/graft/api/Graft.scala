@@ -54,8 +54,8 @@ object Graft {
 
   /** Register every fixture table of a scale-factor directory as a temp
     * view, opening the full `spark.sql` surface over the corpus (the
-    * engine's SQL front door; pairs with GraftExtensions for the native
-    * functions). */
+    * engine's SQL front door; `AsOfJoin.ensurePlanned` installs the one
+    * planner strategy the engine adds). */
   def openCatalog(spark: SparkSession, dir: String): Unit = {
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>

@@ -231,18 +231,6 @@ object Similarity {
       |ORDER BY cos DESC, vec_id
       |LIMIT 10""".stripMargin
 
-  /** Deterministic hyperplane component for (plane p, dimension i): a
-    * pseudo-random double in [-1, 1) derived from xxhash64 —
-    * reproducible across runs/partitions with no RNG state. UNSIGNED
-    * shift, deliberately: the arithmetic `shiftright` would keep the
-    * hash's sign and fold every component into [-2, 0) — all-negative
-    * hyperplanes still partition space but are heavily correlated,
-    * wasting quantizer balance. The `SignBitLsh` plane matrix
-    * replicates it (SignBitLshSpec). */
-  private[ext] def planeComponent(p: Int, i: Column): Column =
-    (call_function("shiftrightunsigned", xxhash64(lit(p), i), lit(11)).cast("double")
-      / (1L << 53).toDouble) * 2.0 - 1.0
-
   /** The declared `simsearch_lsh` surface: IVF/LSH-bucketed ANN that
     * probes only the query's cell, over the md5-derived portable
     * hyperplanes with rank-only output — so quantization, cell

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -10,31 +10,27 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** Native Catalyst expression: sign-bit LSH cell id of a DOUBLE array
   * over `nPlanes` deterministic hyperplanes — the coarse quantizer
-  * (`Similarity.planeComponent`'s xxhash64 hyperplanes) compiled to a
-  * primitive loop.
+  * compiled to a primitive loop.
   *
   * The HOF formulation pays nPlanes interpreted `aggregate(zip_with(…))`
-  * passes per row, re-materializing `sequence(0, dim-1)` and re-hashing
-  * every (plane, dim) component each time. But the hyperplane matrix
-  * depends only on (plane index, dimension) — it is a CONSTANT. This
-  * expression precomputes it once driver-side with the SAME xxhash64
-  * chain the HOF evaluates per element (seed 42, plane hashed then
-  * dimension, `>> 11`, /2⁵³, ×2−1), ships it as a reference object, and
-  * evaluates nPlanes dot products per row inside whole-stage codegen.
-  * Bit-identical to the HOF path (same component values, same
-  * left-to-right accumulation) — asserted in SignBitLshSpec.
+  * passes per row. But the hyperplane matrix depends only on (plane
+  * index, dimension) — it is a CONSTANT. This expression builds it once
+  * driver-side ([[SignBitLsh.md5PlaneMatrix]], the portable md5 family
+  * the DuckDB oracle re-derives in SQL), ships it as a reference object,
+  * and evaluates nPlanes dot products per row inside whole-stage
+  * codegen. Bit-identical to the HOF over the same matrix (same
+  * component values, same left-to-right accumulation) — asserted in
+  * SignBitLshSpec.
   *
   * Used by the quantizer-blocked embedding dedup and the LSH ANN probe;
-  * the HOF twin stays as the differential-testing reference.
+  * the HOF twin (`SimilarityTwins.lshCellFromPlanes`) stays as the
+  * differential-testing reference.
   */
-case class SignBitLsh(child: Expression, dim: Int, nPlanes: Int,
-    family: String = "xxhash64")
+case class SignBitLsh(child: Expression, dim: Int, nPlanes: Int)
     extends UnaryExpression {
 
   require(nPlanes >= 1 && nPlanes <= 30, s"nPlanes out of range: $nPlanes")
   require(dim >= 1, s"dim out of range: $dim")
-  require(SignBitLsh.Families.contains(family),
-    s"unknown hyperplane family: $family")
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
@@ -46,22 +42,15 @@ case class SignBitLsh(child: Expression, dim: Int, nPlanes: Int,
 
   override def prettyName: String = "sign_bit_lsh"
 
-  /** nPlanes × dim hyperplane components, identical to the HOF's
-    * `(shiftright(xxhash64(p, i), 11) / 2^53) * 2 - 1`. xxhash64 chains
-    * child hashes as seeds starting at 42, exactly like the builtin. */
+  /** nPlanes × dim hyperplane components. */
   @transient private lazy val planes: Array[Array[Double]] =
-    if (family == "md5") SignBitLsh.md5PlaneMatrix(dim, nPlanes)
-    else SignBitLsh.planeMatrix(dim, nPlanes)
+    SignBitLsh.md5PlaneMatrix(dim, nPlanes)
 
   /** Dirty-input contract: any null element or length != dim ⇒ cell 0.
-    * For null elements and SHORT arrays this matches the HOF twin
-    * exactly (zip_with's null padding poisons the aggregate to null, so
-    * every `proj >= 0` is false). For arrays LONGER than dim the HOF
-    * diverges by accident — its null-padded index side is silently
-    * skipped by xxhash64, folding the tail elements in through a
-    * per-plane constant — which is noise, not a semantic; the native
-    * expression defines the contract (cell 0), and SignBitLshSpec pins
-    * both behaviors. */
+    * This matches the HOF twin exactly: zip_with against the literal
+    * plane array null-pads the shorter side, which poisons the
+    * aggregate to null, so every `proj >= 0` is false
+    * (SignBitLshSpec). */
   override def nullSafeEval(input: Any): Any = {
     val v = input.asInstanceOf[ArrayData]
     if (v.numElements() != dim) return 0
@@ -118,19 +107,6 @@ case class SignBitLsh(child: Expression, dim: Int, nPlanes: Int,
 }
 
 object SignBitLsh {
-  /** The deterministic hyperplane matrix — public so tests can pin it.
-    * Unsigned shift (`>>>`), matching the HOF's `shiftrightunsigned`:
-    * components span [-1, 1) instead of the sign-folded [-2, 0) an
-    * arithmetic shift would give. */
-  def planeMatrix(dim: Int, nPlanes: Int): Array[Array[Double]] =
-    Array.tabulate(nPlanes, dim) { (p, i) =>
-      val h1 = XxHash64Function.hash(p, IntegerType, 42L)
-      val h2 = XxHash64Function.hash(i, IntegerType, h1)
-      ((h2 >>> 11).toDouble / (1L << 53).toDouble) * 2.0 - 1.0
-    }
-
-  val Families: Set[String] = Set("xxhash64", "md5")
-
   /** The PORTABLE hyperplane matrix: first 13 md5 hex chars of "p:i" -> 52-bit
     * int -> [-1, 1), every step exact in doubles and replayable as
     * ANSI SQL. */
@@ -143,12 +119,9 @@ object SignBitLsh {
     }
   }
 
-  def sign_bit_lsh(v: Column, dim: Int, nPlanes: Int): Column =
-    ColumnBridge.column(SignBitLsh(ColumnBridge.expression(v), dim, nPlanes))
-
-  /** md5-family variant: same codegen'd loop over the portable matrix
-    * — bit-equal to the interpreted per-plane `aggregate(zip_with(…))`
-    * formulation on clean AND dirty inputs (SignBitLshSpec). */
+  /** The cell id over the md5 matrix — bit-equal to the interpreted
+    * per-plane `aggregate(zip_with(…))` formulation on clean AND dirty
+    * inputs (SignBitLshSpec). */
   def sign_bit_lsh_md5(v: Column, dim: Int, nPlanes: Int): Column =
-    ColumnBridge.column(SignBitLsh(ColumnBridge.expression(v), dim, nPlanes, "md5"))
+    ColumnBridge.column(SignBitLsh(ColumnBridge.expression(v), dim, nPlanes))
 }

@@ -24,8 +24,8 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   * quadratic, and at 100 TB the cost is exactly two shuffles + two
   * sorts, same as any sort-merge join of the inputs.
   *
-  * Wiring: `AsOfJoin(logical)` → `AsOfJoinStrategy` (injected via
-  * `GraftExtensions.injectPlannerStrategy`) → `AsOfJoinExec`. The exec
+  * Wiring: `AsOfJoin(logical)` → `AsOfJoinStrategy` (installed by
+  * `AsOfJoin.ensurePlanned`) → `AsOfJoinExec`. The exec
   * declares ClusteredDistribution on the key for BOTH children with a
   * pinned partition count (co-partitioning must survive AQE) and
   * per-child (key, ts) ordering, so EnsureRequirements plans the
@@ -48,9 +48,9 @@ case class AsOfJoin(
 }
 
 object AsOfJoin {
-  /** Idempotently register the planner strategy on the session (the
-    * library path when `GraftExtensions` isn't installed). */
-  def ensurePlanned(spark: SparkSession): Unit = {
+  /** Idempotently register the planner strategy on the session: the
+    * one place the engine installs a strategy, run by every [[asof]]. */
+  private def ensurePlanned(spark: SparkSession): Unit = {
     val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
     if (!exp.extraStrategies.contains(AsOfJoinStrategy))
       exp.extraStrategies = exp.extraStrategies :+ AsOfJoinStrategy

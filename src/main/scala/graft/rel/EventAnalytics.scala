@@ -121,18 +121,9 @@ object EventAnalytics {
       |FROM d GROUP BY cohort_day, day_offset
       |ORDER BY cohort_day, day_offset""".stripMargin
 
-  /** Top-k session paths: sessionize per user (30-minute inactivity
-    * gap — the window_sessionize rule), join each session's event
-    * types into an ordered path string, count path frequencies. The
-    * whole chain is two keyed windows sharing the user_id shuffle, one
-    * session-path aggregation, and one count — no per-session collect,
-    * no events×events join. Path strings are deterministic: listagg
-    * ordered by (ts, event_id), the engine-wide total order. */
-  /** Per-session ordered path strings — the sessionize + path-join
-    * stage shared by the batch top-k and the streaming differential
-    * (`Streams.sessionPaths` must reproduce exactly these (user, path)
-    * rows). */
-  def sessionPathsBatch(events: DataFrame): DataFrame = {
+  /** Per-session ordered path strings: one (user_id, session_id,
+    * path) row per session of [[topSessionPaths]]. */
+  private def sessionPaths(events: DataFrame): DataFrame = {
     val wUser = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
     val gapped = events
@@ -156,8 +147,15 @@ object EventAnalytics {
         s => s.getField("event_type"))).as("path"))
   }
 
+  /** Top-k session paths: sessionize per user (30-minute inactivity
+    * gap — the window_sessionize rule), join each session's event
+    * types into an ordered path string, count path frequencies. The
+    * whole chain is two keyed windows sharing the user_id shuffle, one
+    * session-path aggregation, and one count — no per-session collect,
+    * no events×events join. Path strings are deterministic: listagg
+    * ordered by (ts, event_id), the engine-wide total order. */
   def topSessionPaths(events: DataFrame, k: Int): DataFrame =
-    sessionPathsBatch(events)
+    sessionPaths(events)
       .groupBy(col("path"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("path"))
@@ -182,16 +180,6 @@ object EventAnalytics {
        |SELECT path, COUNT(*) AS n FROM p
        |GROUP BY path ORDER BY n DESC, path LIMIT $k""".stripMargin
 
-  /** Last-touch purchase attribution — the BATCH declaration of the
-    * stream-stream interval join (`ext/streaming/Streams
-    * .purchaseAttribution`): each purchase joins the same user's views
-    * from the preceding day, and the LATEST such view (ties on
-    * view_id) wins the credit. Running the streaming transform verbatim
-    * on batch input puts the interval-join semantics behind the DuckDB
-    * hash gate — StreamingSpec's streamed ≡ batch differential then
-    * extends that gate to the streaming path. The per-purchase argmax
-    * plans as WindowGroupLimit; the interval join shuffles both sides
-    * on user_id once. */
   /** Position-based (U-shaped) multi-touch attribution — the standard
     * third model beside last-touch and the Markov removal effect:
     * within each CONVERTING journey (the markov journey split — events
@@ -267,12 +255,38 @@ object EventAnalytics {
       |       CAST(COUNT(*) AS BIGINT) AS n_touches
       |FROM c GROUP BY event_type ORDER BY event_type""".stripMargin
 
+  /** The lookback of [[lastTouchAttribution]]: one day. */
+  private val AttributionWindowMinutes = 1440
+
+  /** Every (purchase, view) pair of one user with the view inside the
+    * purchase's lookback: a range join on `user_id`. */
+  private def purchaseAttribution(views: DataFrame,
+      purchases: DataFrame): DataFrame = {
+    val v = views.select(col("user_id").as("v_user"),
+      col("ts").as("view_ts"), col("event_id").as("view_id"))
+    val p = purchases.select(col("user_id").as("p_user"),
+      col("ts").as("purchase_ts"), col("event_id").as("purchase_id"))
+    p.join(v, expr(
+      s"""p_user = v_user AND
+        |view_ts <= purchase_ts AND
+        |view_ts >= purchase_ts - INTERVAL $AttributionWindowMinutes MINUTES"""
+        .stripMargin))
+      .select(col("p_user").as("user_id"), col("purchase_id"),
+        col("view_id"), col("purchase_ts"), col("view_ts"))
+  }
+
+  /** Last-touch purchase attribution: each purchase joins the same
+    * user's views from the preceding day (`view_ts` in
+    * [`purchase_ts` − 1440 min, `purchase_ts`], both ends inclusive),
+    * and the LATEST such view wins the credit, ties on `ts` going to
+    * the higher `view_id`. A purchase with no qualifying view is absent
+    * (inner join); `gap_us` is the exact µs distance. The interval join
+    * shuffles both sides on user_id once and the per-purchase argmax
+    * plans as WindowGroupLimit. */
   def lastTouchAttribution(events: DataFrame): DataFrame = {
-    val joined = graft.ext.streaming.Streams.purchaseAttribution(
+    purchaseAttribution(
       events.filter(col("event_type") === "view"),
-      events.filter(col("event_type") === "purchase"),
-      windowMinutes = 1440)
-    joined
+      events.filter(col("event_type") === "purchase"))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("purchase_id"))
           .orderBy(col("view_ts").desc, col("view_id").desc)))
@@ -316,9 +330,7 @@ object EventAnalytics {
     *
     * Scale shape: both row_numbers, the island aggregate and the final
     * join are all keyed by user_id, so the whole match plans in ONE
-    * exchange; state per user is a row index, not a buffered sequence.
-    * This is the batch shape of what flatMapGroupsWithState does in the
-    * streaming twins. */
+    * exchange; state per user is a row index, not a buffered sequence. */
   def matchViewRunsThenClick(events: DataFrame): DataFrame = {
     val wOrd = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))

@@ -702,9 +702,8 @@ object Quality {
     * log's ingest sequence); an event whose timestamp sits behind the
     * running event-time maximum is LATE by exactly that gap. Per type:
     * events, late events, max and total lateness in exact microseconds
-    * — read these before choosing `withWatermark`'s delay (the
-    * streaming twins here default to 10 minutes; this table is how
-    * that number stops being a guess). One type-keyed window over the
+    * — read these before choosing a watermark's delay, so that number
+    * is not a guess. One type-keyed window over the
     * arrival order + one partial-agg reduce. */
   def latenessAudit(events: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window

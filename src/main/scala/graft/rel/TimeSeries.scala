@@ -1413,12 +1413,10 @@ object TimeSeries {
     * one shuffle on user_id, no per-row recursion anywhere. The pinned
     * min is over OBSERVED rows (no virtual zero prefix), which differs
     * from the clamped textbook recursion only while every prefix sum
-    * is still positive; the streaming twin (`Streams.cusumAlarmStream`)
-    * maintains the same (p, min p) pair as state, differential-pinned.
-    * Deviations accumulate in exact DECIMAL, so the threshold crossing
-    * (and therefore the alarm row) is bit-identical cross-engine; the
-    * FIRST alarm per user is picked by rank in the engine-wide
-    * (ts, event_id) order. */
+    * is still positive. Deviations accumulate in exact DECIMAL, so the
+    * threshold crossing (and therefore the alarm row) is bit-identical
+    * cross-engine; the FIRST alarm per user is picked by rank in the
+    * engine-wide (ts, event_id) order. */
   def cusumAlarms(events: DataFrame, target: Double = 50.0,
       h: Double = 500.0): DataFrame = {
     import graft.core.Exact.money

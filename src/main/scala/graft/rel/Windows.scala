@@ -252,9 +252,6 @@ object Windows {
         |             ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
         |ORDER BY user_id, event_id""".stripMargin),
 
-    // ---- W4 tumbling event-time window (batch twin of the streaming
-    //      query in ext.streaming; Spark `window()` start ≡ DuckDB
-    //      time_bucket for 10-minute buckets, both epoch-aligned) --------
     // ---- W3b RANGE frame (value-based, not row-based): 30-day trailing
     //      spend. The semantics ROWS can't express: ALL same-day peers
     //      join the frame regardless of tie order — which is also what
@@ -308,6 +305,9 @@ object Windows {
         |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
         |ORDER BY o_custkey, o_orderkey""".stripMargin),
 
+    // ---- W4 tumbling event-time window (Spark `window()` start ≡
+    //      DuckDB time_bucket for 10-minute buckets, both
+    //      epoch-aligned) --------------------------------------------------
     "window_tumbling" -> QueryDef(
       (s, d) => Tables.events(s, d)
         .groupBy(window(col("ts"), "10 minutes").getField("start").as("bucket_ts"))

@@ -14,7 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * copies this replaced had each grown their own sweep bug — so a new one
   * anywhere else under src/main/scala fails here. So does a second
   * Spark-event listener, bus drain or probe main anywhere under src/,
-  * and a second CSR graph builder or one-task graph entry point. */
+  * a second CSR graph builder or one-task graph entry point, and a
+  * second way to install a planner strategy or a SQL function. */
 class StandingStateLintSpec extends AnyFunSuite {
 
   private val mainRoot = Paths.get("src/main/scala/graft")
@@ -66,5 +67,12 @@ class StandingStateLintSpec extends AnyFunSuite {
     assert(files(srcRoot)(_.contains("def main(")) ===
       Seq("Bench", "Probe", "SynthScale", "Verify")
         .map(m => s"main/scala/graft/$m.scala"))
+  }
+
+  test("one strategy install under src/main: plans/AsOfJoinPlan.scala") {
+    val install = raw"SparkSessionExtensions|injectFunction|" +
+      raw"injectPlannerStrategy|extraStrategies\s*=(?!=)"
+    assert(files(Paths.get("src/main/scala"))(install.r.findFirstIn(_).nonEmpty) ===
+      Seq("graft/plans/AsOfJoinPlan.scala"))
   }
 }

@@ -6,24 +6,23 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every public def under src/main/scala exists because production
-  * code reaches it. A def whose only callers are specs is either a
-  * capability no query runs (delete it) or a reference twin of a
-  * declared path (it lives under src/test). Comments are stripped and
-  * string literals kept, so a name a query builds into SQL text or a
-  * registered function name still counts as a use. It matches names,
-  * not symbols: a def whose name is also a column or a local elsewhere
+/** Every public def, object, class and trait under src/main/scala
+  * exists because production code reaches it. One whose only users are
+  * specs is either a capability no query runs (delete it) or a
+  * reference twin of a declared path (it lives under src/test).
+  * Comments are stripped and string literals kept, so a name a query
+  * builds into SQL text still counts as a use. It matches names, not
+  * symbols: a def whose name is also a column or a local elsewhere
   * passes even when nothing calls it.
   *
   * Exempt, written out: the product API (`api/`, `Xlsx.readSheet`,
-  * `Xlsx.sheetNames`), the streaming surface (`ext/streaming/`, which
-  * still counts as a caller), entry points (`main`, `apply`) and
-  * overrides. */
+  * `Xlsx.sheetNames`), entry points (`main`, `apply`, and the objects
+  * that define `main`) and overrides. */
 class SurfaceLintSpec extends AnyFunSuite {
 
   private val mainRoot = Paths.get("src/main/scala/graft")
 
-  private val exemptDirs = Seq("api/", "ext/streaming/")
+  private val exemptDirs = Seq("api/")
   private val exemptDefs = Set("sources/Xlsx.scala#readSheet",
     "sources/Xlsx.scala#sheetNames")
   private val exemptNames = Set("main", "apply")
@@ -86,21 +85,45 @@ class SurfaceLintSpec extends AnyFunSuite {
     sources.values.toSeq.flatMap(raw"\w+".r.findAllIn(_))
       .groupMapReduce(identity)(_ => 1)(_ + _)
 
-  private val defLine = raw"(?m)^[ \t]*((?:[\w\[\]@]+[ \t]+)*)def[ \t]+([A-Za-z_]\w*)".r
+  /** A definition line: its modifiers, then the keyword and the name. */
+  private def declLine(keywords: String) =
+    raw"(?m)^[ \t]*((?:[\w\[\]@]+[ \t]+)*)(?:$keywords)[ \t]+([A-Za-z_]\w*)".r
+
+  /** `file.name` for every public `keywords` definition outside the
+    * exempt dirs whose name occurs nowhere else in src/main, less the
+    * names `exempt(file, name)` lets through. */
+  private def unreached(keywords: String)(
+      exempt: (String, String) => Boolean): Seq[String] = for {
+    (file, src) <- sources.toSeq.sorted
+    if !exemptDirs.exists(file.startsWith)
+    m <- declLine(keywords).findAllMatchIn(src)
+    mods = m.group(1)
+    name = m.group(2)
+    if !Seq("private", "protected", "override").exists(mods.contains)
+    if !exempt(file, name)
+    if nameCounts(name) <= 1
+  } yield s"${file.stripSuffix(".scala").replace('/', '.')}.$name"
+
+  private def failOn(what: String, names: Seq[String]): Unit =
+    if (names.nonEmpty)
+      fail(s"${names.size} public $what have no production use:\n" +
+        names.mkString("\n"))
 
   test("every public def under src/main is named outside its definition") {
-    val unreached = for {
-      (file, src) <- sources.toSeq.sorted
-      if !exemptDirs.exists(file.startsWith)
-      m <- defLine.findAllMatchIn(src)
-      mods = m.group(1)
-      name = m.group(2)
-      if !Seq("private", "protected", "override").exists(mods.contains)
-      if !exemptNames(name) && !exemptDefs(s"$file#$name")
-      if nameCounts(name) <= 1
-    } yield s"${file.stripSuffix(".scala").replace('/', '.')}.$name"
-    if (unreached.nonEmpty)
-      fail(s"${unreached.size} public defs have no production caller:\n" +
-        unreached.mkString("\n"))
+    failOn("defs", unreached("def") { (file, name) =>
+      exemptNames(name) || exemptDefs(s"$file#$name")
+    })
+  }
+
+  test("every public object, class and trait under src/main is named " +
+      "outside its definition") {
+    // a main's object (the last object opened before its `main`) is
+    // its own entry point
+    val mainObject =
+      raw"(?s)\bobject[ \t]+(\w+)\b(?:(?!\bobject\b).)*\bdef[ \t]+main\(".r
+    failOn("objects, classes and traits", unreached("object|class|trait") {
+      (file, name) => mainObject.findFirstMatchIn(sources(file))
+        .exists(_.group(1) == name)
+    })
   }
 }

@@ -24,27 +24,13 @@ object SimilarityTwins {
     * differential-testing twin of the native `Similarity.cosine`. */
   def cosineHof(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Sign-bit LSH cell id over `nPlanes` hash-derived hyperplanes — HOF
-    * formulation (interpreted; nPlanes aggregate passes per row). Kept
-    * as the differential-testing twin of the native codegen'd
-    * `SignBitLsh` expression (SignBitLshSpec). */
-  def lshCell(v: Column, dim: Int, nPlanes: Int): Column =
-    (0 until nPlanes).map { p =>
-      val proj = aggregate(
-        zip_with(v, sequence(lit(0), lit(dim - 1)), (x, i) => x * planeComponent(p, i)),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj >= 0, lit(1 << p)).otherwise(lit(0))
-    }.reduce(_ + _)
-
   /** PORTABLE hyperplane matrix: component (p, i) is the first 13 hex
     * chars of md5("p:i") — a 52-bit integer mapped to [-1, 1). Both
     * steps of the mapping (÷2⁵² then ×2−1) are exact in doubles, and
-    * md5 is identical in every engine, so the matrix — unlike the
-    * xxhash64-derived one behind `SignBitLsh` — can be re-derived in
-    * ANSI SQL: `('0x'||substr(md5(p||':'||i),1,13))::BIGINT / 2^52 * 2
-    * − 1`. Same trick as the md5 MinHash family in `Dedup`: the
-    * portable family carries the oracle, the murmur3/xxhash64 family
-    * carries the throughput. */
+    * md5 is identical in every engine, so the matrix can be re-derived
+    * in ANSI SQL:
+    * `('0x'||substr(md5(p||':'||i),1,13))::BIGINT / 2^52 * 2 − 1`.
+    * Same trick as the md5 MinHash family in `Dedup`. */
   def md5Planes(nPlanes: Int, dim: Int): Seq[Seq[Double]] =
     graft.functions.SignBitLsh.md5PlaneMatrix(dim, nPlanes).toSeq.map(_.toSeq)
 

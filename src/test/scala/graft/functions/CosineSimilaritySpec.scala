@@ -6,9 +6,8 @@ import org.scalacheck.Gen
 import graft.SparkSuite
 import graft.ext.{Similarity, SimilarityTwins}
 
-/** Native CosineSimilarity expression: bit-parity with the HOF twin,
-  * codegen path actually taken, SQL registration via GraftExtensions'
-  * injected function. */
+/** Native CosineSimilarity expression: bit-parity with the HOF twin and
+  * the codegen path actually taken. */
 class CosineSimilaritySpec extends SparkSuite {
 
   test("bit-identical to the interpreted HOF formulation (300 random vectors)") {
@@ -76,18 +75,5 @@ class CosineSimilaritySpec extends SparkSuite {
       .toDF("a", "b")
       .select(Similarity.cosine(col("a"), col("b"))).collect()(0)
     assert(out.isNullAt(0))
-  }
-
-  test("SQL registration through GraftExtensions function injection") {
-    // same injection path as spark.sql.extensions, applied to the live
-    // session's registry for the test
-    val builder = (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-      CosineSimilarity(exprs.head, exprs(1))
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_similarity", builder, "internal")
-    val out = spark.sql(
-      "SELECT cosine_similarity(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c")
-      .collect()(0).getDouble(0)
-    assert(out == 1.0)
   }
 }

@@ -60,26 +60,4 @@ class Md5MinHashSigSpec extends SparkSuite {
     assert("\\*\\(\\d+\\)".r.findFirstIn(p).isDefined,
       s"expected codegen stage:\n$p")
   }
-
-  test("SQL registration through GraftExtensions function injection") {
-    val builder = (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-      exprs match {
-        case Seq(arr,
-          org.apache.spark.sql.catalyst.expressions.Literal(k: Int,
-            org.apache.spark.sql.types.IntegerType)) => Md5MinHashSig(arr, k)
-        case _ => fail("unexpected args")
-      }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_minhash_sig", builder, "internal")
-    val sig = spark.sql(
-      "SELECT md5_minhash_sig(array('a', 'b'), 2) AS s")
-      .collect()(0).getSeq[Long](0)
-    // slot j = min over elements of the first 15 md5 hex chars of "j:e"
-    def h(j: Int, e: String) = java.lang.Long.parseLong(
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$j:$e".getBytes("UTF-8"))
-        .take(8).map(b => f"$b%02x").mkString.take(15), 16)
-    assert(sig === Seq(math.min(h(0, "a"), h(0, "b")),
-      math.min(h(1, "a"), h(1, "b"))))
-  }
 }

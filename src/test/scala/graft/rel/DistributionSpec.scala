@@ -1,10 +1,14 @@
 package graft.rel
 
+import org.apache.spark.sql.functions.{approx_count_distinct, col, countDistinct}
+
 import graft.SparkSuite
+import graft.core.Tables
 
 /** Distributional-shape aggregates (rel/Distribution): hand-computed
   * Gini coefficients and label impurities on planted inputs — the
-  * closed-form cases the integer formulas must reproduce exactly. */
+  * closed-form cases the integer formulas must reproduce exactly — and
+  * the accuracy of the A7 approximate distinct count (RelQueries). */
 class DistributionSpec extends SparkSuite {
   import spark.implicits._
 
@@ -163,5 +167,16 @@ class DistributionSpec extends SparkSuite {
     val li = Seq.fill(20)(0.01).toDF("l_extendedprice")
     val r = Distribution.trimmedMean(li).collect().head
     assert((r.getLong(3), r.getLong(4), r.getLong(5)) === ((18L, 18L, 1L)))
+  }
+
+  test("approx_count_distinct within 5% of exact (A7)") {
+    val li = Tables.lineitem(spark, sfDir)
+    val row = li.agg(
+      countDistinct(col("l_orderkey")).as("exact"),
+      approx_count_distinct(col("l_orderkey"), 0.01).as("approx")).collect()(0)
+    val exact = row.getLong(0).toDouble
+    val approx = row.getLong(1).toDouble
+    assert(math.abs(approx - exact) / exact < 0.03,
+      s"approx $approx vs exact $exact")
   }
 }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 import graft.SparkSuite
 
-/** Funnel + retention (rel/EventAnalytics): hand-computed sequences and
-  * the single-shuffle plan contract. */
+/** Funnel, retention and attribution (rel/EventAnalytics): hand-computed
+  * sequences and the single-shuffle plan contract. */
 class EventAnalyticsSpec extends SparkSuite {
 
   private def ev(rows: Seq[(Long, Long, String, String)]) = {
@@ -41,6 +41,42 @@ class EventAnalyticsSpec extends SparkSuite {
     assert(out("signup") === ((full, 499999999L, 250000000L)))
     assert(out("error") === ((full, full, 0L)),
       "a channel with no traffic must credit exactly zero")
+  }
+
+  test("last-touch attribution: inclusive 1440-min lookback, latest view " +
+      "wins with view_id tie-break, same user only, exact gap") {
+    val d = ev(Seq(
+      // purchase 100: a view exactly 1440 min back counts; 1 µs
+      // earlier does not
+      (10L, 1L, "2024-01-01 10:00:00", "view"),
+      (11L, 1L, "2024-01-01 09:59:59.999999", "view"),
+      (100L, 1L, "2024-01-02 10:00:00", "purchase"),
+      // purchase 200: a view at purchase_ts counts; 1 µs after does not
+      (20L, 2L, "2024-01-01 12:00:00", "view"),
+      (21L, 2L, "2024-01-01 12:00:00.000001", "view"),
+      (200L, 2L, "2024-01-01 12:00:00", "purchase"),
+      // purchase 300: the latest view wins over a higher-id earlier
+      // one; on equal ts the higher view_id wins
+      (39L, 3L, "2024-01-01 14:00:00", "view"),
+      (31L, 3L, "2024-01-01 14:30:00", "view"),
+      (32L, 3L, "2024-01-01 14:30:00", "view"),
+      (300L, 3L, "2024-01-01 15:00:00", "purchase"),
+      // purchase 400: user 3's later view is not user 4's
+      (40L, 3L, "2024-01-01 15:59:00", "view"),
+      (41L, 4L, "2024-01-01 10:00:00", "view"),
+      (400L, 4L, "2024-01-01 16:00:00", "purchase"),
+      // purchase 500: no qualifying view (too old, too late, a click)
+      (50L, 5L, "2024-01-01 09:00:00", "view"),
+      (51L, 5L, "2024-01-02 09:30:00", "click"),
+      (52L, 5L, "2024-01-02 10:00:01", "view"),
+      (500L, 5L, "2024-01-02 10:00:00", "purchase")))
+    val out = EventAnalytics.lastTouchAttribution(d).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    assert(out.toSeq === Seq(
+      (100L, 1L, 10L, 86400000000L),
+      (200L, 2L, 20L, 0L),
+      (300L, 3L, 32L, 1800000000L),
+      (400L, 4L, 41L, 21600000000L)))
   }
 
   test("funnel: strict ordering — events before the prior stage don't count") {
